@@ -1636,10 +1636,8 @@ object AnalyticsQueries {
     * whole pileup off a range-partitioned prefix sum (the hot bucket
     * costs one task an O(m log m) sort instead of O(m²) pairs that
     * salting could only split ⌈|b|/200⌉ ways), and the self-pair is
-    * subtracted exactly (its own decimal-rounded value). The r13-era
-    * salted [[graft.ops.BandJoin]] path remains spec-pinned in OpsSpec
-    * for callers that need the pairs themselves; the oracle here pins
-    * the values through the aggregate plan. Tolerance is 60 s, so the
+    * subtracted exactly (its own decimal-rounded value); the oracle
+    * pins the values through the aggregate plan. Tolerance is 60 s, so the
     * uniform background contributes thin bands and the hot instant
     * dominates — the stress is the point. */
   val qBandJoinSkewed = Q(

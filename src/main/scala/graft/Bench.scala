@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -19,16 +17,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val headline = Registry.all.filter(_.bench)
     def runOnce(q: Q): Double = {
@@ -54,7 +44,7 @@ object Bench {
       val t0 = System.nanoTime()
       // pmod bounds the addends: a raw sum of full-range hashes
       // overflows int64 under ANSI after ~2 rows on average
-      spark.range(0L, 600000000L, 1L, cpus.toInt)
+      spark.range(0L, 600000000L, 1L, Session.cpus)
         .select(sum(pmod(xxhash64(col("id")), lit(1000000L))).as("s"))
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9

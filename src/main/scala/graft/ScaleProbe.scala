@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
   * Synthesizes N× copies of the sf tables with SHIFTED keys/timestamps
   * (so key cardinality and join/pair density scale with the data, not
   * just row count) and times each shape at N = 1, 2, 4, 8. A shape whose
-  * per-copy cost stays flat scales linearly — the local[32] proxy for
+  * per-copy cost stays flat scales linearly — the local-mode proxy for
   * the 100× claim; a super-linear curve exposes an all-pairs or
   * single-reducer term the plan lint cannot see.
   *
@@ -27,15 +27,7 @@ object ScaleProbe {
     val sfDir = args(0)
     val maxN = if (args.length > 1) args(1).toInt else 8
     val mode = if (args.length > 2) args(2) else "all"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     def scaledLineitem(n: Int): DataFrame = {
       val li0 = Tables.lineitem(spark, sfDir)
@@ -236,7 +228,7 @@ object ScaleProbe {
       // motivated): cpus = the old CPU-sized default, 8 = the
       // state-volume-sized drain default — the delta between the two
       // sweeps IS the booked win
-      Seq(cpus, "8").distinct.foreach { sp =>
+      Seq(Session.cpus.toString, "8").distinct.foreach { sp =>
         spark.conf.set(
           graft.streaming.StreamPipeline.StatePartitionsConfKey, sp)
         graft.streaming.StreamPipeline.avnowProbeFrames(spark, sfDir)
@@ -347,10 +339,12 @@ object ScaleProbe {
       }
       val ev = scaledEvents(n)
       val band = time {
-        val l = ev.select(col("event_id"), unix_micros(col("ts")).as("l_us"))
-        val r = ev.select(col("event_id").as("r_event_id"),
-          unix_micros(col("ts")).as("r_us"))
-        graft.ops.BandJoin(l, r, "l_us", "r_us", 1800L * 1000000).count()
+        val e = ev.select(col("event_id"), unix_micros(col("ts")).as("us"),
+          col("value"))
+        val r = graft.ops.BandAgg(e, "event_id", "us", e, "us", "value",
+          1800L * 1000000).count()
+        graft.ops.CacheScope.releaseAll()
+        r
       }
       def scaledDocs(n: Int,
           perCopy: (Int, DataFrame) => DataFrame = (_, d) => d)
@@ -525,7 +519,7 @@ object ScaleProbe {
         r
       }
       println(s"""{"probe":"scale","n":$n,"q1_agg":$q1,""" +
-        s""""pareto_prefix":$pareto,"band_join":$band,""" +
+        s""""pareto_prefix":$pareto,"band_agg":$band,""" +
         s""""exact_dedup":$dedup,"minhash_lsh":$lsh,""" +
         s""""stream_hourly":$stream,"stream_dedup_full":$streamDedupFull,""" +
         s""""stream_dedup_pruned":$streamDedupPruned,""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** State-store provider A/B bench (dev tool, like [[ScaleProbe]]): times
@@ -46,16 +45,8 @@ object StateStoreBench {
     val sfDirs = sys.env.get("SPARK_GRAFT_SF_DIR")
       .map(Seq(_))
       .getOrElse(Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // state-volume accounting: every progress event's stateOperators
     // totals, maxed per measurement phase (cleared between phases).

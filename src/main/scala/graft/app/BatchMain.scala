@@ -24,14 +24,7 @@ object BatchMain {
     val rawDir = args(0)
     val outDir = args(1)
     val modifiedAfterMs = if (args.length > 2) Some(args(2).toLong) else None
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     run(spark, rawDir, outDir, modifiedAfterMs)
     spark.stop()
   }

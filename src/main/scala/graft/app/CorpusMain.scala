@@ -41,14 +41,7 @@ object CorpusMain {
     val outDir = args(1)
     val minTokens = if (args.length > 2) args(2).toInt else 10
     val minQuality = if (args.length > 3) args(3).toDouble else 0.2
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val summary = run(spark, spark.read.parquet(docsDir), outDir,
       minTokens, minQuality)
     println(summary)

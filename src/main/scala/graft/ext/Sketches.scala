@@ -217,7 +217,7 @@ object Sketches {
     * (`floor(u·B)`), and the lookup is a broadcast EQUI-join on the
     * cell plus the exact range filter — candidates per draw ≈
     * |vocab|/B + 1, and billions of draws stream map-side with no
-    * shuffle (the BandJoin/LSH bucketing idiom applied to alias-table
+    * shuffle (the band-join/LSH bucketing idiom applied to alias-table
     * sampling). Completeness: floor(u·B) is monotone, so lo ≤ u < hi
     * implies floor(lo·B) ≤ floor(u·B) ≤ floor(hi·B) — the exploded
     * cells can only over-cover, never miss; the residual filter is

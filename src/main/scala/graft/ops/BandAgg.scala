@@ -7,10 +7,10 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Banded AGGREGATE — per left row, the (count, non-null count, exact
   * decimal sum) of a right-side value over all right rows whose sort key
-  * lies within `tolerance` of the left row's key. The aggregate-only
-  * sibling of [[BandJoin]]: when the caller never needs the matched pairs
-  * themselves (the `q_band_join_*` shape — join then immediately
-  * `groupBy(left id)`), materializing the pair set first costs
+  * lies within `tolerance` of the left row's key. Replaces a band join
+  * when the caller never needs the matched pairs themselves (the
+  * `q_band_join_*` shape — join then immediately `groupBy(left id)`):
+  * materializing the pair set first costs
   * O(Σ band sizes) shuffle rows — quadratic in any hot window (a
   * flash-sale instant at 100 TB makes that the whole job) — while the
   * aggregate is answerable from ORDER STATISTICS alone:
@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.DecimalType
   * exchange is O(|left| + |right|) rows; nothing pair-grained ever
   * exists. A hot key concentrates its rows in one range partition (equal
   * keys are never split), costing that task an O(m log m) sort — versus
-  * the pair join's O(m²) blowup the salted [[BandJoin]] could only
-  * divide, not remove.
+  * the pair join's O(m²) blowup that salting can only divide, not
+  * remove.
   *
   * Determinism: count/non-null tallies are integral; value sums
   * accumulate in exact DECIMAL(38, `scale`) after the same per-row

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * is a slow query; at 100 TB it is a cluster-week. Spark plans one
   * whenever no equi-join keys are extractable — which is exactly what a
   * natural-feeling range predicate (`abs(a.ts - b.ts) <= tol`) produces.
-  * This library ships the scale-safe rewrites ([[graft.ops.BandJoin]],
+  * This library ships the scale-safe rewrites ([[graft.ops.BandAgg]],
   * [[graft.ops.AsofJoin]], bucketed self-joins); the guard turns the
   * silent accident into an actionable analysis error that names them.
   *
@@ -53,7 +53,7 @@ object CartesianGuard extends Rule[LogicalPlan] {
               (s"[graft guard] join has no equi-join keys and both sides " +
                 s"exceed $thresholdKey ($l and $r bytes > $threshold): this " +
                 "plans as an all-pairs nested loop. Rewrite with " +
-                "graft.ops.BandJoin (|a-b| <= tol predicates), " +
+                "graft.ops.BandAgg (aggregates over |a-b| <= tol bands), " +
                 "graft.ops.AsofJoin (most-recent-before), a bucketed " +
                 "self-join, or broadcast() the small side; or raise the " +
                 s"threshold / disable $enabledKey.")))

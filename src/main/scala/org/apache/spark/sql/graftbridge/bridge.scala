@@ -69,6 +69,11 @@ object Bridge {
         df.sparkSession.createDataFrame(df.rdd, df.schema)
     }
 
+  /** Block until the listener bus has delivered every posted event, so
+    * counters a listener keeps are complete when read after an action. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** Invalidate the session's shared file-status cache — required
     * after a maintenance pass deletes data files OUTSIDE a Spark
     * command (the ArchiveIndex compaction GC): a later read or

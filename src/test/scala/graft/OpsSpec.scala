@@ -423,7 +423,7 @@ class OpsSpec extends SparkSpec {
       val err = intercept[Exception](nonEqui.queryExecution.executedPlan)
       val msgs = Iterator.iterate[Throwable](err)(_.getCause)
         .takeWhile(_ != null).map(_.getMessage).mkString("\n")
-      assert(msgs.contains("BandJoin"), msgs.take(500))
+      assert(msgs.contains("BandAgg"), msgs.take(500))
       // a small broadcast side is a legitimate nested loop: passes
       val tiny = spark.range(3).select(col("id").cast("double").as("v2"))
       assert(ev.join(broadcast(tiny), abs(col("value") - col("v2")) < 0.001)
@@ -572,47 +572,6 @@ class OpsSpec extends SparkSpec {
     val back = spark.read.parquet(dir)
     assert(back.columns.sorted.sameElements(Array("x", "y")))
     assert(back.count() == 128L * 128L)
-  }
-
-  test("BandJoin: exact-once pairs at/inside tolerance, none outside") {
-    val l = Seq((1L, 100L), (2L, 250L)).toDF("lid", "lk")
-    val r = Seq((10L, 100L), (11L, 199L), (12L, 201L), (13L, 0L),
-      (14L, 350L)).toDF("rid", "rk")
-    val out = BandJoin(l, r, "lk", "rk", 100L)
-      .select("lid", "rid").as[(Long, Long)].collect().toSeq.sorted
-    // lid=1 (k=100): rids at 100 (d=0), 199 (d=99), 0 (d=100 inclusive),
-    //   201 is d=101 → out; lid=2 (k=250): 199/201 (d<=51), 350 (d=100)
-    assert(out == Seq((1L, 10L), (1L, 11L), (1L, 13L),
-      (2L, 11L), (2L, 12L), (2L, 14L)))
-    // each pair appears exactly once (no bucket-overlap duplicates)
-    assert(out.distinct == out)
-    // the plan is an equi-join, not a nested loop
-    val plan = BandJoin(l, r, "lk", "rk", 100L)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"))
-  }
-
-  test("BandJoin: salted result is identical to unsalted on a hot bucket") {
-    // a deliberately hot bucket: 40 right rows pile into bucket 1
-    // (keys 100..139, tolerance 100), including REPEATED identical keys
-    // so the salt must come from the full row, not the key alone;
-    // left rows straddle the bucket boundary. maxBucketRows=5 forces
-    // the hot bucket to salt factor 8 while the thin buckets stay at 1
-    val l = (1L to 12L).map(i => (i, 60L + i * 15L)).toDF("lid", "lk")
-    val r = ((1L to 40L).map(i => (i, 100L + (i % 20))) ++
-      Seq((41L, 250L), (42L, 5L))).toDF("rid", "rk")
-    def pairs(maxRows: Long) =
-      BandJoin(l, r, "lk", "rk", 100L, maxBucketRows = maxRows)
-        .select("lid", "rid").as[(Long, Long)].collect().toSeq.sorted
-    val unsalted = pairs(Long.MaxValue)
-    val salted = pairs(5L)
-    assert(salted == unsalted)
-    // exactly-once still holds under salting
-    assert(salted.distinct == salted)
-    // salted plan stays an equi-join
-    val plan = BandJoin(l, r, "lk", "rk", 100L, maxBucketRows = 5L)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"))
   }
 
   test("BandAgg: equals the brute-force pairwise aggregate, including " +
