@@ -1717,12 +1717,12 @@ object ExtQueries3 {
     // trees out of every downstream plan (the un-truncated union's
     // treeString grew large enough to OOM cache-name rendering in the
     // registry-wide plan lint once the RLE8 fold joined the union).
-    // trackCheckpoint (r13 ADVICE): the pinned RDD is released
+    // tracked (r13 ADVICE): the pinned RDD is released
     // DETERMINISTICALLY by the consumer's releaseAll instead of
     // whenever GC collects the frame — invoked per bench rep / lint
     // pass, unreleased checkpoints accumulate exactly like the stage
     // caches CacheScope exists to bound
-    graft.ops.CacheScope.trackCheckpoint(
+    graft.ops.CacheScope.track(
     fam(pmod(p, lit(4)) === 1, sh => BmpCodec.encodeBmp(gen(sh), w, h))
       .unionAll(fam(pmod(p, lit(4)) === 2,
         sh => PpmCodec.encodePpm(gen(sh), w, h)))

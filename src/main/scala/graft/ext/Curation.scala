@@ -977,8 +977,8 @@ object Curation {
     * Scale: contests aggregate to one row per (i, j) pair — bounded by
     * DISTINCT matchups, not log length — and each round is one
     * (i, j)-keyed join + an item-keyed hash agg + a 1-row broadcast
-    * rescale; `localCheckpoint` truncates lineage per round (the
-    * PageRank discipline). Nothing item-universe-sized ever sits on one
+    * rescale; [[graft.ops.Iterate]] pins each round (the PageRank
+    * discipline). Nothing item-universe-sized ever sits on one
     * reducer, and the preference LOG streams through one map-side
     * count.
     *
@@ -992,7 +992,7 @@ object Curation {
   def bradleyTerry(matches: DataFrame, winnerCol: String, loserCol: String,
       iters: Int = 5): DataFrame = {
     require(iters >= 1, "bradleyTerry: iters must be >= 1")
-    import graft.ops.CacheScope
+    import graft.ops.{CacheScope, Iterate}
     def decSum(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(38, 18))).cast("double")
     val m = matches.select(col(winnerCol).cast("long").as("w"),
@@ -1034,21 +1034,32 @@ object Curation {
     // join rows); the projection preserves the cached hash(j) layout
     val pairLoop = contests.select(col("i"), col("j"), col("n_ij"))
 
+    // the rescale scalars (item count + exact-decimal strength sum —
+    // the r13 `wins.count()` fold) are COLLECTED off the pinned round
+    // with one head() and folded back as literals (r15 opt): the old
+    // crossJoin(broadcast(tot)) made the next round's plan carry a
+    // BroadcastExchange whose build was its own job + planning pass.
+    // Same arithmetic on the same doubles — bit-identical strengths.
+    def rescale(ck: DataFrame): DataFrame = {
+      val tot = ck.agg(decSum(col("s")).as("ssum"),
+        count(lit(1)).cast("double").as("ni")).head()
+      ck.select(col("i"), col("bt_w"),
+        (col("s") * lit(tot.getDouble(1)) / lit(tot.getDouble(0))).as("s"))
+    }
+    // the initial strengths (all 1.0) are already on scale: round 1
+    // reads them as they are, every later round rescales its input
+    var scaled = true
+
     // the strengths frame CARRIES bt_w so a round is ONE pair join + one
-    // item-keyed agg + the 1-row rescale — not three item joins (bt_w
-    // and the previous strength ride the contests join and come back out
-    // of the aggregate via first(), identical within each group)
-    import graft.ops.PlanStats.freshStats
-    // freshStats per round: `s` feeds the contests join twice per round
-    // (both sides of every pair), so without the reset the checkpoint-
-    // preserved sizeInBytes squares per iteration and a caller passing
-    // deep `iters` hits the doubly-exponential planning bomb (PlanStats
-    // scaladoc; r13 VERDICT #4 — the reset makes iters a safe knob)
-    var s = freshStats(
-      wins.select(col("i"), col("bt_w"), lit(1.0).as("s"))
-        .localCheckpoint())
-    var prevCk = s
-    for (_ <- 1 to iters) {
+    // item-keyed agg — not three item joins (bt_w and the previous
+    // strength ride the contests join and come back out of the
+    // aggregate via first(), identical within each group). `s` feeds
+    // the contests join twice per round (both sides of every pair), the
+    // shape Iterate.pin's stats reset exists for.
+    val last = Iterate.rounds(
+        wins.select(col("i"), col("bt_w"), lit(1.0).as("s")), iters) { prev =>
+      val s = if (scaled) prev else rescale(prev)
+      scaled = false
       val sj = s.select(col("i").as("j"), col("s").as("sj"))
       // join order is load-bearing for the exchange count: sj first
       // (contests' cached hash(j) layout absorbs it — only the
@@ -1056,18 +1067,21 @@ object Curation {
       // output feeds the i-keyed aggregate WITHOUT another pair-sized
       // exchange. The r13 order (i then j then group i) re-shuffled the
       // pair rows twice more per round for the same numbers.
-      // The CHECKPOINT sits on `raw` (r14 opt): the r13 shape
-      // checkpointed the rescaled rows, so the pair join executed TWICE
-      // per round — once under the rescale normalizer's broadcast
+      // The PIN sits on this pre-rescale aggregate (r14 opt): the r13
+      // shape checkpointed the rescaled rows, so the pair join executed
+      // TWICE per round — once under the rescale normalizer's broadcast
       // subtree and once for the checkpoint (the round's two dominant
-      // stages, measured). Checkpointing the pre-rescale aggregate runs
-      // the join ONCE; the normalizer and the rescale are then cheap
-      // item-grain reads of the checkpoint, deferred into the NEXT
-      // round's job (identical arithmetic, identical values). Stats
-      // stay linear: each round's plan roots at a fresh checkpoint
-      // leaf, so the twice-referenced `s` multiplies within one round
-      // only and nothing compounds across rounds (PlanStats contract).
-      val raw = pairLoop
+      // stages, measured). Pinning the pre-rescale aggregate runs the
+      // join ONCE; the normalizer and the rescale are then cheap
+      // item-grain reads of the pin, deferred into the NEXT round's job
+      // (identical arithmetic, identical values).
+      // NOTE(r15): a Dataset-persist variant that folded the checkpoint
+      // job into the rescale aggregate (raw.persist + cache-filling
+      // agg + stats reset over the cache) was tried and REVERTED: warm
+      // 4.6 s → 6.7 s, job count unchanged — the columnar
+      // InMemoryRelation encode/decode per round costs far more than
+      // the localCheckpoint's raw RDD blocks save in scheduling.
+      pairLoop
         .join(sj, Seq("j")).join(s, Seq("i"))
         .groupBy(col("i"))
         .agg(first(col("bt_w")).as("bt_w"),
@@ -1076,28 +1090,8 @@ object Curation {
         .select(col("i"), col("bt_w"),
           (col("bt_w") / (col("den") + lit(1.0) / (col("sp") + lit(1.0))))
             .as("s"))
-      // NOTE(r15): a Dataset-persist variant that folded the checkpoint
-      // job into the rescale aggregate (raw.persist + cache-filling
-      // agg + freshStats over the cache) was tried and REVERTED: warm
-      // 4.6 s → 6.7 s, job count unchanged — the columnar
-      // InMemoryRelation encode/decode per round costs far more than
-      // the localCheckpoint's raw RDD blocks save in scheduling.
-      val rawCk = freshStats(raw.localCheckpoint())
-      // the rescale scalars (item count + exact-decimal strength sum —
-      // the r13 `wins.count()` fold) are COLLECTED off the materialized
-      // checkpoint and folded back as literals (r15 opt): the old
-      // crossJoin(broadcast(tot)) made the next round's plan carry a
-      // BroadcastExchange whose build was its own job + planning pass.
-      // Same arithmetic on the same doubles — bit-identical strengths.
-      val tot = rawCk.agg(decSum(col("s")).as("ssum"),
-        count(lit(1)).cast("double").as("ni")).head()
-      val ssum = tot.getDouble(0)
-      val ni = tot.getDouble(1)
-      prevCk.unpersist(blocking = false)
-      prevCk = rawCk
-      s = rawCk.select(col("i"), col("bt_w"),
-        (col("s") * lit(ni) / lit(ssum)).as("s"))
     }
+    val s = rescale(last)
     wins.join(s.select(col("i"), col("s")), Seq("i"))
       .select(col("i").as("item"), col("n_wins"), col("n_games"),
         round(col("s"), 6).as("strength"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.ops.CacheScope
+import graft.ops.{CacheScope, Iterate}
 
 /** Iterative link-graph operators. Corpus-curation use: web-crawl
   * pipelines rank domains/pages by link authority (PageRank / harmonic
@@ -27,17 +27,12 @@ object Graph {
     * and reused every iteration; each iteration is ONE equi-join of the
     * rank vector with the edge list on `src` plus one hash aggregate on
     * `dst` — no windows, no driver-side collection (the dangling mass
-    * rides a 1-row broadcast cross join). Each iteration's rank frame is
-    * `localCheckpoint`ed: the loop body references `ranks` three times
-    * (dangling, inflow, recurrence), so WITHOUT lineage truncation the
-    * Catalyst plan tree triples per iteration — exponential analysis
-    * cost that OOMs the driver near 10 iterations regardless of data
-    * size. Persist alone does not help (caching stores blocks but keeps
-    * the full logical plan). On a real cluster swap `localCheckpoint`
-    * for reliable `checkpoint` (HDFS/object-store dir) so executor loss
-    * cannot drop a truncated partition; the edge list would additionally
-    * be bucketed by `src` ([[graft.sinks.Sinks.writeBucketed]]) making
-    * the per-iteration join exchange-free on the edge side.
+    * rides a 1-row broadcast cross join). The rank frame is pinned per
+    * iteration by [[graft.ops.Iterate]]: the loop body references
+    * `ranks` twice (dangling, inflow), so WITHOUT lineage truncation the
+    * Catalyst plan tree grows geometrically per iteration. On a real
+    * cluster the edge list would additionally be bucketed by `src`
+    * ([[graft.sinks.Sinks.writeBucketed]]).
     *
     * Determinism (oracle parity): per-edge contributions r(u)/outdeg(u)
     * are IEEE double ops on bit-identical inputs; their per-node sum and
@@ -71,9 +66,8 @@ object Graph {
     def decSum(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(38, 18))).cast("double")
 
-    var ranks = nodeF.select(col("node"), lit(1.0 / nD).as("rank"))
-      .repartition(col("node")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    Iterate.rounds(nodeF.select(col("node"), lit(1.0 / nD).as("rank"))
+        .repartition(col("node")), iters) { ranks =>
       // dangling mass: rank held by nodes with no outgoing edges —
       // anti-joined against the CACHED edge frame's src (hash(src)
       // layout, co-partitioned with ranks' hash(node)) instead of the
@@ -87,21 +81,14 @@ object Graph {
         .join(edgeF, ranks("node") === edgeF("src"))
         .groupBy(col("dst").as("node"))
         .agg(decSum(col("rank") / col("outdeg")).as("inflow"))
-      val next = nodeF
+      nodeF
         .join(inflow, Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"),
           (lit(tele) + lit(damping) *
             (coalesce(col("inflow"), lit(0.0)) + col("dang") / lit(nD)))
             .as("rank"))
-      // eager checkpoint materializes `next` BEFORE the old blocks go
-      // away; only then is dropping the previous iteration's rank frame
-      // safe (its truncated lineage cannot be recomputed)
-      val promoted = next.localCheckpoint()
-      ranks.unpersist(blocking = false)
-      ranks = promoted
     }
-    CacheScope.track(ranks)
   }
 
   /** HITS (Kleinberg hubs & authorities) with L1 normalization.
@@ -121,10 +108,11 @@ object Graph {
     *
     * Scale shape: identical to [[pageRank]] — the persisted edge list is
     * reused every iteration; one equi-join + one hash aggregate per
-    * half-step, normalizers ride a 1-row broadcast, per-iteration
-    * `localCheckpoint` truncates the (here mutually recursive, so
-    * doubly exploding) lineage. Swap for reliable `checkpoint` + an
-    * edge list bucketed on BOTH src and dst copies on a real cluster.
+    * half-step, normalizers ride a 1-row broadcast. The state is one
+    * (node, hub, auth) frame; each half-step replaces one score column,
+    * carries the other, and is pinned by [[graft.ops.Iterate]], which
+    * truncates the (here mutually recursive, so doubly exploding)
+    * lineage.
     */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 4)
       : DataFrame = {
@@ -141,45 +129,39 @@ object Graph {
 
     def decSum(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(38, 18))).cast("double")
-    // L1-normalize `valueCol` over the whole frame via a 1-row broadcast;
-    // the all-zero guard keeps the expression shape identical to the
-    // oracle's CASE (double 0/0 would be NaN, not an ANSI error)
-    def l1norm(df: DataFrame, valueCol: String): DataFrame = {
-      val tot = df.agg(coalesce(decSum(col(valueCol)), lit(0.0)).as("tot"))
-      df.crossJoin(broadcast(tot))
-        .select(col("node"),
-          when(col("tot") =!= 0.0, col(valueCol) / col("tot"))
-            .otherwise(lit(0.0)).as(valueCol))
+    // One half-step: `to` ← Σ `from` over the edges keyed on `key`
+    // (the endpoint `out` receives it), then L1-normalized over the
+    // whole frame via a 1-row broadcast. The edge contributions and
+    // each node's own state row meet in ONE node-keyed aggregate, with
+    // no join against the node universe: the state row carries `from`
+    // through unchanged and puts every node of the universe in the
+    // output (no contributions → NULL sum → 0); an edge endpoint outside
+    // the universe has no state row, so no `from`, and is dropped. The
+    // all-zero guard keeps the expression shape identical to the
+    // oracle's CASE (double 0/0 would be NaN, not an ANSI error).
+    def halfStep(edgeF: DataFrame, key: String, out: String, from: String,
+        to: String)(s: DataFrame): DataFrame = {
+      val none = lit(null).cast("double")
+      val filled = s
+        .join(edgeF, s("node") === edgeF(key))
+        .select(col(out).as("node"), col(from).as("mass"), none.as(from))
+        .unionAll(s.select(col("node"), none.as("mass"), col(from)))
+        .groupBy(col("node"))
+        .agg(max(col(from)).as(from),
+          coalesce(decSum(col("mass")), lit(0.0)).as(to))
+        .filter(col(from).isNotNull)
+      val tot = filled.agg(coalesce(decSum(col(to)), lit(0.0)).as("tot"))
+      filled.crossJoin(broadcast(tot))
+        .select(col("node"), col(from),
+          when(col("tot") =!= 0.0, col(to) / col("tot"))
+            .otherwise(lit(0.0)).as(to))
     }
 
-    var hubs = nodeF.select(col("node"), lit(1.0).as("hub"))
-      .repartition(col("node")).localCheckpoint()
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      val authRaw = hubs
-        .join(edgeBySrc, hubs("node") === edgeBySrc("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(decSum(col("hub")).as("auth"))
-      val nextAuth = l1norm(
-        nodeF.join(authRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("auth"), lit(0.0)).as("auth")),
-        "auth").localCheckpoint()
-      if (auths != null) auths.unpersist(blocking = false)
-      auths = nextAuth
-      val hubRaw = auths
-        .join(edgeByDst, auths("node") === edgeByDst("dst"))
-        .groupBy(col("src").as("node"))
-        .agg(decSum(col("auth")).as("hub"))
-      val nextHub = l1norm(
-        nodeF.join(hubRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("hub"), lit(0.0)).as("hub")),
-        "hub").localCheckpoint()
-      hubs.unpersist(blocking = false)
-      hubs = nextHub
-    }
-    CacheScope.track(
-      hubs.join(auths, Seq("node"))
-        .select(col("node"), col("hub"), col("auth")))
+    Iterate.rounds(nodeF.select(col("node"), lit(1.0).as("hub"))
+        .repartition(col("node")), iters)(
+      halfStep(edgeBySrc, "src", "dst", "hub", "auth"),
+      halfStep(edgeByDst, "dst", "src", "auth", "hub"))
+      .select(col("node"), col("hub"), col("auth"))
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -200,9 +182,8 @@ object Graph {
     * both-direction) edge list + two hash aggregates per round — the
     * neighbor-label count collapses at (node, label) grain before the
     * per-node argmax, which is `max(struct(cnt, -label))`, an ordinary
-    * aggregate, NOT a per-node window. Per-round `localCheckpoint`
-    * truncates the lineage (the label frame is referenced twice per
-    * round). Rounds are O(m) work each; `iters` is small and fixed —
+    * aggregate, NOT a per-node window. [[graft.ops.Iterate]] pins the
+    * label frame per round (it is referenced twice per round). Rounds are O(m) work each; `iters` is small and fixed —
     * LPA's known behavior — rather than driver-polled convergence. */
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
       iters: Int = 4): DataFrame = {
@@ -210,8 +191,8 @@ object Graph {
     val nodeF = CacheScope.persist(nodes.select(col("node")).distinct())
     // PRE-PARTITIONED on src (r15, the Bradley-Terry loop reorder): the
     // per-round neighbor join keys on src, so the cached hash(src)
-    // layout absorbs it; labels ride checkpointed hash(node)-partitioned
-    // (kept through freshStats since the r15 layout-preserving reset),
+    // layout absorbs it; labels ride pinned hash(node)-partitioned
+    // (Iterate.pin keeps the layout),
     // so the join is exchange-free on both sides and the relabel join
     // reuses the groupBy(node) layout — the only edge-sized exchange
     // left per round is the (dst, label) count aggregate.
@@ -220,15 +201,8 @@ object Graph {
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
       .repartition(col("src")))
-    import graft.ops.PlanStats.freshStats
-    // freshStats per round: `labels` feeds next's plan TWICE (join +
-    // fallback coalesce), so without the reset the checkpoint-preserved
-    // sizeInBytes squares per iteration and deep `iters` turns planning
-    // doubly exponential (PlanStats scaladoc; r13 VERDICT #4)
-    var labels = freshStats(
-      nodeF.select(col("node"), col("node").as("label"))
-        .repartition(col("node")).localCheckpoint())
-    for (_ <- 1 to iters) {
+    Iterate.rounds(nodeF.select(col("node"), col("node").as("label"))
+        .repartition(col("node")), iters) { labels =>
       val nbr = labels
         .join(und, labels("node") === und("src"))
         .groupBy(und("dst").as("node"), col("label"))
@@ -237,15 +211,10 @@ object Graph {
         .groupBy("node")
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("new_label"))
-      val next = freshStats(labels.join(sel, Seq("node"), "left")
+      labels.join(sel, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint())
-      labels.unpersist(blocking = false)
-      labels = next
-    }
-    CacheScope.track(labels.select(col("node"), col("label")
-      .as("community")))
+    }.select(col("node"), col("label").as("community"))
   }
 
   /** k-core extraction by batched peeling (the distributed k-core
@@ -265,39 +234,28 @@ object Graph {
     *
     * Scale shape: per round ONE hash aggregate (induced degrees) and
     * TWO anti-joins (drop edges touching peeled nodes) — all keyed on
-    * node id, no windows, no collect; `localCheckpoint` per round
-    * truncates the lineage (the edge frame is referenced three times
-    * per round: degree, both anti-join sides). */
+    * node id, no windows, no collect; [[graft.ops.Iterate]] pins the
+    * edge frame per round (it is referenced three times per round:
+    * degree, both anti-join sides). */
   def kCore(edges: DataFrame, k: Int, iters: Int = 6): DataFrame = {
     require(k >= 1 && iters >= 1, "kCore: k and iters must be >= 1")
-    import graft.ops.PlanStats.freshStats
-    // freshStats per round: `cur` feeds next's plan THREE times (edge
-    // set + both anti-join degree sets), so without the reset the
-    // checkpoint-preserved sizeInBytes cubes per iteration and deep
-    // peels turn planning doubly exponential (PlanStats scaladoc;
-    // r13 VERDICT #4)
     // PRE-PARTITIONED on src (r15): the per-round induced-degree
-    // aggregate keys on src; with the layout-preserving freshStats the
-    // checkpointed edge set stays hash(src)-partitioned through the
+    // aggregate keys on src; Iterate.pin keeps the layout, so the
+    // pinned edge set stays hash(src)-partitioned through the
     // (broadcast) anti-joins and each round's degree pass is
     // exchange-free — rounds of a converged graph cost one cached scan.
-    var cur = freshStats(edges
-      .select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src"))
-      .localCheckpoint())
-    for (_ <- 1 to iters) {
+    Iterate.rounds(edges
+        .select(col("src"), col("dst"))
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct()
+        .repartition(col("src")), iters) { cur =>
       val bad = cur.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") < k).select(col("src"))
-      val next = freshStats(cur
+      cur
         .join(bad, Seq("src"), "left_anti")
         .join(bad.select(col("src").as("dst")), Seq("dst"), "left_anti")
-        .select("src", "dst").localCheckpoint())
-      cur.unpersist(blocking = false)
-      cur = next
-    }
-    cur.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+        .select("src", "dst")
+    }.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
   }
 
   /** Per-node triangle counts and local clustering coefficient over an

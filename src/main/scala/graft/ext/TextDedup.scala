@@ -758,55 +758,41 @@ object TextDedup {
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
       .unionAll(pairs
         .select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst"))))
-    // localCheckpoint, not persist: the pointer-jump self-join would
-    // otherwise DOUBLE the logical plan every round (persist caches
-    // blocks but keeps the full lineage in the plan tree)
-    // STATS RESET after each round's checkpoint — the pointer-jump
-    // step joins the checkpoint WITH ITSELF, the sizeInBytes-squaring
-    // shape (found here by thread-dumping a "hung" sf0.1 run stuck in
-    // BigInteger.multiplyToomCook3; full mechanics in the canonical
-    // home, graft.ops.PlanStats)
-    import graft.ops.PlanStats.freshStats
-    var labels = freshStats(docs
-      .select(col(idCol).cast("long").as("id"), col(idCol).cast("long").as("rep"))
-      .localCheckpoint())
+    // Iterate pins every round: the pointer-jump self-join would
+    // otherwise DOUBLE the logical plan every round, and it joins the
+    // pin WITH ITSELF, the sizeInBytes-squaring shape the stats reset
+    // exists for. The label sum is the convergence measure.
     // coalesce: sum over an EMPTY corpus is NULL — an upstream gate that
     // drops every document must converge to an empty label set, not throw
-    var prevSum = labels.agg(coalesce(sum("rep"), lit(0L))).head().getLong(0)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("rep").as("nrep")),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nrep")).as("nbr_rep"))
-      // materialized BEFORE the self-join: propagated feeds both sides,
-      // and without a checkpoint the propagate join + min-aggregate
-      // subtree would execute twice inside every round's job — doubling
-      // the per-round shuffle work on exactly the large graphs the
-      // path-doubling targets
-      val propagated = freshStats(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
-        .localCheckpoint())
-      // pointer jump: rep ← label(rep). Every rep IS some node's id (min
-      // over node ids), so the self-join always matches; labels only
-      // decrease, so shortcutting cannot overshoot the component min.
-      val next = freshStats(propagated
-        .join(propagated.select(col("id").as("rep"),
-          col("rep").as("rep2")), Seq("rep"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"))
-        .localCheckpoint())
-      val newSum = next.agg(coalesce(sum("rep"), lit(0L))).head().getLong(0)
-      propagated.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-      labels = next
-      converged = newSum == prevSum
-      prevSum = newSum
-      iter += 1
-    }
+    val (labels, converged) = graft.ops.Iterate.untilStable(
+        docs.select(col(idCol).cast("long").as("id"),
+          col(idCol).cast("long").as("rep")), maxIter)(
+        _.agg(coalesce(sum("rep"), lit(0L))).head().getLong(0))(
+      { labels =>
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("rep").as("nrep")),
+            Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min(col("nrep")).as("nbr_rep"))
+        labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
+      },
+      // pinned BEFORE the self-join (the step above): propagated feeds
+      // both sides, and without the pin the propagate join +
+      // min-aggregate subtree would execute twice inside every round's
+      // job — doubling the per-round shuffle work on exactly the large
+      // graphs the path-doubling targets. Pointer jump: rep ←
+      // label(rep). Every rep IS some node's id (min over node ids), so
+      // the self-join always matches; labels only decrease, so
+      // shortcutting cannot overshoot the component min.
+      { propagated =>
+        propagated
+          .join(propagated.select(col("id").as("rep"),
+            col("rep").as("rep2")), Seq("rep"), "left")
+          .select(col("id"),
+            least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"))
+      })
     // non-convergence must FAIL, not return wrong labels: min-label
     // propagation needs (component diameter) rounds, so a 22-doc chain
     // of pairwise near-dups would exit a silent cap with the far end
@@ -817,9 +803,6 @@ object TextDedup {
       s"connectedComponents did not converge in $maxIter rounds — a " +
         s"component's diameter exceeds the cap; raise maxIter " +
         s"(label-propagation rounds needed = component diameter)")
-    // the final round stays cached (the result plan reads it) and is
-    // scope-released with everything else after the caller's action
-    graft.ops.CacheScope.track(labels)
     labels.select(col("id").as(idCol), col("rep").as("rep_id"))
   }
 

@@ -215,6 +215,8 @@ object UnigramLm {
     val vocab = v2.map { case (p, _) =>
       (p, if (p.length == 1) 1 else 0, c3.getOrElse(p, 0L), cost2(p))
     }
+    // the model is driver-side: nothing reads the pins after this point
+    Seq(words, subs, v0).foreach(graft.ops.CacheScope.release)
     Model(vocab, cost2, chars)
   }
 

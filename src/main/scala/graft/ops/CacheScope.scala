@@ -44,25 +44,13 @@ object CacheScope {
     df
   }
 
-  /** Register an ALREADY-persisted frame for the next [[releaseAll]] —
-    * for operators that manage persistence themselves mid-computation
-    * (e.g. iterative algorithms) but want their final cached result
-    * scope-released like everything else. */
+  /** Register a frame whose storage the caller created itself — a
+    * `persist`ed frame, or a `localCheckpoint`ed one (its bare
+    * LogicalRDD plan, not a projection of it) — for release at the next
+    * [[releaseAll]]/[[releaseSince]]. A checkpoint pins its RDD outside
+    * the CacheManager, so without registration its blocks go only when
+    * GC happens to collect the plan (ContextCleaner). */
   def track(df: DataFrame): DataFrame = {
-    active.get.add(df)
-    df
-  }
-
-  /** Register a `localCheckpoint()`-ed frame for DETERMINISTIC block
-    * release at the next [[releaseAll]]/[[releaseSince]]. A checkpoint
-    * pins its materialized RDD outside the CacheManager, so a plain
-    * `unpersist` is a no-op on it and cleanup is otherwise GC-driven
-    * only (ContextCleaner, whenever the LogicalRDD happens to be
-    * collected) — invoked per bench rep or per registry-lint pass,
-    * those pinned RDDs accumulate exactly like the leaked stage caches
-    * [[releaseSince]] exists to prevent. Release unwraps the frame's
-    * LogicalRDD and unpersists the checkpointed RDD itself. */
-  def trackCheckpoint(df: DataFrame): DataFrame = {
     active.get.add(df)
     df
   }
@@ -81,7 +69,7 @@ object CacheScope {
     * (below the mark) keep their caller-owned lifetime. */
   def releaseSince(mark: Int): Unit = {
     val q = active.get
-    while (q.size > mark) free(q.pollLast())
+    while (q.size > mark) release(q.pollLast())
   }
 
   /** Unpersist every frame registered ON THIS THREAD. Idempotent;
@@ -91,16 +79,17 @@ object CacheScope {
     val q = active.get
     var df = q.poll()
     while (df != null) {
-      free(df)
+      release(df)
       df = q.poll()
     }
   }
 
-  /** CacheManager unpersist for cached frames; checkpoint-RDD
-    * unpersist for [[trackCheckpoint]]-registered frames (a bare
-    * LogicalRDD plan — the unwrap is a no-op on everything else, so
-    * one release path serves both registrations). */
-  private def free(df: DataFrame): Unit = {
+  /** Free `df`'s storage now: CacheManager unpersist for a cached
+    * frame, plus unpersist of the pinned RDD for a bare
+    * `localCheckpoint` frame (a no-op on every other plan). Non-blocking.
+    * The one release path for everything this registry and
+    * [[Iterate]] free. */
+  def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(df)
     ()

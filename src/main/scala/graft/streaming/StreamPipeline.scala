@@ -1132,8 +1132,8 @@ object StreamPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val (bBands, bHs) = prunedProbeBatch(batch, threshold, nBuckets,
           pairsDir, ibDir, ihDir)
-        bBands.unpersist(blocking = false)
-        bHs.unpersist(blocking = false)
+        graft.ops.CacheScope.release(bBands)
+        graft.ops.CacheScope.release(bHs)
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
@@ -1144,7 +1144,7 @@ object StreamPipeline {
     * both index reads to the batch's touched buckets, verify
     * collisions, append surviving pairs to `pairsDir`. Returns the
     * batch's (bands, hashes) checkpoints so the growing variant can
-    * append them to the index; the caller unpersists. */
+    * append them to the index; the caller releases them. */
   private def prunedProbeBatch(batch: DataFrame, threshold: Double,
       nBuckets: Int, pairsDir: String, ibDir: String, ihDir: String)
       : (DataFrame, DataFrame) = {
@@ -1187,7 +1187,7 @@ object StreamPipeline {
       .select(col("id").as("doc_id"), col("archive_id"),
         col("jaccard"))
       .write.mode("append").parquet(pairsDir)
-    cand.unpersist(blocking = false)
+    graft.ops.CacheScope.release(cand)
     (bBands, bHs)
   }
 
@@ -1243,8 +1243,8 @@ object StreamPipeline {
           bBands, "band", ibDir, nBuckets)
         graft.ext.ArchiveIndex.appendBucketedTable(
           bHs, "id", ihDir, nBuckets)
-        bBands.unpersist(blocking = false)
-        bHs.unpersist(blocking = false)
+        graft.ops.CacheScope.release(bBands)
+        graft.ops.CacheScope.release(bHs)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
           compactBucketedIndex(spark, ibDir, compactTargetBytes, gcGraceMs)
           compactBucketedIndex(spark, ihDir, compactTargetBytes, gcGraceMs)
@@ -1567,8 +1567,8 @@ object StreamPipeline {
           .write.mode("append").parquet(pairsDir)
         bBands.write.mode("append").parquet(ibDir)
         bHs.write.mode("append").parquet(ihDir)
-        bBands.unpersist(blocking = false)
-        bHs.unpersist(blocking = false)
+        graft.ops.CacheScope.release(bBands)
+        graft.ops.CacheScope.release(bHs)
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)

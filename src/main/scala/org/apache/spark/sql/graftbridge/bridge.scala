@@ -46,7 +46,7 @@ object Bridge {
   /** Re-root a `localCheckpoint()`-ed frame at its materialized RDD with
     * DEFAULT planning statistics but the checkpoint's actual
     * outputPartitioning/outputOrdering kept (r15 opt). The stats reset is
-    * the [[graft.ops.PlanStats]] contract (checkpoint-inherited
+    * the [[graft.ops.Iterate]] contract (checkpoint-inherited
     * sizeInBytes squares per round in self-referencing loops); the old
     * reset path — `createDataFrame(df.rdd, df.schema)` — additionally
     * (a) DISCARDED the partitioning metadata, forcing every loop to

@@ -55,7 +55,26 @@ class PgLoadSpec extends SparkSpec {
       "months" -> "VARCHAR(100)", "style" -> "VARCHAR(100)",
       "sku" -> "VARCHAR(100)", "pcs" -> "INTEGER", "rate" -> "VARCHAR(100)",
       "gross_amount" -> "FLOAT", "size" -> "VARCHAR(100)",
-      "stock" -> "INTEGER", "loaded_at" -> "TIMESTAMP")))
+      "stock" -> "INTEGER", "loaded_at" -> "TIMESTAMP"))) ++
+    identityWarmup
+
+  /** Derby allocates an IDENTITY column's value range on the table's
+    * first insert. When that allocation races a concurrent compile of
+    * the same INSERT on another connection (the sink's per-partition
+    * writers), it cannot get the catalog row lock and fails with 40XL1
+    * ("A lock could not be obtained", SequenceUpdater contention).
+    * One serial insert per IDENTITY table right after the DDL allocates
+    * the range up front; the sink's concurrent inserts then draw from
+    * the cached range. The row is deleted again, so every table starts
+    * empty (ids start at 2 instead of 1; no test reads them). */
+  private val identityWarmup: Seq[String] = Seq(
+    "amazon_sale_version" ->
+      s"(${q("order_id")}, ${q("date")}) VALUES ('warmup', DATE('2000-01-01'))",
+    "sale" -> s"(${q("sku_code")}) VALUES ('warmup')",
+    "international_sales" -> s"(${q("customer")}) VALUES ('warmup')")
+    .flatMap { case (t, row) =>
+      Seq(s"INSERT INTO ${q(t)} $row", s"DELETE FROM ${q(t)}")
+    }
 
   /** Quoted-identifier SQL text for the hooks (Derby rejects bare `date`). */
   private def quotedInsert(table: String, cols: Seq[String]): String =

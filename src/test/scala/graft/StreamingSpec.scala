@@ -146,12 +146,16 @@ class StreamingSpec extends SparkSpec {
       Seq((301L, "red orange yellow green blue indigo violet crimson")))
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Long, String)]
+    val mark = rddMark()
     val q = graft.streaming.StreamPipeline.lshDedupGrowStart(
       in.toDF.toDF("id", "text"), threshold = 0.5,
       pairsDir, ibDir, ihDir, ckpt, availableNow = false)
     try {
       waves.foreach { w => in.addData(w: _*); q.processAllAvailable() }
     } finally q.stop()
+    // every micro-batch releases the checkpoints it pinned
+    val leftGrow = rddsPinnedSince(mark)
+    assert(leftGrow.isEmpty, s"grow: blocks left by the run: $leftGrow")
     val got = spark.read.parquet(pairsDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
@@ -185,6 +189,7 @@ class StreamingSpec extends SparkSpec {
       s"$base2/ib", s"$base2/ih")
     val in2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Long, String)]
+    val mark2 = rddMark()
     val q2 = graft.streaming.StreamPipeline.lshDedupGrowPrunedStart(
       in2.toDF.toDF("id", "text"), threshold = 0.5, nBuckets = 16,
       s"$base2/pairs", s"$base2/ib", s"$base2/ih", s"$base2/ckpt",
@@ -192,6 +197,9 @@ class StreamingSpec extends SparkSpec {
     try {
       waves.foreach { w => in2.addData(w: _*); q2.processAllAvailable() }
     } finally q2.stop()
+    val leftPruned = rddsPinnedSince(mark2)
+    assert(leftPruned.isEmpty,
+      s"grow+prune: blocks left by the run: $leftPruned")
     val gotPruned = spark.read.parquet(s"$base2/pairs")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
