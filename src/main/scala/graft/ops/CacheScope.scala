@@ -1,8 +1,9 @@
 package graft.ops
 
-import java.util.ArrayDeque
+import java.util.{ArrayDeque, IdentityHashMap}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Deterministic lifetime for mid-pipeline caches.
@@ -32,6 +33,10 @@ object CacheScope {
   private val active =
     ThreadLocal.withInitial[ArrayDeque[DataFrame]](() => new ArrayDeque())
 
+  /** This thread's P7 answers, by frame identity, until [[releaseAll]]. */
+  private val emptiness = ThreadLocal.withInitial[
+    IdentityHashMap[DataFrame, java.lang.Boolean]](() => new IdentityHashMap())
+
   /** Persist `df` (memory-then-disk) and register it for the next
     * [[releaseAll]]. If an identical plan is already cached (e.g. a caller
     * pre-cached the input), the frame is neither re-persisted nor
@@ -55,6 +60,25 @@ object CacheScope {
     df
   }
 
+  /** P7 — empty-input guard (ecommerce_s3_to_pg.py:430-432), decided
+    * once per scope. The first call persists `df` (as [[persist]] does)
+    * and fills that cache in one job, which also counts its rows: the
+    * answer costs no job beyond the cache fill every later consumer
+    * needs, and no limit operator (a `limit` plan compiles fresh code on
+    * every call — Spark names each limit's counter from a JVM-wide
+    * sequence). The answer is recorded with the frame; later calls on
+    * the same frame object read it until [[releaseAll]] (or a
+    * [[releaseSince]] that frees the frame). */
+  def isEmpty(df: DataFrame): Boolean = {
+    val known = emptiness.get.get(df)
+    if (known != null) known.booleanValue
+    else {
+      val empty = Bridge.fillCache(persist(df)) == 0
+      emptiness.get.put(df, empty)
+      empty
+    }
+  }
+
   /** Position marker for [[releaseSince]]: the number of frames this
     * thread has registered so far. */
   def mark(): Int = active.get.size
@@ -69,13 +93,18 @@ object CacheScope {
     * (below the mark) keep their caller-owned lifetime. */
   def releaseSince(mark: Int): Unit = {
     val q = active.get
-    while (q.size > mark) release(q.pollLast())
+    while (q.size > mark) {
+      val df = q.pollLast()
+      emptiness.get.remove(df)
+      release(df)
+    }
   }
 
-  /** Unpersist every frame registered ON THIS THREAD. Idempotent;
-    * non-blocking (block deletion proceeds asynchronously, correctness
-    * never depends on it). */
+  /** Unpersist every frame registered ON THIS THREAD and forget its
+    * recorded emptiness. Idempotent; non-blocking (block deletion proceeds
+    * asynchronously, correctness never depends on it). */
   def releaseAll(): Unit = {
+    emptiness.get.clear()
     val q = active.get
     var df = q.poll()
     while (df != null) {

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Projection / row-predicate operators (SURVEY.md §2.2, P1-P8).
+/** Projection / row-predicate operators (SURVEY.md §2.2, P1-P6; the P7
+  * empty guard is [[CacheScope.isEmpty]], P8 lives in `Sinks.writeCsvAll`).
   *
   * All are pure `DataFrame => DataFrame` plan builders (use via
   * `df.transform(...)`): nothing here runs an action, so Catalyst folds the
@@ -61,8 +62,4 @@ object Projections {
     * to an rlike conjunction — no UDF. */
   def allAlphabetic(cols: Seq[String]): Column =
     cols.map(c => qcol(c).cast("string").rlike("[a-zA-Z]")).reduce(_ && _)
-
-  /** P7 — empty-input guard (ecommerce_s3_to_pg.py:430-432). Cheap plan:
-    * limit(1) scan, not a full count. */
-  def isEmpty(df: DataFrame): Boolean = df.limit(1).count() == 0
 }

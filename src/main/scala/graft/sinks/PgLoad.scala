@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DoubleType, IntegerType, StringType, TimestampType}
 
-import graft.ops.{qcol, Projections, ScalarFns}
+import graft.ops.{qcol, CacheScope, ScalarFns}
 
 /** The assembled Postgres load path — the reference's entire sink half
   * (`load_to_pg`, ecommerce_s3_to_pg.py:449-633): four table DDLs, then
@@ -214,8 +214,10 @@ object PgLoad {
 
   /** One full load run (K3+K4+K5+F10): DDL, then the five frames in
     * reference order. Returns the target tables actually written (empty
-    * frames skipped). Per-partition transactions; see [[loadAllStaged]]
-    * for single-commit semantics. */
+    * frames skipped). Emptiness comes from [[CacheScope.isEmpty]]: a frame
+    * [[Sinks.writeCsvAll]] already decided is not probed again, and is
+    * read from the cache that decision filled. Per-partition transactions;
+    * see [[loadAllStaged]] for single-commit semantics. */
   def loadAll(
       amazonClean: DataFrame,
       amazonFlagged: DataFrame,
@@ -237,7 +239,7 @@ object PgLoad {
       written += table
     }
 
-    if (!Projections.isEmpty(amazonClean)) {
+    if (!CacheScope.isEmpty(amazonClean)) {
       val df = prepareStamped(amazonClean, loadedAt)
       Sinks.writePartitions(
         df,
@@ -245,15 +247,15 @@ object PgLoad {
         connect, batchSize)
       written += "amazon_sale"
     }
-    if (!Projections.isEmpty(amazonFlagged))
+    if (!CacheScope.isEmpty(amazonFlagged))
       insertInto("amazon_sale_version", prepareStamped(amazonFlagged, loadedAt))
-    if (!Projections.isEmpty(sale))
+    if (!CacheScope.isEmpty(sale))
       insertInto("sale", prepareStamped(sale, loadedAt,
         Map("stock" -> IntegerType, "loaded_at" -> TimestampType)))
-    if (!Projections.isEmpty(international1))
+    if (!CacheScope.isEmpty(international1))
       insertInto("international_sales",
         prepareInternational(international1, "part1", loadedAt))
-    if (!Projections.isEmpty(international2))
+    if (!CacheScope.isEmpty(international2))
       insertInto("international_sales",
         prepareInternational(international2, "part2", loadedAt))
     // distinct: both international parts target one table, and
@@ -376,12 +378,11 @@ object PgLoad {
     if ((ledgerKey.toSeq ++ legacyLedgerKeys)
       .exists(ledgerHas(connect, _))) return Nil
 
-    // (target, conflictCols, prepared frame), reference order. Each
-    // frame is persisted (CacheScope — released by the caller's
-    // per-batch releaseAll) BEFORE the emptiness probe: the probe's
-    // limit(1).count() and the later stage write would otherwise each
-    // execute the full cleaning lineage — a duplicated shuffle+scan per
-    // micro-batch in the streaming hot path.
+    // (target, conflictCols, prepared frame), reference order. The
+    // emptiness decision persists each frame (CacheScope — released by
+    // the caller's per-batch releaseAll), so the stage write reads the
+    // cache the deciding job filled instead of executing the full
+    // cleaning lineage a second time per micro-batch.
     val loads: Seq[(String, Seq[String], DataFrame)] = Seq(
       ("amazon_sale", Seq("order_id", "date"),
         prepareStamped(amazonClean, loadedAt)),
@@ -392,9 +393,7 @@ object PgLoad {
         prepareInternational(international1, "part1", loadedAt)),
       ("international_sales", Nil,
         prepareInternational(international2, "part2", loadedAt))
-    ).map { case (t, cc, df) =>
-      (t, cc, graft.ops.CacheScope.persist(df))
-    }.filter { case (_, _, df) => !Projections.isEmpty(df) }
+    ).filter { case (_, _, df) => !CacheScope.isEmpty(df) }
     // a target missing from loadTargets would mint stage names the
     // sweep pattern never matches — orphans would accumulate silently
     require(loads.forall(l => loadTargets.contains(l._1)),

@@ -31,13 +31,16 @@ object Sinks {
     * (`load_to_s3`, ecommerce_s3_to_pg.py:637-685): a DataFrame OBJECT
     * already written under another name is skipped — reference `id(df)`
     * set semantics, i.e. reference identity, not value equality. Returns
-    * the names actually written. */
+    * the names actually written. Emptiness is decided through
+    * [[graft.ops.CacheScope.isEmpty]], which persists each frame: a later
+    * sink of the same run ([[PgLoad.loadAll]]) reads the cache and the
+    * recorded answer, and the caller ends the run with `releaseAll`. */
   def writeCsvAll(tables: Seq[(String, DataFrame)], outDir: String): Seq[String] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
     tables.flatMap { case (name, df) =>
       if (df == null || seen.contains(df)
-          || graft.ops.Projections.isEmpty(df)) None
+          || graft.ops.CacheScope.isEmpty(df)) None
       else {
         seen.add(df)
         writeCsv(df, s"$outDir/$name")

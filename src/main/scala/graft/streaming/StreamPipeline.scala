@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Projections
 import graft.pipeline.Cleaners
 import graft.sinks.Sinks
 import graft.sources.CsvSource
@@ -132,14 +131,13 @@ object StreamPipeline {
     // (Profiling.withQualityCounters — observe metrics, zero extra scan);
     // null counts in cleaned-critical columns should be 0 after P5, so a
     // non-zero count in this log line is a cleaner-regression alarm
-    def writeNonEmpty(frame0: DataFrame, path: String,
+    def writeNonEmpty(frame: DataFrame, path: String,
         critical: Seq[String] = Nil): Unit = {
-      // persisted: the emptiness probe (limit(1).count) and the CSV
-      // write would otherwise EACH execute the full cleaning lineage —
-      // the duplicated shuffle+scan the staged-load path already avoids;
-      // released by this method's own finally releaseAll
-      val frame = graft.ops.CacheScope.persist(frame0)
-      if (!Projections.isEmpty(frame)) {
+      // the emptiness decision persists the frame, so the CSV write reads
+      // the cache the deciding job filled instead of executing the full
+      // cleaning lineage again; released by this method's own finally
+      // releaseAll
+      if (!graft.ops.CacheScope.isEmpty(frame)) {
         val (observed, obs) = graft.ops.Profiling.withQualityCounters(
           frame, critical.filter(frame.columns.contains))
         Sinks.writeCsv(observed, path)

@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.columnar.CachedBatch
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.csv.TextInputCSVDataSource
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge to the `private[sql]` Column↔Expression converters —
   * the documented escape hatch for libraries registering custom Catalyst
@@ -85,4 +90,37 @@ object Bridge {
   def invalidateFileStatusCache(spark: SparkSession): Unit =
     org.apache.spark.sql.execution.datasources.FileStatusCache
       .getOrCreate(spark.asInstanceOf[CSparkSession]).invalidateAll()
+
+  /** Materialize the cache of a persisted frame in ONE job over every
+    * partition and return its row count, summed from the cached batches.
+    * A later query over the frame finds the cache loaded and starts no
+    * job to fill it (a query that meets an unloaded cache first runs a
+    * cache-fill job of its own, then its own job). */
+  def fillCache(df: DataFrame): Long = {
+    val spark = df.sparkSession.asInstanceOf[CSparkSession]
+    val relation = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[CDataset[_]])
+      .getOrElse(throw new IllegalArgumentException("frame is not persisted"))
+      .cachedRepresentation
+    // building the cached RDD already runs the cached plan's shuffle
+    // stages, so the session's SQL confs must reach those tasks too
+    SQLExecution.withSQLConfPropagated(spark) {
+      spark.sparkContext.runJob(relation.cacheBuilder.cachedColumnBuffers,
+        (it: Iterator[CachedBatch]) => it.map(_.numRows.toLong).sum).sum
+    }
+  }
+
+  /** The CSV file source's own schema inference (`header` and
+    * `inferSchema` on), run over lines already in memory: `header` names
+    * the columns and, as in the file scan's inference, every line equal
+    * to it is left out of the type vote. One job. */
+  def inferCsvSchema(lines: Dataset[String], header: String): StructType = {
+    val conf = lines.sparkSession.asInstanceOf[CSparkSession].sessionState.conf
+    val options = new CSVOptions(
+      Map("header" -> "true", "inferSchema" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+    TextInputCSVDataSource.inferFromDataset(
+      lines.sparkSession, lines, Some(header), options)
+  }
 }

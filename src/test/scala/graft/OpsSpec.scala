@@ -162,6 +162,45 @@ class OpsSpec extends SparkSpec {
     assert(out.head.getString(1) == "Zürich")
   }
 
+  /** A CSV file written with `bytes`, read by CsvSource and by the plain
+    * header + inferSchema file scan. */
+  private def readBoth(bytes: Array[Byte]) = {
+    val dir = java.nio.file.Files.createTempDirectory("src").toFile
+    val f = new java.io.File(dir, "probe sale.csv")
+    java.nio.file.Files.write(f.toPath, bytes)
+    (CsvSource.read(spark, f.getPath), spark.read.option("header", "true")
+      .option("inferSchema", "true").csv(f.getPath))
+  }
+
+  test("S3 encoding: valid UTF-8 holding a literal U+FFFD stays UTF-8") {
+    val (df, _) = readBoth("name,mark\ncafé,a\uFFFDb\n"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val row = df.collect().head
+    assert(row.getString(0) == "café")
+    assert(row.getString(1) == "a\uFFFDb")
+  }
+
+  test("S3: a later copy of the header line is a data row, as in the file scan") {
+    val (df, scan) = readBoth("a,b\n1,x\na,b\n2,y\n".getBytes("UTF-8"))
+    assert(df.schema == scan.schema)
+    assert(df.collect().toSeq == scan.collect().toSeq)
+    assert(df.count() == 3)
+  }
+
+  test("S3: CRLF and LF line ends give identical frames") {
+    val text = "id,name,amount\n1,café,2.5\n\n2,bar,3\n"
+    val (lf, scan) = readBoth(text.getBytes("UTF-8"))
+    val (crlf, _) = readBoth(text.replace("\n", "\r\n").getBytes("UTF-8"))
+    assert(crlf.schema == lf.schema)
+    assert(crlf.collect().toSeq == lf.collect().toSeq)
+    assert(lf.schema == scan.schema)
+    assert(lf.collect().toSeq == scan.collect().toSeq)
+    // a UTF-8 byte-order mark is skipped, as the file scan skips it
+    val (bom, bomScan) = readBoth(("\uFEFF" + text).getBytes("UTF-8"))
+    assert(bom.schema == lf.schema && bomScan.schema == lf.schema)
+    assert(bom.collect().toSeq == lf.collect().toSeq)
+  }
+
   test("K4 upsert SQL matches reference ON CONFLICT shape") {
     val sql = Sinks.upsertSql("amazon_sale", Seq("order_id", "date", "amount"),
       Seq("order_id", "date"))
@@ -173,14 +212,17 @@ class OpsSpec extends SparkSpec {
     val df = Seq((1, "x")).toDF("a", "b")
     val empty = df.limit(0)
     val out = java.nio.file.Files.createTempDirectory("p8").toString
-    val written = Sinks.writeCsvAll(
+    val written = try Sinks.writeCsvAll(
       Seq("first" -> df, "alias_of_first" -> df, "empty" -> empty), out)
+    finally CacheScope.releaseAll()
     assert(written == Seq("first"))
   }
 
   test("P7 empty guard") {
-    assert(Projections.isEmpty(Seq.empty[(Int, String)].toDF("a", "b")))
-    assert(!Projections.isEmpty(Seq((1, "x")).toDF("a", "b")))
+    try {
+      assert(CacheScope.isEmpty(Seq.empty[(Int, String)].toDF("a", "b")))
+      assert(!CacheScope.isEmpty(Seq((1, "x")).toDF("a", "b")))
+    } finally CacheScope.releaseAll()
   }
 
   test("q_waiting_supplier: EXISTS/NOT-EXISTS plan as hash semi/anti joins") {

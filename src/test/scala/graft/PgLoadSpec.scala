@@ -277,10 +277,29 @@ class PgLoadSpec extends SparkSpec {
     }
     val connect = freshDb("graftpg5")
     PgLoad.runDdl(connect, ddls("5"))
-    val written = graft.app.BatchMain.runWithPg(
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(planListener)
+    val written = try graft.app.BatchMain.runWithPg(
       spark, landing.toString, out, connect, loadedAt,
       upsertSqlFor = quotedUpsert, insertSqlFor = quotedInsert,
       createTables = false)
+    finally {
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark)
+      spark.listenerManager.unregister(planListener)
+    }
+    // P7 is decided without a limit operator (a limit's generated class
+    // is never reused), in every plan the handler runs
+    assert(!plans.isEmpty)
+    plans.forEach(p => assert(
+      !p.contains("LocalLimit") && !p.contains("GlobalLimit"), p))
     assert(written == Seq("amazon_sale", "amazon_sale_version", "sale",
       "international_sales"))
     // same counts as the CSV zone (StreamingSpec golden numbers)
