@@ -96,7 +96,8 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sentinel":$sentMin,""" +
-        s""""sentinel_runs":[${sentinels.mkString(",")}],"sf":"$sfDir"}"""
+        s""""sentinel_runs":[${sentinels.mkString(",")}],"sf":"$sfDir",""" +
+        s""""cpus":${Session.cpus}}"""
     println(json)
     // Redundant copy on disk: sbt interleaves logger lines around stdout,
     // and the one JSON line has been lost to prefix-wrapping before.

@@ -1,208 +1,68 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
-/** Real BMP (Windows V3, 14-byte BITMAPFILEHEADER + 40-byte
-  * BITMAPINFOHEADER, uncompressed 24-bit BGR, bottom-up rows padded to
-  * 4-byte multiples) encode/decode as pure Catalyst projections — the
-  * SECOND modality retired from the [[Multimodal.fakeDecodeFeatures]]
-  * stub on the [[WavCodec]] pattern: the byte layout is a public
-  * fixed-format spec, so parsing needs only substring/hex/conv
-  * arithmetic, no codec library.
-  *
-  * Layout produced/parsed (1-based byte offsets, scalar fields
-  * little-endian):
-  * 1-2 "BM", 3-6 file size (54 + image bytes), 7-10 reserved 0,
-  * 11-14 pixel-array offset 54; 15-18 info-header size 40, 19-22 width
-  * (signed LE32, positive here), 23-26 height (signed LE32, positive =
-  * bottom-up storage), 27-28 planes 1, 29-30 bits-per-pixel 24, 31-34
-  * compression 0 (BI_RGB), 35-38 image size ((3·w + pad)·h), 39-42 /
-  * 43-46 pixels-per-meter 2835, 47-50 colors used 0, 51-54 important
-  * colors 0; 55.. pixel rows BOTTOM-UP, each row w BGR byte triples
-  * plus `pad = (4 − (3·w) mod 4) mod 4` zero bytes.
-  *
-  * The logical pixel API is ROW-MAJOR TOP-DOWN packed 0xRRGGBB ints —
-  * [[pixels]] is the byte-exact inverse of [[encodeBmp]], undoing both
-  * the BGR byte order and the bottom-up row flip, and the roundtrip is
-  * hash-gated against a generator-formula oracle (`ext_bmp_roundtrip`,
-  * the `ext_wav_roundtrip` contract).
-  *
-  * Scale: everything is a per-row projection over the payload bytes —
-  * no shuffle, no UDF, no driver involvement; the hex detour costs 2×
-  * the payload bytes transiently per row (the WavCodec trade).
-  */
-object BmpCodec {
-  import WavCodec.{beHex, leHex, le32AtOff}
+import graft.functions.MediaCodec
 
-  /** Row padding bytes for a given pixel width: rows are stored at
-    * 4-byte granularity. */
-  private def padOf(w: Column): Column =
-    pmod(lit(4) - pmod(w * 3, lit(4)), lit(4))
-
-  /** Encode `w`×`h` row-major top-down packed-RGB pixels
-    * (`array<int>`, each 0xRRGGBB, length w·h) into a complete 24-bit
-    * BMP binary. */
-  def encodeBmp(pixels: Column, w: Column, h: Column): Column = {
-    val pad = padOf(w)
-    val stride = w * 3 + pad
-    val imageSize = stride * h
-    val header = concat(
-      lit("424D"),                    // "BM"
-      leHex(imageSize + 54, 4),       // file size
-      lit("00000000"),                // reserved
-      leHex(lit(54), 4),              // pixel-array offset
-      leHex(lit(40), 4),              // info-header size
-      leHex(w, 4),
-      leHex(h, 4),                    // positive: bottom-up rows
-      leHex(lit(1), 2),               // planes
-      leHex(lit(24), 2),              // bpp
-      leHex(lit(0), 4),               // BI_RGB
-      leHex(imageSize, 4),
-      leHex(lit(2835), 4),            // 72 dpi
-      leHex(lit(2835), 4),
-      leHex(lit(0), 4),
-      leHex(lit(0), 4))
-    // rows bottom-up (stored row s holds logical row h-1-s); pixels
-    // within a row left-to-right as B, G, R. Degenerate dimensions
-    // (0×h / w×0) emit an empty body through the explicit branch —
-    // Spark's sequence rejects empty ranges even with a +1 step (the
-    // WAV empty-payload lesson)
-    val rowPad = lit("000000").substr(lit(1), pad * 2)
-    val body = array_join(
-      when(h > 0 && w > 0,
-        transform(sequence(lit(0), h - 1, lit(1)), s => {
-          val r = h - 1 - s
-          concat(array_join(
-            transform(sequence(lit(0), w - 1, lit(1)), x => {
-              val p = element_at(pixels, (r * w + x + 1).cast("int"))
-              concat(beHex(pmod(p, lit(256)), 1),               // B
-                beHex(pmod(floor(p / 256).cast("long"), lit(256)), 1), // G
-                beHex(floor(p / 65536).cast("long"), 1))        // R
-            }), ""), rowPad)
-        }))
-        .otherwise(typedLit(Seq.empty[String])), "")
-    unhex(concat(header, body))
-  }
-
-  /** TRUE iff the payload carries the exact layout this codec
-    * produces — the format tag [[Multimodal.decodeFeatures]] keys on.
-    * Checks the magic, the 54-byte pixel offset, the 40-byte info
-    * header, the planes/bpp/compression scalar block, AND that the
-    * payload length equals exactly 54 + stride·h from the header's own
-    * dimensions — so neither a text payload, a WAV, a TRUNCATED image
-    * (whose decode would read past the end into NULLs, breaking the
-    * 4-doubles-in-[0,1) feature contract), nor a concatenation of
-    * BMPs (a [[Multimodal.sampleChunks]]-style video payload, which
-    * must fall through to the byte-grid profile rather than silently
-    * fingerprint frame 0 alone) can collide. */
-  def isBmp(payload: Column): Column = {
-    val w = width(payload)
-    val h = height(payload)
-    length(payload) >= 54 &&
-      hex(substring(payload, 1, 2)) === "424D" &&
-      hex(substring(payload, 11, 8)) === "3600000028000000" &&
-      hex(substring(payload, 27, 8)) === "010018000000" + "0000" &&
-      length(payload).cast("long") === lit(54L) + (w * 3 + padOf(w)) * h
-  }
+/** The Column API every image container shares, each function one
+  * [[MediaCodec]] native expression over `container`. Pixels are
+  * row-major TOP-DOWN packed 0xRRGGBB ints whatever the container, so
+  * every pixel consumer is container-agnostic; a payload the
+  * container's validator rejects decodes to NULL. */
+abstract class ImageCodec(container: String) {
+  protected def f(out: String, args: Column*): Column =
+    MediaCodec(container, out, 0, args: _*)
+  protected def encode(out: String, px: Column, w: Column, h: Column) =
+    f(out, px.cast("array<int>"), w.cast("long"), h.cast("long"))
 
   /** Decoded pixel width. */
-  def width(payload: Column): Column = le32AtOff(payload, 19)
+  def width(payload: Column): Column = f("width", payload)
 
   /** Decoded pixel height. */
-  def height(payload: Column): Column = le32AtOff(payload, 23)
+  def height(payload: Column): Column = f("height", payload)
 
   /** Decoded pixel count (w·h). */
-  def numPixels(payload: Column): Column = width(payload) * height(payload)
+  def numPixels(payload: Column): Column = f("numPixels", payload)
 
   /** Decoded pixels as row-major TOP-DOWN packed 0xRRGGBB ints — the
-    * byte-exact inverse of [[encodeBmp]] (BGR order and bottom-up row
-    * storage both undone). Empty images decode to the empty array (the
-    * explicit sequence step — the WAV lesson). */
-  def pixels(payload: Column): Column = {
-    val w = width(payload)
-    val h = height(payload)
-    val stride = w * 3 + padOf(w)
-    val dh = hex(payload)
-    when(w * h > 0,
-      transform(sequence(lit(0L), w * h - 1, lit(1L)), i => {
-        val r = floor(i / w).cast("long")
-        val x = i - r * w
-        // 0-based byte offset of the B byte: rows stored bottom-up
-        val off = lit(54) + (h - 1 - r) * stride + x * 3
-        def byteAt(o: Column) =
-          conv(dh.substr(o * 2 + 1, lit(2)), 16, 10).cast("int")
-        (byteAt(off + 2) * 65536 + byteAt(off + 1) * 256 + byteAt(off))
-          .cast("int")
-      }))
-      .otherwise(typedLit(Seq.empty[Int]))
-  }
+    * byte-exact inverse of the container's encoder. */
+  def pixels(payload: Column): Column = f("pixels", payload)
 
-  /** Exact integer LUMINANCE-SUM (B+G+R, channel order irrelevant to a
-    * sum) of the pixel-index range [start, end), decoded straight from
-    * the payload's hex at each pixel's byte offset — pooling consumers
-    * visit every pixel's 3 bytes exactly ONCE per range instead of
-    * materializing the packed-pixel array per cell (the k-cell pooling
-    * would otherwise re-run the full decode k times per row). */
-  private def lumSumRange(dh: Column, w: Column, h: Column,
-      stride: Column, start: Column, end: Column): Column =
-    aggregate(sequence(start.cast("long"), end.cast("long") - 1, lit(1L)),
-      lit(0L), (acc, i) => {
-        val r = floor(i / w).cast("long")
-        val x = i - r * w
-        val off = lit(54L) + (h - 1 - r) * stride + x * 3
-        def byteAt(o: Column) =
-          conv(dh.substr(o * 2 + 1, lit(2)), 16, 10).cast("long")
-        acc + byteAt(off) + byteAt(off + 1) + byteAt(off + 2)
-      })
+  /** Block-mean pooling of the decoded luminance grid down to `k`
+    * cells: [[Multimodal.resizePooled]]'s partition rule (cell j covers
+    * pixels [⌊j·n/k⌋, ⌊(j+1)·n/k⌋)), NULL-for-empty-cell convention and
+    * 6-dp rounding, over (R+G+B)/3 instead of raw bytes. */
+  def resizePooledPixels(payload: Column, k: Int): Column =
+    MediaCodec(container, "pooled", k, payload)
+}
 
-  /** 4 REAL image features from a decoded BMP — mean luminance
-    * ((R+G+B)/3, normalized by 255 into [0,1)) of 4 equal row-major
-    * pixel blocks, 6 dp: the shape [[Multimodal.fakeDecodeFeatures]]
-    * stubs, computed from actual decoded pixel bytes. Block sums are
-    * exact integer sums; a 6-dp rounding tie would need 5⁷ dividing
-    * 765·blockLen — impossible for realistic block lengths. Empty
-    * blocks (n < 4) emit 0.0, never NaN (the WAV lesson). */
-  def bmpFeatures(payload: Column): Column = {
-    val w = width(payload)
-    val h = height(payload)
-    val stride = w * 3 + padOf(w)
-    val n = w * h
-    val dh = hex(payload)
-    array((0 until 4).map { b =>
-      val start = floor(n.cast("double") * b / 4).cast("long")
-      val end = floor(n.cast("double") * (b + 1) / 4).cast("long")
-      when(end > start,
-        round(lumSumRange(dh, w, h, stride, start, end)
-          .cast("double") / ((end - start).cast("double") * 765.0), 6))
-        .otherwise(lit(0.0))
-    }: _*)
-  }
+/** 24-bit BMP (Windows V3: 14-byte file header + 40-byte info header,
+  * uncompressed BGR, bottom-up rows padded to 4-byte multiples).
+  *
+  * Layout (1-based offsets, scalars little-endian): 1-2 "BM", 3-6 file
+  * size (54 + image bytes), 11-14 pixel offset 54; 15-18 info size 40,
+  * 19-22 width, 23-26 height (positive = bottom-up), 27-28 planes 1,
+  * 29-30 bpp 24, 31-34 compression 0, 35-38 image size ((3·w + pad)·h),
+  * 39-46 2835 dpi pair; 55.. rows bottom-up, each w BGR triples plus
+  * `pad = (4 − 3·w mod 4) mod 4` zero bytes. `ext_bmp_roundtrip`
+  * hash-gates the roundtrip.
+  */
+object BmpCodec extends ImageCodec("bmp") {
 
-  /** Block-mean pooling of the decoded LUMINANCE grid down to `k`
-    * cells — the REAL-pixel replacement for
-    * [[Multimodal.resizePooled]]'s raw-byte pooling when the payload is
-    * a BMP (raw bytes would pool the header and the padding into the
-    * profile; decoded pixels are what a perceptual hash is defined
-    * over). Same partition rule (cell j covers pixels
-    * [⌊j·n/k⌋, ⌊(j+1)·n/k⌋)), same NULL-for-empty-cell convention, same
-    * 6-dp determinism argument (exact integer luminance sums, divisor
-    * 3·len). Each pixel's bytes are read exactly once across the k
-    * cells ([[lumSumRange]]). Pure codegen HOF projection, no
-    * shuffle. */
-  def resizePooledPixels(payload: Column, k: Int): Column = {
-    val w = width(payload)
-    val h = height(payload)
-    val stride = w * 3 + padOf(w)
-    val n = w * h
-    val dh = hex(payload)
-    transform(sequence(lit(0), lit(k - 1)), j => {
-      val start = floor(j * n / lit(k)).cast("long")
-      val end = floor((j + 1) * n / lit(k)).cast("long")
-      when(end > start,
-        round(lumSumRange(dh, w, h, stride, start, end)
-          .cast("double") / ((end - start).cast("double") * 3.0),
-          Multimodal.pooledRoundDp))
-    })
-  }
+  /** Encode `w`×`h` row-major top-down packed-RGB pixels (`array<int>`,
+    * each 0xRRGGBB, length w·h) into a complete 24-bit BMP binary. */
+  def encodeBmp(pixels: Column, w: Column, h: Column): Column =
+    encode("encode", pixels, w, h)
+
+  /** TRUE iff the payload carries exactly the layout [[encodeBmp]]
+    * writes — magic, 54-byte pixel offset, 40-byte info header,
+    * planes/bpp/compression, AND length exactly 54 + stride·h — so
+    * text, a WAV, a truncated image or a concatenation of BMPs (a
+    * [[Multimodal.sampleChunks]]-style video) never tag as BMP. */
+  def isBmp(payload: Column): Column = f("is", payload)
+
+  /** 4 real image features: mean luminance ((R+G+B)/765) of 4 equal
+    * row-major pixel blocks, 6 dp; an empty block (n < 4) is 0.0. Block
+    * sums are exact integers, so the round is engine-identical. */
+  def bmpFeatures(payload: Column): Column = f("features", payload)
 }

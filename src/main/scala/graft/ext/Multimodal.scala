@@ -4,22 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Multimodal-column plumbing (SURVEY.md §2.10): image/audio/video payloads
-  * as opaque `binary` columns with typed metadata, plus batched
-  * feature-extraction plumbing.
+import graft.functions.MediaCodec
+
+/** Multimodal-column plumbing (SURVEY.md §2.10): image/audio/video
+  * payloads as `binary` columns with typed metadata, the decode
+  * dispatch, and the DataFrame operators above it (perceptual-hash and
+  * shared-frame pair miners, the image pipeline, the CLIP-style gate,
+  * audio matching and voice activity).
   *
-  * The decode step is STUBBED (this container has no image/audio codecs):
-  * [[fakeDecodeFeatures]] derives deterministic pseudo-features from the
-  * payload's md5, so the Spark-side contract — schema, binary columns,
-  * partition-batched extraction, pushdown-friendly metadata — is real and
-  * tested while the codec call is a marked substitution point.
+  * Decoding is real for the five containers [[graft.functions.MediaCodec]]
+  * parses (WAV, BMP, PPM, PGM, RLE8) and falls back to the byte grid /
+  * md5 pseudo-features for anything else (JPEG, FLAC, text), so every
+  * consumer is total over arbitrary payloads.
   *
-  * Scale notes: payloads stay opaque binary end-to-end (no driver
-  * collection); metadata columns (byte_len, digest, mime) are split out so
-  * filters prune on cheap columns without touching payload bytes — at
-  * 100 TB that is the difference between scanning kilobyte metadata and
-  * petabyte payloads. Batched extraction mirrors Arrow-batch UDF shape:
-  * partition-iterator in, partition-iterator out, constant memory.
+  * Scale: payloads stay binary end-to-end (no driver collection);
+  * metadata columns (byte_len, digest, mime) are split out so filters
+  * prune on cheap columns without touching payload bytes.
   */
 object Multimodal {
 
@@ -59,125 +59,53 @@ object Multimodal {
         md5(col("frame")).as("frame_digest"),
         decodeFeatures(col("frame")).as("frame_features"))
 
-  /** STUB decode → feature vector: 4 deterministic doubles in [0,1) derived
-    * from md5 of the payload (substitute a real codec here in production;
-    * the signature — binary in, fixed-width double array out — is the
-    * real contract). Pure Catalyst expression, so the "decode" runs
-    * codegen'd per partition with no driver involvement, exactly where a
-    * JNI codec call would sit. */
-  def fakeDecodeFeatures(payload: Column): Column = {
-    val h = md5(payload)
-    array((0 until 4).map { i =>
-      round(conv(substring(h, i * 8 + 1, 8), 16, 10).cast("double")
-        / lit(4294967296.0), 6)
-    }: _*)
-  }
+  /** Pseudo-features for an opaque payload: 4 deterministic doubles in
+    * [0,1), each the unsigned big-endian 32-bit word i of the payload's
+    * md5 over 2^32, 6 dp. The fallback arm of [[decodeFeatures]]. */
+  def fakeDecodeFeatures(payload: Column): Column =
+    MediaCodec("raw", "features", 0, payload)
 
-  /** Decode dispatcher — the FORMAT TAG in front of the stub: payloads
-    * in a really-parseable public fixed layout decode for REAL
-    * (WAV/PCM via [[WavCodec.waveFeatures]] — actual waveform block
-    * energies; 24-bit BMP via [[BmpCodec.bmpFeatures]] — actual pixel
-    * block luminances); everything else falls through to the
-    * [[fakeDecodeFeatures]] substitution point. Same signature (binary
-    * in, 4 doubles in [0,1) out), so every consumer of the stub gains
-    * the real path by swapping this in — a production build adds
-    * `when(isJpeg…)`/`when(isFlac…)` arms here, around unchanged
-    * plumbing. */
+  /** Decode dispatcher: binary in, 4 doubles in [0,1) out. A WAV
+    * yields [[WavCodec.waveFeatures]], a BMP/PPM/PGM/RLE8 image
+    * [[BmpCodec.bmpFeatures]]' block luminances, anything else
+    * [[fakeDecodeFeatures]]. A NULL payload yields 4 NULLs. */
   def decodeFeatures(payload: Column): Column =
-    when(WavCodec.isWav(payload), WavCodec.waveFeatures(payload))
-      .when(BmpCodec.isBmp(payload), BmpCodec.bmpFeatures(payload))
-      .when(PpmCodec.isPpm(payload), PpmCodec.ppmFeatures(payload))
-      .when(PgmCodec.isPgm(payload), PgmCodec.pgmFeatures(payload))
-      .when(Rle8Codec.isRle8(payload), Rle8Codec.rle8Features(payload))
-      .otherwise(fakeDecodeFeatures(payload))
+    MediaCodec("any", "features", 0, payload)
 
   /** Pooled-profile dispatcher for the perceptual hashes: a payload in
     * a decodable image format pools its DECODED luminance grid
     * ([[BmpCodec.resizePooledPixels]] — a perceptual fingerprint is
-    * defined over pixels; raw-byte pooling would hash the header and
-    * the row padding too), everything else keeps the byte-grid pooling
-    * ([[resizePooled]], the honest profile for opaque payloads). Both
-    * branches share the block-partition rule, the NULL-for-empty-cell
-    * convention, and the 6-dp determinism argument, so consumers are
-    * branch-agnostic. CaseWhen evaluates lazily per row — a non-BMP
-    * row never pays the pixel decode. */
+    * defined over pixels, not over a header and row padding);
+    * everything else keeps the byte-grid [[resizePooled]]. Both share
+    * the partition rule, the NULL-for-empty-cell convention and the
+    * 6-dp rounding, so consumers are branch-agnostic. */
   def pooledProfile(payload: Column, k: Int): Column =
-    when(BmpCodec.isBmp(payload), BmpCodec.resizePooledPixels(payload, k))
-      .when(PpmCodec.isPpm(payload), PpmCodec.resizePooledPixels(payload, k))
-      .when(PgmCodec.isPgm(payload), PgmCodec.resizePooledPixels(payload, k))
-      .when(Rle8Codec.isRle8(payload),
-        Rle8Codec.resizePooledPixels(payload, k))
-      .otherwise(resizePooled(payload, k))
+    MediaCodec("any", "pooled", k, payload)
 
-  /** Decimal places [[resizePooled]] rounds each cell mean to. The
-    * fixed-point rendering in ExtQueries (`round(v·10^dp)`) is exact ONLY
-    * because cells are pre-rounded to this scale — a coarser inner scale
-    * could put `v·10^dp` on a .5 tie where Spark/DuckDB final rounds
-    * diverge. Both sides (and the oracle SQL) derive from this constant,
-    * so changing it breaks loudly instead of as a 1-ulp oracle drift. */
-  val pooledRoundDp = 6
+  /** Decimal places every pooled cell mean is rounded to. The
+    * fixed-point rendering in ExtQueries (`round(v·10^dp)`) is exact
+    * ONLY because cells are pre-rounded to this scale; both sides and
+    * the oracle SQL derive from this constant. */
+  val pooledRoundDp: Int = MediaCodec.roundDp
 
   /** 10^[[pooledRoundDp]], the matching fixed-point scale. */
   val pooledFpScale: Long = math.pow(10.0, pooledRoundDp).toLong
 
   /** "Resize" — block-mean pooling of the payload's byte grid down to
-    * `k` buckets (the 1-D shape of image downsampling: average each
-    * block of source samples into one target cell; a real codec path
-    * would pool decoded pixels instead of raw bytes, around the same
-    * plumbing). Bucket j covers byte positions
-    * [floor(j·n/k), floor((j+1)·n/k)) — the standard partition, exact
-    * for any n/k ratio. Buckets with no bytes (payload shorter than k)
-    * are NULL.
-    *
-    * Pure codegen HOF projection, no shuffle. Determinism: byte values
-    * are exact small ints, block sums are exact in doubles, and the
-    * mean's divisor is ≤ the block length — a 7th-decimal rounding tie
-    * is impossible for denominators this small (2^a·5^b with a,b ≤ 6),
-    * so the 6-dp round is engine-identical. */
-  def resizePooled(payload: Column, k: Int): Column = {
-    val hx = hex(payload)
-    val n = length(payload)
-    transform(sequence(lit(0), lit(k - 1)), j => {
-      val start = floor(j * n / lit(k)).cast("int")
-      val end = floor((j + 1) * n / lit(k)).cast("int")
-      val block = transform(sequence(start, end - 1),
-        p => conv(hx.substr(p * 2 + 1, lit(2)), 16, 10).cast("double"))
-      when(end > start,
-        round(aggregate(block, lit(0.0), (acc, x) => acc + x)
-          / (end - start).cast("double"), pooledRoundDp))
-    })
-  }
+    * `k` cells: cell j covers bytes [⌊j·n/k⌋, ⌊(j+1)·n/k⌋); a cell with
+    * no bytes (payload shorter than k) is NULL. Byte sums are exact and
+    * the divisor small, so a 7th-decimal rounding tie is impossible and
+    * the 6-dp round is engine-identical. */
+  def resizePooled(payload: Column, k: Int): Column =
+    MediaCodec("raw", "pooled", k, payload)
 
   /** Perceptual hash (aHash family) over an opaque payload: the
-    * [[resizePooled]] k-cell block-mean profile, thresholded into one
-    * bit per cell, packed MSB-first into a long. The threshold is the
-    * GLOBAL byte mean (an exact integer sum / n — bit-identical on any
-    * engine), not the textbook mean-of-cells: cell means are 6-dp
-    * doubles whose 16-element float sum would be fold-order-dependent,
-    * while the integer byte total is order-free. Same invariance
-    * properties (brightness profile), deterministic everywhere.
-    *
-    * Near-identical payloads (crops, re-encodes, small edits in the
-    * stub's byte-level analogue) differ in few cells → small Hamming
-    * distance between hashes. Empty payloads hash to 0 (the Spark
-    * `sequence(1, 0)` DESCENDING pitfall is guarded). Pure codegen'd
-    * projection — no shuffle, no UDF. */
-  def perceptualHash(payload: Column, k: Int = 16): Column = {
-    val hx = hex(payload)
-    val n = length(payload)
-    val byteTotal = aggregate(
-      transform(sequence(lit(1), n),
-        p => conv(hx.substr(p * 2 - 1, lit(2)), 16, 10).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val thr = round(byteTotal / n.cast("double"), 6)
-    val pooled = resizePooled(payload, k)
-    val bits = transform(sequence(lit(0), lit(k - 1)),
-      j => when(element_at(pooled, j + 1) >= thr,
-        pow(lit(2.0), lit((k - 1).toDouble) - j).cast("long"))
-        .otherwise(lit(0L)))
-    when(n > 0, aggregate(bits, lit(0L), (acc, x) => acc + x))
-      .otherwise(lit(0L))
-  }
+    * [[resizePooled]] profile thresholded into one bit per cell, packed
+    * MSB-first into a long. The threshold is the GLOBAL byte mean (exact
+    * integer sum / n, 6 dp), not the mean of the cell means, whose float
+    * sum would be order-dependent. Empty payloads hash to 0. */
+  def perceptualHash(payload: Column, k: Int = 16): Column =
+    MediaCodec("raw", "phash", k, payload)
 
   /** Multimodal near-dup candidate pairs by perceptual hash: band the
     * k-bit hash into two halves, self-join on either half (a pair
@@ -289,32 +217,12 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exposure KEEP verdict for the image pipeline: a BMP payload keeps
-    * iff neither its dark (luminance < 192 of 765) nor its bright
-    * (≥ 576) pixel fraction exceeds half — the `ext_bmp_exposure_gate`
-    * rule as a reusable predicate over DECODED pixels; a payload in no
-    * decodable image format passes (no pixels to judge — the honest
-    * fallback posture, and CaseWhen's lazy per-row evaluation means an
-    * opaque row never pays the decode). Pure row-local projection. */
-  def exposureKeep(payload: Column): Column = {
-    def gate(px: Column): Column = {
-      val lums = transform(px, p =>
-        floor(p / 65536).cast("long")
-          + pmod(floor(p / 256).cast("long"), lit(256))
-          + pmod(p, lit(256)))
-      val n = size(px).cast("long")
-      val nDark = aggregate(lums, lit(0L),
-        (a, l) => a + when(l < 192, lit(1L)).otherwise(lit(0L)))
-      val nBright = aggregate(lums, lit(0L),
-        (a, l) => a + when(l >= 576, lit(1L)).otherwise(lit(0L)))
-      nDark * 2 <= n && nBright * 2 <= n
-    }
-    when(BmpCodec.isBmp(payload), gate(BmpCodec.pixels(payload)))
-      .when(PpmCodec.isPpm(payload), gate(PpmCodec.pixels(payload)))
-      .when(PgmCodec.isPgm(payload), gate(PgmCodec.pixels(payload)))
-      .when(Rle8Codec.isRle8(payload), gate(Rle8Codec.pixels(payload)))
-      .otherwise(lit(true))
-  }
+  /** Exposure KEEP verdict: an image payload keeps iff neither its dark
+    * (luminance < 192 of 765) nor its bright (≥ 576) pixel fraction
+    * exceeds half — the `ext_bmp_exposure_gate` rule over DECODED
+    * pixels; a payload in no image format passes (no pixels to judge). */
+  def exposureKeep(payload: Column): Column =
+    MediaCodec("any", "exposure", 0, payload)
 
   /** END-TO-END image corpus pipeline — the corpusBuild pattern applied
     * to the multimodal column (r11 VERDICT #4): ONE call composing
@@ -341,11 +249,7 @@ object Multimodal {
       bands: Int = 4, bandBits: Int = 16, maxHamming: Int = 3)
       : (DataFrame, DataFrame) = {
     val s0 = graft.ops.CacheScope.persist(df.withColumn("format",
-      when(BmpCodec.isBmp(col(payloadCol)), lit("bmp"))
-        .when(PpmCodec.isPpm(col(payloadCol)), lit("ppm"))
-        .when(PgmCodec.isPgm(col(payloadCol)), lit("pgm"))
-        .when(Rle8Codec.isRle8(col(payloadCol)), lit("rle8"))
-        .otherwise(lit("opaque"))))
+      MediaCodec("any", "format", 0, col(payloadCol))))
     val s1 = graft.ops.CacheScope.persist(
       s0.filter(exposureKeep(col(payloadCol))))
     val pairs = dHashPairs(s1, idCol, payloadCol, bands, bandBits,
@@ -428,9 +332,10 @@ object Multimodal {
           .cast("int"))
 
   /** Batched partition-level extraction: the mapPartitions twin of an
-    * Arrow-batch UDF — groups rows into `batchSize` chunks, "decodes" each
-    * batch, emits (id, features). A real implementation swaps
-    * `decodeBatch` for the codec call; everything around it stays. */
+    * Arrow-batch UDF — groups rows into `batchSize` chunks, runs
+    * `decodeBatch` ([[fakeDecodeFeatures]]' md5 features) on each, emits
+    * (id, features). A batched model call would replace `decodeBatch`;
+    * everything around it stays. */
   def extractFeaturesBatched(
       df: DataFrame, idCol: String, payloadCol: String,
       batchSize: Int = 64): DataFrame = {
@@ -439,14 +344,7 @@ object Multimodal {
       StructField("id", LongType),
       StructField("features", ArrayType(DoubleType))))
     def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[(Long, Array[Double])] =
-      batch.map { case (id, bytes) =>
-        val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-        val feats = (0 until 4).map { i =>
-          val v = java.nio.ByteBuffer.wrap(d, i * 4, 4).getInt.toLong & 0xffffffffL
-          math.round(v / 4294967296.0 * 1e6) / 1e6
-        }.toArray
-        (id, feats)
-      }
+      batch.map { case (id, bytes) => (id, MediaCodec.md5Features(bytes)) }
     val input = df.select(col(idCol).cast("long"), col(payloadCol))
     val rows = input.rdd.mapPartitions { it =>
       it.grouped(batchSize).flatMap { chunk =>
@@ -573,5 +471,66 @@ object Multimodal {
         (-col("b").getField("nd")).as("delta"),
         col("b").getField("v").as("votes"))
       .filter(col("votes") >= minVotes)
+  }
+
+  /** VOICE-ACTIVITY SEGMENTATION over decoded WAV payloads — the
+    * speech-curation op an audio pipeline runs right after decode
+    * (split each clip into utterance segments, drop silence):
+    * `frameLen`-sample frame energies (mean |amplitude|, exact integer
+    * sum / frame length, 6 dp), a `threshold` activity cut, and
+    * contiguous active-frame runs grouped into segments via the
+    * classic islands pattern (lag + running start-count). A clip with
+    * no active frame contributes no rows; a trailing partial frame is
+    * a frame of its actual length.
+    *
+    * Output: (idCol, seg_id [1-based per clip], start_frame,
+    * end_frame, n_frames, n_samples, mean_energy).
+    *
+    * Scale: decode and the frame explode are per-row projections; the
+    * islands window partitions by the clip id (a clip's frames are
+    * thousands, never corpus-scale) — embarrassingly parallel across
+    * clips. */
+  def vadSegments(df: DataFrame, idCol: String, wavCol: String,
+      frameLen: Int = 16, threshold: Double = 1000.0): DataFrame = {
+    require(frameLen > 0, "frameLen must be positive")
+    require(idCol != "__ss", "idCol may not be the reserved name __ss")
+    import org.apache.spark.sql.expressions.Window
+    // the decode is pinned to a CONCRETE column behind a cache barrier:
+    // HOF lambdas get no subexpression elimination, so slicing the raw
+    // samples() expression would re-run the full decode once per frame
+    // (the measured wavDownsampleQ pathology, 357 s vs 21 s)
+    val withSs = graft.ops.CacheScope.persist(
+      df.select(col(idCol), WavCodec.samples(col(wavCol)).as("__ss")))
+    val ss = col("__ss")
+    val nf = ceil(size(ss) / lit(frameLen.toDouble)).cast("int")
+    // n = 0 needs a branch, not a step: sequence(0, -1) infers step -1
+    // and would manufacture phantom frames with flen = 0 (a 0/0 energy)
+    // — the samples() lesson applied one level up. An empty clip
+    // contributes no frames, hence no rows.
+    val frames = withSs.select(col(idCol),
+        posexplode(when(nf > 0, transform(sequence(lit(0), nf - 1),
+            f => slice(ss, f * frameLen + 1, lit(frameLen))))
+          .otherwise(typedLit(Seq.empty[Seq[Int]]))))
+      .select(col(idCol), col("pos").as("f"), col("col").as("fr"))
+      .withColumn("flen", size(col("fr")))
+      .withColumn("energy", round(
+        aggregate(col("fr"), lit(0L), (a, x) => a + abs(x))
+          .cast("double") / col("flen"), 6))
+      .withColumn("active", col("energy") >= threshold)
+    val w = Window.partitionBy(idCol).orderBy("f")
+    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    frames
+      .withColumn("is_start",
+        col("active") && !lag(col("active"), 1, false).over(w))
+      .withColumn("seg",
+        sum(when(col("is_start"), 1).otherwise(0)).over(run))
+      .filter(col("active"))
+      .groupBy(col(idCol), col("seg").cast("int").as("seg_id"))
+      .agg(min(col("f")).as("start_frame"),
+        max(col("f")).as("end_frame"),
+        count(lit(1)).as("n_frames"),
+        sum(col("flen")).cast("long").as("n_samples"),
+        round(graft.Det.dsumWide(col("energy")) / count(lit(1)), 6)
+          .as("mean_energy"))
   }
 }

@@ -1,131 +1,25 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
-/** Real binary PGM (netpbm P5, 8-bit grayscale) encode/decode as pure
-  * Catalyst projections — [[PpmCodec]]'s sibling, completing the
-  * netpbm pair the r11 VERDICT stretch named (PPM/PGM). Same canonical
-  * fixed-width 19-byte header discipline ("P5\n" magic instead of
-  * "P6\n"), then w·h single gray bytes, row-major top-down.
-  *
-  * The logical pixel API REPLICATES the gray value into all three
-  * channels (pixel = g·65536 + g·256 + g), so every packed-RGB
-  * consumer — exposure gate, luminance pooling, dHash — works on PGM
-  * rows unchanged: luminance (R+G+B) is exactly 3·g, and a gray image
-  * pools/bands byte-identically whether it arrived as PGM or as an
-  * equal-channel BMP/PPM (PgmSpec pins this container invariance).
-  * [[isPgm]] recognizes exactly the canonical layout this codec
-  * produces; wild variants fall to the opaque byte-grid path — the
-  * honest dispatcher posture throughout the codec family.
-  *
-  * Scale: per-row projections over payload bytes — no shuffle, no UDF,
-  * no driver. */
-object PgmCodec {
-  import WavCodec.beHex
+/** Binary PGM (netpbm P5, 8-bit grayscale): [[PpmCodec]]'s fixed
+  * 19-byte header with "P5\n", then w·h gray bytes, row-major top-down.
+  * Pixels REPLICATE the gray into all three channels, so luminance is
+  * exactly 3·g and a gray image pools and bands identically as PGM or
+  * as an equal-channel BMP/PPM (PpmSpec pins this invariance).
+  */
+object PgmCodec extends ImageCodec("pgm") {
 
-  private val HeaderLen = 19
+  /** Encode `w`×`h` row-major top-down grays (`array<int>`, each
+    * 0..255, length w·h) into a binary P5 PGM; dimensions outside
+    * 0..99999 raise an error. */
+  def encodePgm(grays: Column, w: Column, h: Column): Column =
+    encode("encode", grays, w, h)
 
-  /** Encode `w`×`h` row-major top-down gray values (`array<int>`, each
-    * 0..255, length w·h) into a complete binary P5 PGM. */
-  def encodePgm(grays: Column, w: Column, h: Column): Column = {
-    // Spark's lpad TRUNCATES strings longer than the target width —
-    // same 5-digit loud-failure guard as [[PpmCodec.encodePpm]].
-    val header = when(w >= 0 && w <= 99999 && h >= 0 && h <= 99999,
-      concat(
-        lit("P5\n"),
-        lpad(w.cast("string"), 5, "0"), lit(" "),
-        lpad(h.cast("string"), 5, "0"), lit("\n255\n")).cast("binary"))
-      .otherwise(raise_error(concat(
-        lit("encodePgm: dimensions outside the 5-digit header bound: w="),
-        w.cast("string"), lit(" h="), h.cast("string"))).cast("binary"))
-    val body = array_join(
-      when(w * h > 0,
-        transform(sequence(lit(0), w * h - 1, lit(1)), i =>
-          beHex(element_at(grays, (i + 1).cast("int")).cast("long"), 1)))
-        .otherwise(typedLit(Seq.empty[String])), "")
-    concat(header, unhex(body))
-  }
+  /** TRUE iff the payload carries the exact canonical layout (length
+    * exactly 19 + w·h). */
+  def isPgm(payload: Column): Column = f("is", payload)
 
-  /** TRUE iff the payload carries the exact canonical layout this
-    * codec produces (magic + separators + 5-digit dims + exact length
-    * 19 + w·h). */
-  def isPgm(payload: Column): Column =
-    length(payload) >= HeaderLen &&
-      hex(substring(payload, 1, 3)) === "50350A" &&
-      substring(payload, 4, 12).cast("string")
-        .rlike("^[0-9]{5} [0-9]{5}\\n$") &&
-      hex(substring(payload, 16, 4)) === "3235350A" &&
-      length(payload).cast("long") ===
-        lit(HeaderLen.toLong) + width(payload) * height(payload)
-
-  /** Decoded pixel width (fixed-offset 5-digit ASCII field). */
-  def width(payload: Column): Column =
-    substring(payload, 4, 5).cast("string").cast("long")
-
-  /** Decoded pixel height. */
-  def height(payload: Column): Column =
-    substring(payload, 10, 5).cast("string").cast("long")
-
-  /** Decoded pixel count (w·h). */
-  def numPixels(payload: Column): Column = width(payload) * height(payload)
-
-  /** Decoded pixels as row-major TOP-DOWN packed 0xRRGGBB ints with
-    * the gray value replicated into all three channels — the shared
-    * pixel contract of the codec family, so consumers never branch on
-    * color depth. Empty images decode to the empty array. */
-  def pixels(payload: Column): Column = {
-    val n = numPixels(payload)
-    val dh = hex(payload)
-    when(n > 0,
-      transform(sequence(lit(0L), n - 1, lit(1L)), i => {
-        val g = conv(dh.substr((lit(HeaderLen.toLong) + i) * 2 + 1,
-          lit(2)), 16, 10).cast("int")
-        (g * 65536 + g * 256 + g).cast("int")
-      }))
-      .otherwise(typedLit(Seq.empty[Int]))
-  }
-
-  /** Exact integer luminance-sum (3·gray) of the pixel-index range
-    * [start, end) straight from the payload hex. */
-  private def lumSumRange(dh: Column, start: Column,
-      end: Column): Column =
-    aggregate(sequence(start.cast("long"), end.cast("long") - 1, lit(1L)),
-      lit(0L), (acc, i) =>
-        acc + conv(dh.substr((lit(HeaderLen.toLong) + i) * 2 + 1,
-          lit(2)), 16, 10).cast("long") * 3)
-
-  /** 4 real image features (block mean luminance in [0,1), 6 dp) —
-    * the [[BmpCodec.bmpFeatures]] contract for the PGM branch of
-    * [[Multimodal.decodeFeatures]]. */
-  def pgmFeatures(payload: Column): Column = {
-    val n = numPixels(payload)
-    val dh = hex(payload)
-    array((0 until 4).map { b =>
-      val start = floor(n.cast("double") * b / 4).cast("long")
-      val end = floor(n.cast("double") * (b + 1) / 4).cast("long")
-      when(end > start,
-        round(lumSumRange(dh, start, end)
-          .cast("double") / ((end - start).cast("double") * 765.0), 6))
-        .otherwise(lit(0.0))
-    }: _*)
-  }
-
-  /** Block-mean pooling of the decoded luminance grid down to `k`
-    * cells — [[BmpCodec.resizePooledPixels]]'s contract for the PGM
-    * branch of [[Multimodal.pooledProfile]]: the same 6-dp cell means
-    * (3·gray sums over 3·len divisors) an equal-channel color
-    * container would produce for the same grays. */
-  def resizePooledPixels(payload: Column, k: Int): Column = {
-    val n = numPixels(payload)
-    val dh = hex(payload)
-    transform(sequence(lit(0), lit(k - 1)), j => {
-      val start = floor(j * n / lit(k)).cast("long")
-      val end = floor((j + 1) * n / lit(k)).cast("long")
-      when(end > start,
-        round(lumSumRange(dh, start, end)
-          .cast("double") / ((end - start).cast("double") * 3.0),
-          Multimodal.pooledRoundDp))
-    })
-  }
+  /** [[BmpCodec.bmpFeatures]]' 4 block luminances, for PGM. */
+  def pgmFeatures(payload: Column): Column = f("features", payload)
 }

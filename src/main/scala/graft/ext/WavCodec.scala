@@ -1,211 +1,53 @@
 package graft.ext
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Real WAV (RIFF/WAVE, canonical 44-byte header, 16-bit mono PCM)
-  * encode/decode as pure Catalyst projections — the first modality whose
-  * decode step is NOT the [[Multimodal.fakeDecodeFeatures]] stub: the
-  * byte layout is a public fixed-format spec (RIFF container, little-
-  * endian scalar fields, PCM samples), so parsing it needs only
-  * substring/hex/conv arithmetic, no codec library.
-  *
-  * Layout parsed/produced (all offsets 1-based as in SQL substring):
-  * bytes 1-4 "RIFF", 5-8 chunk size (LE32 = 36 + data bytes), 9-12
-  * "WAVE", 13-16 "fmt ", 17-20 subchunk size 16 (LE32), 21-22 audio
-  * format 1 = PCM (LE16), 23-24 channels (LE16, 1 here), 25-28 sample
-  * rate (LE32), 29-32 byte rate (LE32 = rate·2), 33-34 block align 2
-  * (LE16), 35-36 bits per sample 16 (LE16), 37-40 "data", 41-44 data
-  * size (LE32 = 2·n), 45.. n LE16 two's-complement samples.
-  *
-  * Scale: everything is a per-row projection over the payload bytes —
-  * no shuffle, no UDF, no driver involvement; the hex detour costs 2×
-  * the payload bytes transiently per row, the price of staying inside
-  * Catalyst string ops instead of a JNI call.
+import graft.functions.MediaCodec
+
+/** WAV (RIFF/WAVE, canonical 44-byte header, 16-bit mono PCM). Layout
+  * (1-based): 1-4 "RIFF", 5-8 36 + data bytes, 9-16 "WAVEfmt ", 17-20
+  * 16, 21-22 PCM 1, 23-24 channels 1, 25-28 sample rate, 29-32 byte
+  * rate, 33-34 block align 2, 35-36 bits 16, 37-40 "data", 41-44 data
+  * size 2·n, 45.. n LE16 two's-complement samples.
   */
 object WavCodec {
+  private def f(out: String, args: Column*) =
+    MediaCodec("wav", out, 0, args: _*)
 
-  /** Big-endian fixed-width hex of a non-negative integral column
-    * (shared with [[BmpCodec]] — both formats' scalar fields are
-    * little-endian integers rendered through the same hex detour). */
-  private[ext] def beHex(v: Column, bytes: Int): Column =
-    lpad(upper(conv(v.cast("string"), 10, 16)), bytes * 2, "0")
-
-  /** Little-endian hex: the big-endian byte pairs reversed. */
-  private[ext] def leHex(v: Column, bytes: Int): Column = {
-    val be = beHex(v, bytes)
-    concat((bytes to 1 by -1).map(b => be.substr(b * 2 - 1, 2)): _*)
-  }
-
-  /** LE32 field at 1-based byte offset `off`, as a long column (shared
-    * header-parsing primitive with [[BmpCodec]]). */
-  private[ext] def le32AtOff(payload: Column, off: Int): Column = {
-    val h = hex(substring(payload, off, 4))
-    conv(concat(h.substr(7, 2), h.substr(5, 2), h.substr(3, 2),
-      h.substr(1, 2)), 16, 10).cast("long")
-  }
-
-  /** Encode an `array<int>` of 16-bit signed samples (each in
-    * [-32768, 32767]) at `sampleRate` Hz into a complete mono WAV
-    * binary. Samples outside the 16-bit range wrap (two's complement),
-    * like any PCM writer handed pre-clipped integers. */
-  def encodeWav(samples: Column, sampleRate: Column): Column = {
-    val n = size(samples)
-    val dataSize = n * 2
-    val header = concat(
-      lit("52494646"),              // "RIFF"
-      leHex(dataSize + 36, 4),
-      lit("57415645"),              // "WAVE"
-      lit("666D7420"),              // "fmt "
-      leHex(lit(16), 4),
-      leHex(lit(1), 2),             // PCM
-      leHex(lit(1), 2),             // mono
-      leHex(sampleRate, 4),
-      leHex(sampleRate * 2, 4),     // byte rate
-      leHex(lit(2), 2),             // block align
-      leHex(lit(16), 2),            // bits per sample
-      lit("64617461"),              // "data"
-      leHex(dataSize, 4))
-    val body = array_join(
-      transform(samples, s => leHex(pmod(s, lit(65536)), 2)), "")
-    unhex(concat(header, body))
-  }
+  /** Encode an `array<int>` of 16-bit samples at `sampleRate` Hz into a
+    * mono WAV; samples outside the 16-bit range wrap (two's
+    * complement). */
+  def encodeWav(samples: Column, sampleRate: Column): Column =
+    f("encode", samples.cast("array<int>"), sampleRate.cast("long"))
 
   /** TRUE iff the payload carries the canonical mono 16-bit PCM layout
-    * this codec produces — the format tag the decode dispatcher keys
-    * on. Checks the three magic strings plus the PCM/mono/16-bit
-    * scalar fields (16 leading bytes + the format block), so a text
-    * payload cannot collide. */
-  def isWav(payload: Column): Column =
-    length(payload) >= 44 &&
-      hex(substring(payload, 1, 4)) === "52494646" &&
-      hex(substring(payload, 9, 8)) === "57415645666D7420" &&
-      hex(substring(payload, 21, 4)) === "01000100" &&
-      hex(substring(payload, 33, 4)) === "02001000" &&
-      hex(substring(payload, 37, 4)) === "64617461"
+    * AND its whole data chunk (trailing bytes are ignored). */
+  def isWav(payload: Column): Column = f("is", payload)
 
   /** Decoded sample rate (Hz). */
-  def sampleRate(payload: Column): Column = le32AtOff(payload, 25)
+  def sampleRate(payload: Column): Column = f("rate", payload)
 
   /** Decoded sample count (data bytes / 2). */
-  def numSamples(payload: Column): Column =
-    (le32AtOff(payload, 41) / 2).cast("long")
+  def numSamples(payload: Column): Column = f("numSamples", payload)
 
-  /** Decoded samples as `array<int>` of signed 16-bit values — the
-    * real waveform, byte-exact inverse of [[encodeWav]]. */
-  def samples(payload: Column): Column = {
-    val n = numSamples(payload)
-    val dh = hex(payload.substr(lit(45), (n * 2).cast("int")))
-    // explicit n > 0 guard: a structurally valid 0-sample WAV would
-    // otherwise make sequence(0, -1) infer step -1 and decode garbage
-    // (and Spark rejects 0→-1 even with an explicit +1 step — empty
-    // ranges need a branch, not a step)
-    when(n > 0,
-      transform(sequence(lit(0L), n - 1, lit(1L)), i => {
-        val u = conv(concat(dh.substr(i * 4 + 3, lit(2)),
-          dh.substr(i * 4 + 1, lit(2))), 16, 10).cast("int")
-        u - when(u >= 32768, 65536).otherwise(0)
-      }))
-      .otherwise(typedLit(Seq.empty[Int]))
-  }
+  /** Decoded samples as `array<int>` — the inverse of [[encodeWav]]. */
+  def samples(payload: Column): Column = f("samples", payload)
 
-  /** 4 REAL waveform features from a decoded WAV — mean |amplitude| of
-    * 4 equal sample blocks, normalized to [0,1) by the 16-bit range,
-    * 6 dp. The shape [[Multimodal.fakeDecodeFeatures]] stubs, computed
-    * from actual decoded samples. Determinism: block sums are exact
-    * integer sums; the divisor blockLen·32768 is 2^a·(blockLen's odd
-    * part) — a 6-dp rounding tie would need a factor 5⁷ in the
-    * denominator, impossible for realistic block lengths. */
-  def waveFeatures(payload: Column): Column = {
-    val ss = samples(payload)
-    val n = size(ss)
-    array((0 until 4).map { b =>
-      val start = floor(n.cast("double") * b / 4).cast("int")
-      val end = floor(n.cast("double") * (b + 1) / 4).cast("int")
-      val block = slice(ss, start + 1, end - start)
-      // n < 4 leaves some blocks empty — their energy is 0.0 by
-      // definition, never a 0/0 NaN escaping the promised [0,1) range
-      when(end > start,
-        round(aggregate(block, lit(0L), (acc, x) => acc + abs(x))
-          .cast("double") / ((end - start).cast("double") * 32768.0), 6))
-        .otherwise(lit(0.0))
-    }: _*)
-  }
+  /** 4 waveform features: mean |amplitude| / 32768 of 4 equal sample
+    * blocks, 6 dp; an empty block (n < 4) is 0.0. */
+  def waveFeatures(payload: Column): Column = f("features", payload)
 
-  /** NAIVE DECIMATION downsample: keep every `factor`-th sample and
-    * re-encode at rate/factor — the sample-rate normalization step an
-    * audio pipeline runs before training (all clips to one rate).
-    * Deliberately WITHOUT an anti-alias low-pass (that is a DSP-kernel
-    * concern, honestly out of scope for a byte-format codec); the
-    * contract is positional: decode(downsample(x, f))[i] ≡
-    * decode(x)[f·i], spec-pinned. Pure Catalyst projection — decode,
-    * index-filter, re-encode in one expression, no shuffle. */
+  /** NAIVE DECIMATION (no anti-alias low-pass): keep every `factor`-th
+    * sample and re-encode at rate/factor, so
+    * decode(downsample(x, f))[i] ≡ decode(x)[f·i]. */
   def downsample(payload: Column, factor: Int): Column = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val kept = filter(samples(payload),
-      (_, i) => i % factor === 0)
-    encodeWav(kept, (sampleRate(payload) / factor).cast("int"))
+    MediaCodec("wav", "downsample", factor, payload)
   }
 
-  /** VOICE-ACTIVITY SEGMENTATION over decoded WAV payloads — the
-    * speech-curation op an audio pipeline runs right after decode
-    * (split each clip into utterance segments, drop silence):
-    * `frameLen`-sample frame energies (mean |amplitude|, exact integer
-    * sum / frame length, 6 dp), a `threshold` activity cut, and
-    * contiguous active-frame runs grouped into segments via the
-    * classic islands pattern (lag + running start-count). A clip with
-    * no active frame contributes no rows; a trailing partial frame is
-    * a frame of its actual length.
-    *
-    * Output: (idCol, seg_id [1-based per clip], start_frame,
-    * end_frame, n_frames, n_samples, mean_energy).
-    *
-    * Scale: decode and the frame explode are per-row projections; the
-    * islands window partitions by the clip id (a clip's frames are
-    * thousands, never corpus-scale) — embarrassingly parallel across
-    * clips. */
-  def vadSegments(df: org.apache.spark.sql.DataFrame, idCol: String,
-      wavCol: String, frameLen: Int = 16,
-      threshold: Double = 1000.0): org.apache.spark.sql.DataFrame = {
-    require(frameLen > 0, "frameLen must be positive")
-    require(idCol != "__ss", "idCol may not be the reserved name __ss")
-    import org.apache.spark.sql.expressions.Window
-    // the decode is pinned to a CONCRETE column behind a cache barrier:
-    // HOF lambdas get no subexpression elimination, so slicing the raw
-    // samples() expression would re-run the full decode once per frame
-    // (the measured wavDownsampleQ pathology, 357 s vs 21 s)
-    val withSs = graft.ops.CacheScope.persist(
-      df.select(col(idCol), samples(col(wavCol)).as("__ss")))
-    val ss = col("__ss")
-    val nf = ceil(size(ss) / lit(frameLen.toDouble)).cast("int")
-    // n = 0 needs a branch, not a step: sequence(0, -1) infers step -1
-    // and would manufacture phantom frames with flen = 0 (a 0/0 energy)
-    // — the samples() lesson applied one level up. An empty clip
-    // contributes no frames, hence no rows.
-    val frames = withSs.select(col(idCol),
-        posexplode(when(nf > 0, transform(sequence(lit(0), nf - 1),
-            f => slice(ss, f * frameLen + 1, lit(frameLen))))
-          .otherwise(typedLit(Seq.empty[Seq[Int]]))))
-      .select(col(idCol), col("pos").as("f"), col("col").as("fr"))
-      .withColumn("flen", size(col("fr")))
-      .withColumn("energy", round(
-        aggregate(col("fr"), lit(0L), (a, x) => a + abs(x))
-          .cast("double") / col("flen"), 6))
-      .withColumn("active", col("energy") >= threshold)
-    val w = Window.partitionBy(idCol).orderBy("f")
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    frames
-      .withColumn("is_start",
-        col("active") && !lag(col("active"), 1, false).over(w))
-      .withColumn("seg",
-        sum(when(col("is_start"), 1).otherwise(0)).over(run))
-      .filter(col("active"))
-      .groupBy(col(idCol), col("seg").cast("int").as("seg_id"))
-      .agg(min(col("f")).as("start_frame"),
-        max(col("f")).as("end_frame"),
-        count(lit(1)).as("n_frames"),
-        sum(col("flen")).cast("long").as("n_samples"),
-        round(graft.Det.dsumWide(col("energy")) / count(lit(1)), 6)
-          .as("mean_energy"))
-  }
+  /** Voice-activity segments of decoded WAV payloads
+    * ([[Multimodal.vadSegments]]). */
+  def vadSegments(df: DataFrame, idCol: String, wavCol: String,
+      frameLen: Int = 16, threshold: Double = 1000.0): DataFrame =
+    Multimodal.vadSegments(df, idCol, wavCol, frameLen, threshold)
 }

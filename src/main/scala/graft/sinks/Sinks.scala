@@ -186,22 +186,13 @@ object Sinks {
     s"INSERT INTO $table (${columns.mkString(", ")}) VALUES ($placeholders)"
   }
 
-  /** K4/K6 executor-side writer. `connect` is a serializable factory so
+  /** K4/K6 executor-side batched writer (like psycopg2's execute_values)
+    * for an arbitrary positional-parameter statement over the frame's
+    * columns (in column order). `connect` is a serializable factory so
     * tests can inject an embedded connection; production passes a
-    * DriverManager lambda. Batched like psycopg2's execute_values. */
-  def upsertPartitions(
-      df: DataFrame,
-      table: String,
-      conflictCols: Seq[String],
-      connect: () => Connection,
-      batchSize: Int = 1000): Unit =
-    writePartitions(df, upsertSql(table, df.columns.toSeq, conflictCols),
-      connect, batchSize)
-
-  /** Executor-side batched writer for an arbitrary positional-parameter
-    * statement over the frame's columns (in column order). Per-partition
-    * connection + transaction; see K6 notes on [[upsertSql]] — for
-    * all-or-nothing loads use [[PgLoad.loadAllStaged]]. */
+    * DriverManager lambda. Per-partition connection + transaction; see
+    * K6 notes on [[upsertSql]] — for all-or-nothing loads use
+    * [[PgLoad.loadAllStaged]]. */
   def writePartitions(
       df: DataFrame,
       sql: String,
@@ -280,11 +271,6 @@ object Sinks {
       }
     }
   }
-
-  /** K5 — plain append via the built-in JDBC sink. */
-  def appendJdbc(df: DataFrame, url: String, table: String,
-      props: java.util.Properties): Unit =
-    df.write.mode("append").jdbc(url, table, props)
 
   /** Scale-path persistence: bucketed (and optionally sort-ordered)
     * parquet table. Joins and aggregations keyed on the bucket columns

@@ -333,7 +333,7 @@ class Ext2Spec extends SparkSpec {
       "far past the old stats-squaring horizon and agree with their " +
       "converged low-iter fixpoints") {
     import graft.ext.{Curation, Graph}
-    // without the per-round freshStats reset each of these loops
+    // without Iterate.pin's per-round stats reset each of these loops
     // re-feeds its checkpoint 2-3x per round, sizeInBytes squares or
     // cubes per iteration, and at iters=30 the driver spends effectively
     // forever inside BigInteger multiplication BEFORE any task runs —

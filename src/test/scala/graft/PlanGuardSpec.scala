@@ -180,13 +180,15 @@ class PlanGuardSpec extends SparkSpec {
     * each query's release, which concurrent construction would
     * false-positive. */
   private case class SweepRow(name: String, planOffenses: Seq[String],
-      leaked: Boolean)
+      leaked: Boolean, buildPlanMs: Long)
   private lazy val sweep: Seq[SweepRow] = {
     val sf = "/root/testdata/sf0.001"
-    Registry.all.map { q =>
+    val rows = Registry.all.map { q =>
+      val t0 = System.nanoTime()
       val plan =
         try q.run(spark, sf).queryExecution.sparkPlan
         finally graft.ops.CacheScope.releaseAll()
+      val buildPlanMs = (System.nanoTime() - t0) / 1000000
       val leaked =
         !org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark)
       org.apache.spark.sql.graftbridge.Bridge.clearCache(spark)
@@ -209,8 +211,15 @@ class PlanGuardSpec extends SparkSpec {
       if (badBnl.nonEmpty && !bnlJoinWhitelist.contains(q.name))
         offenses += s"${q.name}: BroadcastNestedLoopJoin over a " +
           "row-grained broadcast side"
-      SweepRow(q.name, offenses.result(), leaked)
+      SweepRow(q.name, offenses.result(), leaked, buildPlanMs)
     }
+    // build+plan wall time per query, then the slowest ten: where the
+    // sweep (and any query's planning) spends its time
+    rows.foreach(r => println(f"sweep ${r.name}%-40s ${r.buildPlanMs}%8d ms"))
+    println("sweep slowest 10 (build+plan ms):")
+    rows.sortBy(-_.buildPlanMs).take(10).foreach(r =>
+      println(f"  ${r.name}%-40s ${r.buildPlanMs}%8d"))
+    rows
   }
 
   test("no registered query plans a cartesian join, a row-grained " +

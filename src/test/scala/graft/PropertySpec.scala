@@ -47,7 +47,7 @@ class PropertySpec extends SparkSpec {
   test("BMP codec roundtrip == identity on random dims (all pad cases) " +
       "and random pixels, incl. degenerate 0-width/0-height") {
     import graft.ext.BmpCodec
-    import org.apache.spark.sql.functions.{col, length}
+    import org.apache.spark.sql.functions.{col, length, when}
     val rnd = new scala.util.Random(1311)
     val cases = (1 to 40).map { i =>
       // dims 0..9 sweep every row-pad case and both degenerate axes
@@ -74,6 +74,45 @@ class PropertySpec extends SparkSpec {
       assert(w2 == w && h2 == h, s"case $id dims")
       assert(dec == px, s"case $id (w=$w h=$h pad=${(4 - w * 3 % 4) % 4})")
       assert(len == 54 + (w * 3 + (4 - w * 3 % 4) % 4) * h)
+    }
+    // the RLE8 BMP variant, both encoders: rows of random runs (some
+    // past the 255 run cap) and noise; the mode-2 fixture leaves the
+    // bottom row, cols 3-4 and col w-1 to palette index 0
+    import graft.ext.Rle8Codec
+    def runRow(w: Int): List[Int] = if (w == 0) Nil else {
+      val len = math.min(w, if (rnd.nextBoolean()) 1 + rnd.nextInt(4)
+        else 200 + rnd.nextInt(400))
+      val v = rnd.nextInt(256)
+      List.fill(len)(v) ++ runRow(w - len)
+    }
+    val rle = (1 to 30).map { i =>
+      val (w, h) = if (i % 3 == 0) (200 + rnd.nextInt(500), 1 + rnd.nextInt(3))
+        else (7 + rnd.nextInt(10), 2 + rnd.nextInt(6))
+      val gs = if (i % 2 == 0) List.fill(w * h)(rnd.nextInt(256))
+        else List.fill(h)(runRow(w)).flatten
+      (i.toLong, gs, w, h)
+    } ++ Seq((31L, Nil, 0, 4), (32L, Nil, 5, 0))
+    val rout = rle.toDF("id", "gs", "w", "h")
+      .select(col("id"),
+        Rle8Codec.encodeRle8(col("gs"), col("w"), col("h")).as("r1"),
+        when(col("w") >= 7 && col("h") >= 2, Rle8Codec.encodeRle8Mode2(
+          col("gs"), col("w"), col("h"))).as("r2"))
+      .select(col("id"), Rle8Codec.isRle8(col("r1")),
+        Rle8Codec.pixels(col("r1")), Rle8Codec.isRle8(col("r2")),
+        Rle8Codec.pixels(col("r2")))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    rle.foreach { case (id, gs, w, h) =>
+      val r = rout(id)
+      val rgb = gs.map(g => g * 65536 + g * 256 + g)
+      assert(r.getBoolean(1) && r.getSeq[Int](2) == rgb, s"RLE8 case $id")
+      if (w >= 7 && h >= 2) {
+        val m2 = rgb.zipWithIndex.map { case (p, i) =>
+          val (y, x) = (i / w, i % w)
+          if (y == h - 1 || x == 3 || x == 4 || x == w - 1) 0 else p
+        }
+        assert(r.getBoolean(3) && r.getSeq[Int](4) == m2,
+          s"RLE8 mode-2 case $id (w=$w h=$h)")
+      }
     }
   }
 
@@ -559,6 +598,87 @@ class PropertySpec extends SparkSpec {
         s"case $id PGM replicated-channel pixels (w=$w h=$h)")
       assert(glen == 19 + w * h, s"case $id PGM length")
     }
+    // WAV: 0, 1 and random sample counts; out-of-range samples wrap
+    import graft.ext.WavCodec
+    val wavs = (Seq(0, 1, 2) ++ Seq.fill(20)(rnd.nextInt(300)))
+      .zipWithIndex.map { case (n, i) =>
+        (i.toLong, List.fill(n)(rnd.nextInt(100000) - 50000),
+          8000 + rnd.nextInt(40000))
+      }
+    val wout = wavs.toDF("id", "ss", "rate")
+      .select(col("id"), WavCodec.encodeWav(col("ss"), col("rate")).as("w"))
+      .select(col("id"), WavCodec.isWav(col("w")),
+        WavCodec.sampleRate(col("w")), WavCodec.numSamples(col("w")),
+        WavCodec.samples(col("w")), length(col("w")))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    wavs.foreach { case (id, ss, rate) =>
+      val r = wout(id)
+      assert(r.getBoolean(1) && r.getLong(2) == rate &&
+        r.getLong(3) == ss.size, s"WAV case $id header")
+      assert(r.getSeq[Int](4) == ss.map(_.toShort.toInt), s"WAV case $id")
+      assert(r.getInt(5) == 44 + 2 * ss.size, s"WAV case $id length")
+    }
+  }
+
+  test("codec totality: every mutated payload is rejected by its " +
+      "validator or decodes to exactly w·h pixels (n samples), no NULL") {
+    import graft.ext.{BmpCodec, PgmCodec, PpmCodec, Rle8Codec, WavCodec}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    val rnd = new scala.util.Random(4242)
+    val (w, h) = (col("w"), col("h"))
+    val imgs = (Seq.fill(10)((1 + rnd.nextInt(12), 1 + rnd.nextInt(6))) ++
+        Seq((0, 3), (4, 0), (9, 2))).map { case (a, b) =>
+      (a, b, List.fill(a * b)(rnd.nextInt(0x1000000)),
+        List.fill(a * b)(rnd.nextInt(3) * 100))
+    }.toDF("w", "h", "px", "gs")
+      .select(BmpCodec.encodeBmp(col("px"), w, h),
+        PpmCodec.encodePpm(col("px"), w, h),
+        PgmCodec.encodePgm(col("gs"), w, h),
+        Rle8Codec.encodeRle8(col("gs"), w, h),
+        when(w >= 7 && h >= 2, Rle8Codec.encodeRle8Mode2(col("gs"), w, h)))
+    val wavs = Seq.fill(6)(List.fill(rnd.nextInt(40))(rnd.nextInt(65536) -
+      32768)).toDF("ss").select(WavCodec.encodeWav(col("ss"), lit(8000)))
+    val valid = (imgs.collect() ++ wavs.collect())
+      .flatMap(_.toSeq.collect { case b: Array[Byte] => b }).toSeq
+    // truncations, single-byte flips (header, command stream and body)
+    // and concatenations. RLE8's width/height high bytes are not
+    // flipped: that yields a VALID stream over a canvas of up to 2^40
+    // pixels, which the pixel-array API would have to materialize.
+    val mutated = valid.flatMap { p =>
+      val rle = p.length >= 1078 && p(30) == 1
+      Seq.fill(3)(p.take(rnd.nextInt(p.length))) ++ Seq.fill(8) {
+        val o = rnd.nextInt(p.length)
+        val c = p.clone()
+        if (!(rle && (o % 4 != 2) && o >= 19 && o <= 25)) c(o) = rnd.nextInt(256).toByte
+        c
+      }
+    } ++ Seq.fill(20)(valid(rnd.nextInt(valid.size)) ++
+      valid(rnd.nextInt(valid.size)))
+    val df = mutated.map(Option(_)).toDF("p").cache()
+    val p = col("p")
+    def check(name: String, ok: Column, dec: Column, n: Column,
+        feats: Column): Unit = {
+      val admitted = df.filter(ok).count()
+      val bad = df.filter(ok && !(size(dec) === n &&
+        !exists(dec, _.isNull) && size(feats) === 4 &&
+        !exists(feats, _.isNull))).count()
+      val leaked = df.filter(!ok && dec.isNotNull).count()
+      assert(admitted > 0, s"$name: no mutated payload was admitted")
+      assert(bad == 0, s"$name: $bad admitted payloads decode partially")
+      assert(leaked == 0, s"$name: $leaked rejected payloads decode")
+    }
+    check("bmp", BmpCodec.isBmp(p), BmpCodec.pixels(p),
+      BmpCodec.numPixels(p), BmpCodec.bmpFeatures(p))
+    check("ppm", PpmCodec.isPpm(p), PpmCodec.pixels(p),
+      PpmCodec.numPixels(p), PpmCodec.ppmFeatures(p))
+    check("pgm", PgmCodec.isPgm(p), PgmCodec.pixels(p),
+      PgmCodec.numPixels(p), PgmCodec.pgmFeatures(p))
+    check("rle8", Rle8Codec.isRle8(p), Rle8Codec.pixels(p),
+      Rle8Codec.numPixels(p), Rle8Codec.rle8Features(p))
+    check("wav", WavCodec.isWav(p), WavCodec.samples(p),
+      WavCodec.numSamples(p), WavCodec.waveFeatures(p))
+    df.unpersist()
   }
 
   test("ArchiveIndex write+append+compact == session-frame reference " +
