@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
@@ -9,9 +10,11 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** Dev runner for timing and plan inspection. Usage:
   *   runMain graft.Dev <sfDir> <q1,q2,...|all> [reps]
   * Per query: `reps` (default 1) timed noop-sink writes, each printing
-  * wall time with its job and stage counts, plus one line per stage
-  * slower than 0.3 s; `reps = 0` prints the formatted physical plan
-  * instead. A failing query is logged and the run goes on. */
+  * wall time with its job and stage counts and the number of classes
+  * Spark compiled for it (a warm rep that compiles any shows a codegen
+  * working set past the codegen cache, or code that differs per run),
+  * plus one line per stage slower than 0.3 s; `reps = 0` prints the
+  * formatted physical plan instead. A failing query is logged and the run goes on. */
 object Dev {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -44,6 +47,7 @@ object Dev {
         (1 to reps).foreach { i =>
           Bridge.drainListeners(spark)
           jobs.set(0); stages.set(0)
+          val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           // noop write, NOT count(): count lets Catalyst eliminate
           // row-preserving joins/projections and time a hollowed-out plan
@@ -51,7 +55,8 @@ object Dev {
           val wall = (System.nanoTime() - t0) / 1e9
           Bridge.drainListeners(spark)
           println(f"[dev] $name rep $i: $wall%.2f s" +
-            s" jobs=${jobs.get} stages=${stages.get}")
+            s" jobs=${jobs.get} stages=${stages.get} classes=" +
+            (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0))
         }
       } catch { case e: Throwable =>
         println(s"[dev] $name FAILED: ${e.getMessage}")

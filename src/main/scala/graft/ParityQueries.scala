@@ -330,7 +330,7 @@ object ParityQueries {
     "transform_chain_full",
     (s, d) => {
       // single-split scan → spread the narrow base so BOTH Transform
-      // passes (fused stats + final projection: multi-format date
+      // passes (cache fill + final projection: multi-format date
       // parses, regex scrubs) run wide instead of on the scan's 1-2
       // tasks (the amazonE2e/intlRaw shape; measured r14)
       val derived = Tables.orders(s, d)

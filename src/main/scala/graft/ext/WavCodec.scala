@@ -39,7 +39,10 @@ object WavCodec {
 
   /** NAIVE DECIMATION (no anti-alias low-pass): keep every `factor`-th
     * sample and re-encode at rate/factor, so
-    * decode(downsample(x, f))[i] ≡ decode(x)[f·i]. */
+    * decode(downsample(x, f))[i] ≡ decode(x)[f·i]. NULL for a payload
+    * that is not a valid WAV, and NULL when rate/factor·2 (the header's
+    * byte rate) exceeds `Int.MaxValue`: such a row has no valid
+    * re-encoding, and it must not fail the query. */
   def downsample(payload: Column, factor: Int): Column = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     MediaCodec("wav", "downsample", factor, payload)

@@ -287,10 +287,11 @@ object MediaCodec {
     case ("features", a: Audio) =>
       cells(dense(a.samples.map(math.abs)), 4, 32768.0, 0.0)
     case ("downsample", a: Audio) =>
+      // a rate whose byte rate (rate·2) overflows the header field has
+      // no valid re-encoding: NULL, as for an undecodable payload
       val rate = (a.rate.toDouble / k).toLong
-      if (rate > Int.MaxValue / 2) throw new ArithmeticException(
-        s"downsample: rate $rate overflows the header")
-      wavBytes(a.samples.indices.collect { case i if i % k == 0 =>
+      if (rate > Int.MaxValue / 2) null
+      else wavBytes(a.samples.indices.collect { case i if i % k == 0 =>
         a.samples(i) }, rate)
     case ("features", Opaque) =>
       new GenericArrayData(md5Features(b).map(d => d: Any))

@@ -9,12 +9,13 @@ import org.apache.spark.storage.StorageLevel
 /** Deterministic lifetime for mid-pipeline caches.
   *
   * Operators that must materialize statistics before building their final
-  * plan (e.g. [[Transform]]'s fused stats pass) persist their input so the
-  * caller's action does not recompute the upstream lineage. But a bare
-  * `persist` with no matching `unpersist` leaks storage: invoked per
-  * micro-batch (StreamPipeline) or per bench rep, cached blocks accumulate
-  * until GC-driven cleanup happens to run — unbounded memory/disk growth
-  * under sustained load, and eviction thrash under storage pressure.
+  * plan (e.g. [[graft.pipeline.Transform]]'s column decisions, read from
+  * its cache fill) persist their input so the caller's action does not
+  * recompute the upstream lineage. But a bare `persist` with no matching
+  * `unpersist` leaks storage: invoked per micro-batch (StreamPipeline) or
+  * per bench rep, cached blocks accumulate until GC-driven cleanup happens
+  * to run — unbounded memory/disk growth under sustained load, and
+  * eviction thrash under storage pressure.
   *
   * This registry makes release explicit: operators register through
   * [[persist]], and every driver-side consumer calls [[releaseAll]] once
@@ -62,18 +63,22 @@ object CacheScope {
 
   /** P7 — empty-input guard (ecommerce_s3_to_pg.py:430-432), decided
     * once per scope. The first call persists `df` (as [[persist]] does)
-    * and fills that cache in one job, which also counts its rows: the
-    * answer costs no job beyond the cache fill every later consumer
-    * needs, and no limit operator (a `limit` plan compiles fresh code on
-    * every call — Spark names each limit's counter from a JVM-wide
-    * sequence). The answer is recorded with the frame; later calls on
-    * the same frame object read it until [[releaseAll]] (or a
+    * and fills that cache in one job ([[Bridge.fillCache]], the one fill
+    * path), which also counts its rows: the answer costs no job beyond
+    * the cache fill every later consumer needs, and no limit operator (a
+    * `limit` plan compiles fresh code on every call — Spark names each
+    * limit's counter from a JVM-wide sequence). The fill runs under the
+    * session's SQL confs and job-artifact state, as the session's queries
+    * do, so the cached plan's generated classes are compiled once for
+    * the session's executor class loader and hit Spark's codegen cache on
+    * the next invocation. The answer is recorded with the frame; later
+    * calls on the same frame object read it until [[releaseAll]] (or a
     * [[releaseSince]] that frees the frame). */
   def isEmpty(df: DataFrame): Boolean = {
     val known = emptiness.get.get(df)
     if (known != null) known.booleanValue
     else {
-      val empty = Bridge.fillCache(persist(df)) == 0
+      val empty = Bridge.fillCache(persist(df)).rows == 0
       emptiness.get.put(df, empty)
       empty
     }

@@ -109,11 +109,6 @@ object ScalarFns {
     element_at(m, lower(strip(c.cast("string"))).substr(1, 3))
   }
 
-  /** F5 parseability probe used to pick the strategy — column-level, one
-    * aggregate (ecommerce_s3_to_pg.py:160 `.notna().any()`). */
-  def monthParseableCount(c: Column): Column =
-    count(monthFromDatetime(c))
-
   /** F6 — currency scrub: strip `[$,() \s]`, try-cast to double
     * (ecommerce_s3_to_pg.py:177-178). Adoption (the >90% rule) is decided
     * from stats by [[graft.pipeline.Transform]]; `round(2)` on adopt. */

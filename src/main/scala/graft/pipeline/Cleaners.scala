@@ -64,9 +64,9 @@ object Cleaners {
 
   /** Single-part entry points for consumers that materialize only one
     * side (the two e2e registry queries): building a part's Transform
-    * costs a distributed stats action at CONSTRUCTION time, so the old
-    * `international(df)._2` paid part 1's full stats pass (plus its
-    * scope-cache fill) for a frame it never read. Identical lineage for
+    * costs its scope-cache fill (the job its decisions are read from)
+    * at CONSTRUCTION time, so the old `international(df)._2` paid part
+    * 1's fill for a frame it never read. Identical lineage for
     * the requested part — the shared prepared/O1 front half is built the
     * same way, only the sibling's Transform is skipped. */
   def internationalPart1(df0: DataFrame): DataFrame =
@@ -83,8 +83,8 @@ object Cleaners {
 
     val dataCols = indexed.columns.filterNot(_ == idx).toSeq
     // Persisted (scope-released): the O1 split takes two driver actions
-    // (pivot min + pivot row) and each part's Transform takes a stats
-    // action — without the cache the D1 dedup shuffle would re-execute
+    // (pivot min + pivot row) and each part's Transform fills its own
+    // cache from it — without the cache the D1 dedup shuffle would re-execute
     // for every one of those five consumers.
     val prepared = CacheScope.persist(indexed
       .transform(Dedup.dropDuplicateRowsKeepingFirst(dataCols, idx)) // D1

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StringType
 
 import graft.ops.{qcol, CacheScope, Projections, ScalarFns}
@@ -19,17 +20,20 @@ import graft.ops.{qcol, CacheScope, Projections, ScalarFns}
   *  e. A5 drop all-null columns
   *
   * The data-dependent decisions (F5 strategy, F6 adoption, A5 drop) cannot
-  * be one lazy plan — but they CAN be one distributed aggregate: the fused
-  * stats pass below computes, per column, the counts for EVERY possible
-  * outcome (datetime-parseable months AND prefix-mapped months, adopted
-  * numerics AND kept-string survivors), so strategy pick, adoption, and
-  * the A5 column drop all resolve from a single tiny driver-side row.
-  * One stats action + the caller's action = exactly two passes over the
-  * input, which is persisted (memory-then-disk) across them so upstream
-  * shuffles (e.g. a preceding dedup) never re-execute. The cache is
-  * registered with [[CacheScope]] — callers release it deterministically
-  * after their materializing action, so per-micro-batch / per-rep
-  * invocations never accumulate storage.
+  * be one lazy plan, but they need nothing beyond per-column non-NULL
+  * counts: the input is persisted (memory-then-disk) with, per column,
+  * the candidate value of EVERY possible outcome (datetime-parseable
+  * months AND prefix-mapped months, adopted numerics AND kept-string
+  * survivors), and the cache fill carries the counts. The one job that
+  * fills that cache ([[Bridge.fillCache]]) sums the row count and each
+  * column's non-NULL count from the statistics the cached batches keep
+  * anyway, so strategy pick, adoption and the A5 column drop resolve
+  * with no aggregate of their own. The fill + the caller's action =
+  * exactly two passes, and the caller's action reads the cache, so
+  * upstream shuffles (e.g. a preceding dedup) never re-execute. The
+  * cache is registered with [[CacheScope]] — callers release it
+  * deterministically after their materializing action, so
+  * per-micro-batch / per-rep invocations never accumulate storage.
   */
 object Transform {
 
@@ -49,20 +53,14 @@ object Transform {
     val numericCandidates = baseCols
       .filter(c => stringCols.contains(c) && !dateCols.contains(c)
         && !monthCols.contains(c))
-    val passThrough = baseCols.filterNot(c =>
-      dateCols.contains(c) || monthCols.contains(c)
-        || numericCandidates.contains(c))
 
     // ---- candidate columns, computed ONCE into the scope cache ------------
     // The heavy conversion expressions (multi-format date parse, both
-    // month strategies, numeric scrub, stripped-sentinel survivor) used
-    // to run TWICE over the input — once inside the stats aggregate and
-    // again in the final projection (r14's two cheapest benched stages).
-    // Precomputing them as extra cached columns evaluates each exactly
-    // once: the stats pass and the final projection both read the cached
-    // value. The cache row widens by the candidate columns; conversion
-    // CPU (the dominant per-pass cost — regex dispatch + real parses)
-    // halves. Helper names carry the "__cand" prefix and never escape:
+    // month strategies, numeric scrub, stripped-sentinel survivor) are
+    // extra cached columns, so each is evaluated exactly once: the cache
+    // fill counts their non-NULLs and the final projection reads the
+    // cached value. The cache row widens by the candidate columns in
+    // exchange. Helper names carry the "__cand" prefix and never escape:
     // both return branches select `baseCols` only.
     def d(c: String) = s"__cand_d_$c"
     def ma(c: String) = s"__cand_ma_$c"
@@ -80,32 +78,22 @@ object Transform {
     val df = CacheScope.persist(
       norm.select(baseCols.map(qcol) ++ candCols: _*))
 
-    // ---- the single fused stats pass --------------------------------------
-    val statAggs: Seq[Column] =
-      Seq(count(lit(1)).as("__n")) ++
-        dateCols.map(c => count(qcol(d(c))).as(s"__date_$c")) ++
-        monthCols.flatMap(c => Seq(
-          count(qcol(ma(c))).as(s"__ma_$c"),
-          count(qcol(mb(c))).as(s"__mb_$c"))) ++
-        numericCandidates.flatMap(c => Seq(
-          count(qcol(num(c))).as(s"__num_$c"),
-          count(qcol(keep(c))).as(s"__keep_$c"))) ++
-        passThrough.map(c => count(qcol(c)).as(s"__nn_$c"))
-    val stats = df.agg(statAggs.head, statAggs.tail: _*).head()
-    def stat(name: String): Long = stats.getLong(stats.fieldIndex(name))
-    val total = stat("__n")
+    // ---- the counts every decision reads, from the cache fill ------------
+    val counts = Bridge.fillCache(df)
+    val nonNull = df.columns.zip(counts.nonNull).toMap
+    val total = counts.rows
 
     // ---- resolve decisions + final non-null count per column --------------
-    def monthStrategyA(c: String): Boolean = stat(s"__ma_$c") > 0
+    def monthStrategyA(c: String): Boolean = nonNull(ma(c)) > 0
     def adopted(c: String): Boolean =
-      total > 0 && stat(s"__num_$c") > 0.9 * total
+      total > 0 && nonNull(num(c)) > 0.9 * total
     def finalNonNull(c: String): Long =
-      if (dateCols.contains(c)) stat(s"__date_$c")
+      if (dateCols.contains(c)) nonNull(d(c))
       else if (monthCols.contains(c))
-        (if (monthStrategyA(c)) stat(s"__ma_$c") else stat(s"__mb_$c"))
+        nonNull(if (monthStrategyA(c)) ma(c) else mb(c))
       else if (numericCandidates.contains(c))
-        (if (adopted(c)) stat(s"__num_$c") else stat(s"__keep_$c"))
-      else stat(s"__nn_$c")
+        nonNull(if (adopted(c)) num(c) else keep(c))
+      else nonNull(c)
 
     // ---- build the projection from the precomputed candidates -------------
     // identical values to recomputing the expressions here (same input
@@ -132,7 +120,7 @@ object Transform {
     val cleaned = ScalarFns.sentinelsToNull(
       ScalarFns.trimStringCols(projected))
 
-    // e. A5 — resolved from the same stats row (empty input: keep schema)
+    // e. A5 — resolved from the same fill counts (empty input: keep schema)
     if (total == 0) cleaned
     else cleaned.select(
       baseCols.filter(c => finalNonNull(c) > 0L).map(qcol): _*)

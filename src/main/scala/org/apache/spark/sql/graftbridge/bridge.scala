@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.columnar.CachedBatch
+import org.apache.spark.sql.columnar.{CachedBatch, SimpleMetricsCachedBatch}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.csv.TextInputCSVDataSource
 import org.apache.spark.sql.types.StructType
@@ -91,23 +91,62 @@ object Bridge {
     org.apache.spark.sql.execution.datasources.FileStatusCache
       .getOrCreate(spark.asInstanceOf[CSparkSession]).invalidateAll()
 
+  /** Row count of a filled cache, and each column's non-NULL count by
+    * its position in the frame's columns. */
+  final case class CacheCounts(rows: Long, nonNull: IndexedSeq[Long])
+
   /** Materialize the cache of a persisted frame in ONE job over every
-    * partition and return its row count, summed from the cached batches.
+    * partition and return its counts, summed from the statistics every
+    * cached batch already carries: its row count and, per column, the
+    * `(lower, upper, nullCount, count, sizeInBytes)` the in-memory
+    * columnar format keeps, so non-NULL = `count − nullCount`. Counts are
+    * read by column position, so names that need quoting never matter.
     * A later query over the frame finds the cache loaded and starts no
     * job to fill it (a query that meets an unloaded cache first runs a
-    * cache-fill job of its own, then its own job). */
-  def fillCache(df: DataFrame): Long = {
+    * cache-fill job of its own, then its own job); on a loaded cache the
+    * job reads the stored batches' statistics only.
+    *
+    * The job runs as a SQL execution runs: under the session's SQL confs
+    * (building the cached RDD already runs the cached plan's shuffle
+    * stages) and under the session's job-artifact state. Without that
+    * state the tasks would compile the cached plan's generated classes
+    * under another executor class loader than the session's queries
+    * use, and Spark's codegen cache, keyed by class loader, would hold
+    * and recompile them twice. */
+  def fillCache(df: DataFrame): CacheCounts = {
     val spark = df.sparkSession.asInstanceOf[CSparkSession]
     val relation = spark.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[CDataset[_]])
       .getOrElse(throw new IllegalArgumentException("frame is not persisted"))
       .cachedRepresentation
-    // building the cached RDD already runs the cached plan's shuffle
-    // stages, so the session's SQL confs must reach those tasks too
-    SQLExecution.withSQLConfPropagated(spark) {
-      spark.sparkContext.runJob(relation.cacheBuilder.cachedColumnBuffers,
-        (it: Iterator[CachedBatch]) => it.map(_.numRows.toLong).sum).sum
+    val width = relation.output.size
+    val perPartition = SQLExecution.withSQLConfPropagated(spark) {
+      spark.artifactManager.withResources {
+        spark.sparkContext.runJob(relation.cacheBuilder.cachedColumnBuffers,
+          (it: Iterator[CachedBatch]) => batchCounts(it, width))
+      }
     }
+    val sums = (0 to width).map(i => perPartition.iterator.map(_(i)).sum)
+    CacheCounts(sums.head, sums.tail)
+  }
+
+  /** `[rows, nonNull(0), …, nonNull(width − 1)]` of one partition's
+    * cached batches. */
+  private def batchCounts(it: Iterator[CachedBatch], width: Int): Array[Long] = {
+    val acc = new Array[Long](width + 1)
+    it.foreach {
+      case b: SimpleMetricsCachedBatch =>
+        acc(0) += b.numRows
+        var c = 0
+        while (c < width) {
+          acc(c + 1) += b.stats.getInt(5 * c + 3) - b.stats.getInt(5 * c + 2)
+          c += 1
+        }
+      case b => throw new IllegalStateException(
+        s"${b.getClass.getName} carries no column statistics; " +
+          "the cache fill needs the default cached-batch serializer")
+    }
+    acc
   }
 
   /** The CSV file source's own schema inference (`header` and

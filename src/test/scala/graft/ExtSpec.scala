@@ -583,6 +583,29 @@ class ExtSpec extends SparkSpec {
     assert(out(2L)._4 == Seq(7, 300))
   }
 
+  test("WAV downsample: a header rate whose byte rate overflows the " +
+      "header field gives NULL for that row, not a failed query") {
+    import graft.ext.WavCodec
+    // bytes 25-28 (1-based) hold the sample rate; 0xFFFFFFFF / f · 2
+    // exceeds Int.MaxValue for f = 1 and f = 2
+    val wav = WavCodec.encodeWav(col("ss"), lit(8000))
+    val df = Seq((1L, Seq(1, 2, 3), false), (2L, Seq(4, 5, 6), true))
+      .toDF("id", "ss", "huge")
+      .select(col("id"), when(col("huge"), concat(substring(wav, 1, 24),
+        unhex(lit("FFFFFFFF")), substring(wav, 29, 1 << 20))).otherwise(wav)
+        .as("wav"))
+    val out = df.select(col("id"),
+        WavCodec.isWav(col("wav")).as("valid"),
+        WavCodec.downsample(col("wav"), 1).as("d1"),
+        WavCodec.downsample(col("wav"), 2).as("d2"))
+      .select(col("id"), col("valid"), col("d1").isNull, col("d2").isNull,
+        WavCodec.samples(col("d1")), WavCodec.samples(col("d2")))
+      .as[(Long, Boolean, Boolean, Boolean, Seq[Int], Seq[Int])]
+      .collect().map(r => r._1 -> r).toMap
+    assert(out(2L) == ((2L, true, true, true, Nil, Nil)))
+    assert(out(1L) == ((1L, true, false, false, Seq(1, 2, 3), Seq(1, 3))))
+  }
+
   test("WAV VAD: islands segmentation on designed quiet/loud runs, " +
       "all-quiet clips emit nothing, partial tail frame counted") {
     import graft.ext.WavCodec

@@ -1,18 +1,16 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.app.BatchMain
 import graft.ops.CacheScope
+import graft.pipeline.{Cleaners, Transform}
 import graft.sources.CsvSource
 
-/** The handler's source and P7 guard cost a fixed set of generated
-  * classes and a fixed number of jobs: a repeated invocation compiles
-  * nothing new, and each routed file costs one job to read. */
+/** The handler's source, cleaning and P7 guard cost a fixed set of
+  * generated classes and a fixed number of jobs: a repeated invocation
+  * compiles nothing new, each routed file costs one job to read, and
+  * Transform's decisions cost only the job that fills its cache. */
 class HandlerCodegenSpec extends SparkSpec {
 
   private val fixtures = Seq(
@@ -20,30 +18,38 @@ class HandlerCodegenSpec extends SparkSpec {
     "Sale Report_2022-04-30_10-00-00.csv",
     "International Sale Report_2022-04-30_10-00-00.csv")
 
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Bridge.drainListeners(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
+  /** Runs `round` twice; the second run must compile no new class. */
+  private def assertSecondRoundCompilesNothing(round: () => Boolean): Unit = {
+    assert(!round())
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(!round())
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(again == 0, s"the second round compiled $again new classes")
   }
 
   test("a second read and P7 decision compile no new class") {
     val path = TestSpark.fixture(fixtures.head)
-    def round(): Boolean =
+    assertSecondRoundCompilesNothing { () =>
       try CacheScope.isEmpty(CsvSource.read(spark, path))
       finally CacheScope.releaseAll()
-    assert(!round())
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    assert(!round())
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
-      "the second round compiled new classes")
+    }
+  }
+
+  test("a second amazon cleaning and P7 decision compile no new class") {
+    val path = TestSpark.fixture(fixtures.head)
+    assertSecondRoundCompilesNothing { () =>
+      try CacheScope.isEmpty(
+        Cleaners.amazon(CsvSource.read(spark, path), cacheSplit = true)._1)
+      finally CacheScope.releaseAll()
+    }
+  }
+
+  test("Transform of a filled cached frame starts exactly one job") {
+    val x = CsvSource.read(spark, TestSpark.fixture(fixtures(1)))
+    try {
+      assert(!CacheScope.isEmpty(x))
+      assert(jobsDuring { Transform(x) } == 1)
+    } finally CacheScope.releaseAll()
   }
 
   test("latestPerClass: one job per routed file") {

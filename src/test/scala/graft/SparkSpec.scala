@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
@@ -29,5 +33,20 @@ abstract class SparkSpec extends AnyFunSuite {
       left = pinned
     }
     left
+  }
+
+  /** Jobs started while `body` runs. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Bridge.drainListeners(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
   }
 }
