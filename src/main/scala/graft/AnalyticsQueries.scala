@@ -1353,6 +1353,31 @@ object AnalyticsQueries {
       FROM offsets
       GROUP BY 1, 2"""))
 
+  /** The as-of queries' two sides: purchases, and clicks made unique
+    * per (user_id, ts) with the click time kept as `click_raw_ts`. */
+  private def asofSides(s: SparkSession, d: String) = {
+    val ev = Tables.events(s, d)
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"),
+        col("event_id").as("purchase_id"),
+        col("value").as("purchase_value"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max(col("event_id")).as("click_id"),
+        max_by(col("value"), col("event_id")).as("click_value"))
+      .select(col("user_id"), col("ts").as("click_raw_ts"), col("click_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
+        col("click_value"))
+    (purchases, clicks)
+  }
+
+  /** The as-of queries' output columns. */
+  private val asofSelect: DataFrame => DataFrame = df => df.select(
+    col("user_id"), col("purchase_id"),
+    date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
+    col("purchase_value"), col("click_id"), col("click_ts"),
+    col("click_value"))
+
   /** As-of join ([[graft.ops.AsofJoin]]): each purchase event joined to
     * the SAME user's most recent click at-or-before it — the canonical
     * event-attribution shape. The right side is pre-aggregated unique per
@@ -1362,23 +1387,9 @@ object AnalyticsQueries {
   val qAsof = Q(
     "q_asof_purchase_click",
     (s, d) => {
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"),
-          max_by(col("value"), col("event_id")).as("click_value"))
-        .select(col("user_id"), col("ts"), col("click_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
-          col("click_value"))
-      graft.ops.AsofJoin(purchases, clicks, Seq("user_id"), "ts", "ts")
-        .select(col("user_id"), col("purchase_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
-          col("purchase_value"), col("click_id"), col("click_ts"),
-          col("click_value"))
+      val (purchases, clicks) = asofSides(s, d)
+      asofSelect(graft.ops.AsofJoin(
+        purchases, clicks, Seq("user_id"), "ts", "click_raw_ts"))
     },
     Some("""WITH r AS (
         SELECT user_id, ts, max(event_id) AS click_id,
@@ -1402,24 +1413,9 @@ object AnalyticsQueries {
   val qAsofNative = Q(
     "q_asof_native",
     (s, d) => {
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"),
-          max_by(col("value"), col("event_id")).as("click_value"))
-        .select(col("user_id"), col("ts").as("click_raw_ts"), col("click_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
-          col("click_value"))
-      graft.plans.AsofJoinNative
-        .join(purchases, clicks, Seq("user_id"), "ts", "click_raw_ts")
-        .select(col("user_id"), col("purchase_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
-          col("purchase_value"), col("click_id"), col("click_ts"),
-          col("click_value"))
+      val (purchases, clicks) = asofSides(s, d)
+      asofSelect(graft.plans.AsofJoinNative.join(
+        purchases, clicks, Seq("user_id"), "ts", "click_raw_ts"))
     },
     Some("""WITH r AS (
         SELECT user_id, ts, max(event_id) AS click_id,
@@ -1435,28 +1431,6 @@ object AnalyticsQueries {
         l.purchase_value, r.click_id, r.click_ts, r.click_value
       FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts"""),
     bench = true)
-
-  private def asofSides(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"),
-        col("event_id").as("purchase_id"),
-        col("value").as("purchase_value"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("event_id")).as("click_id"),
-        max_by(col("value"), col("event_id")).as("click_value"))
-      .select(col("user_id"), col("ts").as("click_raw_ts"), col("click_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
-        col("click_value"))
-    (purchases, clicks)
-  }
-
-  private val asofSelect: DataFrame => DataFrame = df => df.select(
-    col("user_id"), col("purchase_id"),
-    date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
-    col("purchase_value"), col("click_id"), col("click_ts"),
-    col("click_value"))
 
   /** FORWARD as-of through the native operator: the first click at or
     * after each purchase (follow-up attribution). Oracle: DuckDB ASOF

@@ -9,13 +9,13 @@ import graft.ops.CacheScope
 import graft.pipeline.Cleaners
 import graft.sinks.{PgLoad, Sinks}
 import graft.sources.CsvSource
-import graft.streaming.StreamPipeline
 
 /** Batch driver — the `lambda_handler` equivalent (SURVEY.md §3.2):
   * list the raw landing dir (S4 mtime window + S2 name filter), route each
-  * file by name (S5), read it with encoding fallback (S3), clean per class,
-  * land cleaned CSVs (K2). Listing uses the Hadoop FileSystem API, so the
-  * same code walks file://, hdfs:// or s3a:// landing zones.
+  * file by name (S5), read it with encoding fallback (S3), clean per class
+  * ([[Cleaners.byClass]]), land cleaned CSVs (K2). Listing uses the
+  * Hadoop FileSystem API, so the same code walks file://, hdfs:// or
+  * s3a:// landing zones.
   *
   * Usage: runMain graft.app.BatchMain <rawDir> <outDir> [modifiedAfterMs]
   */
@@ -29,11 +29,12 @@ object BatchMain {
     spark.stop()
   }
 
+  /** [[runWithPg]] without its JDBC half. */
   def run(spark: SparkSession, rawDir: String, outDir: String,
       modifiedAfterMs: Option[Long]): Unit =
-    latestPerClass(spark, rawDir, modifiedAfterMs).foreach {
-      case (cls, df) => StreamPipeline.cleanAndWrite(df, cls, outDir)
-    }
+    try Sinks.writeCsvAll(Cleaners.byClass(
+      latestPerClass(spark, rawDir, modifiedAfterMs)).csvZone, outDir): Unit
+    finally CacheScope.releaseAll()
 
   /** S4 mtime window + S2 name filter + S5 routing; the reference keeps
     * one variable per class — last file of a class wins (SURVEY.md §3.2
@@ -67,22 +68,13 @@ object BatchMain {
         Sinks.upsertSql,
       insertSqlFor: (String, Seq[String]) => String = Sinks.insertSql,
       createTables: Boolean = true): Seq[String] = {
-    val byClass = latestPerClass(spark, rawDir, modifiedAfterMs)
-    val empty = spark.emptyDataFrame
     try {
-      val (amC, amF) = byClass.get(CsvSource.AmazonSale)
-        .map(Cleaners.amazon(_, cacheSplit = true)).getOrElse((empty, empty))
-      val sa = byClass.get(CsvSource.PlainSale)
-        .map(Cleaners.sale).getOrElse(empty)
-      val (i1, i2) = byClass.get(CsvSource.InternationalSale)
-        .map(Cleaners.international).getOrElse((empty, empty))
+      val c = Cleaners.byClass(latestPerClass(spark, rawDir, modifiedAfterMs))
       // load_to_s3: K2 cleaned-CSV zone with the P7/P8 guards
-      Sinks.writeCsvAll(Seq(
-        "amazon_sale" -> amC, "amazon_sale_duplicates" -> amF,
-        "sale" -> sa, "international_1" -> i1, "international_2" -> i2),
-        outDir)
+      Sinks.writeCsvAll(c.csvZone, outDir)
       // load_to_pg: the assembled five-frame load
-      PgLoad.loadAll(amC, amF, sa, i1, i2, loadedAt, connect,
+      PgLoad.loadAll(c.amazonClean, c.amazonDuplicates, c.sale,
+        c.international1, c.international2, loadedAt, connect,
         upsertSqlFor, insertSqlFor, createTables)
     } finally CacheScope.releaseAll()
   }

@@ -34,9 +34,9 @@ object CacheScope {
   private val active =
     ThreadLocal.withInitial[ArrayDeque[DataFrame]](() => new ArrayDeque())
 
-  /** This thread's P7 answers, by frame identity, until [[releaseAll]]. */
-  private val emptiness = ThreadLocal.withInitial[
-    IdentityHashMap[DataFrame, java.lang.Boolean]](() => new IdentityHashMap())
+  /** This thread's fill counts, by frame identity, until [[releaseAll]]. */
+  private val fills = ThreadLocal.withInitial[
+    IdentityHashMap[DataFrame, Bridge.CacheCounts]](() => new IdentityHashMap())
 
   /** Persist `df` (memory-then-disk) and register it for the next
     * [[releaseAll]]. If an identical plan is already cached (e.g. a caller
@@ -61,28 +61,32 @@ object CacheScope {
     df
   }
 
-  /** P7 — empty-input guard (ecommerce_s3_to_pg.py:430-432), decided
-    * once per scope. The first call persists `df` (as [[persist]] does)
-    * and fills that cache in one job ([[Bridge.fillCache]], the one fill
-    * path), which also counts its rows: the answer costs no job beyond
-    * the cache fill every later consumer needs, and no limit operator (a
+  /** The row count and per-column non-NULL counts of `df`, decided once
+    * per scope. The first call persists `df` (as [[persist]] does) and
+    * fills that cache in one job ([[Bridge.fillCache]], the one fill
+    * path), which counts as it fills: the answer costs no job beyond the
+    * cache fill every later consumer needs, and no limit operator (a
     * `limit` plan compiles fresh code on every call — Spark names each
     * limit's counter from a JVM-wide sequence). The fill runs under the
     * session's SQL confs and job-artifact state, as the session's queries
     * do, so the cached plan's generated classes are compiled once for
     * the session's executor class loader and hit Spark's codegen cache on
-    * the next invocation. The answer is recorded with the frame; later
-    * calls on the same frame object read it until [[releaseAll]] (or a
+    * the next invocation. The counts are recorded with the frame; later
+    * calls on the same frame object read them until [[releaseAll]] (or a
     * [[releaseSince]] that frees the frame). */
-  def isEmpty(df: DataFrame): Boolean = {
-    val known = emptiness.get.get(df)
-    if (known != null) known.booleanValue
+  def counts(df: DataFrame): Bridge.CacheCounts = {
+    val known = fills.get.get(df)
+    if (known != null) known
     else {
-      val empty = Bridge.fillCache(persist(df)).rows == 0
-      emptiness.get.put(df, empty)
-      empty
+      val c = Bridge.fillCache(persist(df))
+      fills.get.put(df, c)
+      c
     }
   }
+
+  /** P7 — empty-input guard (ecommerce_s3_to_pg.py:430-432): the row
+    * count of [[counts]], so both sinks of a run share one fill. */
+  def isEmpty(df: DataFrame): Boolean = counts(df).rows == 0
 
   /** Position marker for [[releaseSince]]: the number of frames this
     * thread has registered so far. */
@@ -100,16 +104,16 @@ object CacheScope {
     val q = active.get
     while (q.size > mark) {
       val df = q.pollLast()
-      emptiness.get.remove(df)
+      fills.get.remove(df)
       release(df)
     }
   }
 
   /** Unpersist every frame registered ON THIS THREAD and forget its
-    * recorded emptiness. Idempotent; non-blocking (block deletion proceeds
+    * recorded counts. Idempotent; non-blocking (block deletion proceeds
     * asynchronously, correctness never depends on it). */
   def releaseAll(): Unit = {
-    emptiness.get.clear()
+    fills.get.clear()
     val q = active.get
     var df = q.poll()
     while (df != null) {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Declarative DATA-QUALITY CONSTRAINT suite — the dbt-test/Deequ shape:
   * a rulebook of named predicates evaluated into one violations report
   * (rule, n_checked, n_violations, violation_rate) that a load gate can
-  * threshold on. Complements the pipeline's inline DQ counters
-  * ([[Profiling.withQualityCounters]], which rides a write): this is
-  * the standalone audit pass over landed tables.
+  * threshold on. Complements the cleaned-CSV sink's `[dq]` line
+  * ([[graft.sinks.Sinks.writeCsvAll]], read from the cache fill's
+  * counts): this is the standalone audit pass over landed tables.
   *
   * Scale: ALL single-table rules over one frame fold into ONE wide
   * aggregate (one scan however many rules — each rule is a conditional

@@ -37,24 +37,6 @@ object Profiling {
     df.select(keep.map(qcol).toSeq: _*)
   }
 
-  /** One-pass data-quality counters that ride the NEXT action on the
-    * returned frame (Spark's `observe` / `Observation` API): row count
-    * plus per-critical-column null counts are accumulated inside the
-    * same job that writes/sinks the data — ZERO extra scans, unlike a
-    * separate `nullCounts` action. The load-then-audit pattern at
-    * 100 TB: the write pays for the metrics.
-    *
-    * Call `observation.get` only AFTER an action has run on the
-    * returned frame (it blocks until the metrics arrive). */
-  def withQualityCounters(df: DataFrame, criticalCols: Seq[String])
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = count(lit(1)).as("n_rows") +:
-      criticalCols.map(c =>
-        sum(qcol(c).isNull.cast("long")).as(s"nulls_$c"))
-    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
-  }
-
   /** A1 — profiling summary with `df.describe(include='all')` parity
     * (`inspect_df`, ecommerce_s3_to_pg.py:31-43): per column, count /
     * nulls / distinct and min/max rendered as strings (one schema fits

@@ -1,14 +1,49 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{CacheScope, Dedup, OrderedSplit, Projections, ScalarFns}
+import graft.sources.CsvSource
 
 /** The three per-class cleaning pipelines (SURVEY.md §3.2-3.3), stage
   * orders exactly as the reference runs them.
   */
 object Cleaners {
+
+  /** The five cleaned frames of one handler invocation, in the
+    * reference's load order. A class the invocation did not route
+    * leaves its frames empty. */
+  final case class Cleaned(amazonClean: DataFrame,
+      amazonDuplicates: DataFrame, sale: DataFrame,
+      international1: DataFrame, international2: DataFrame) {
+
+    /** `load_to_s3`'s (folder, frame) pairs, in reference order. */
+    def csvZone: Seq[(String, DataFrame)] = Seq(
+      "amazon_sale" -> amazonClean, "amazon_sale_duplicates" -> amazonDuplicates,
+      "sale" -> sale, "international_1" -> international1,
+      "international_2" -> international2)
+  }
+
+  /** The class dispatch (`lambda_handler`, ecommerce_s3_to_pg.py:688-741):
+    * each routed class through its cleaner, amazon then sale then
+    * international, as the reference runs them. The batch, batch+JDBC
+    * and streaming drivers all clean through here. `international` is
+    * the international cleaner: the streaming driver passes a per-file
+    * split of it, since a micro-batch may hold several files and the
+    * embedded-header split is positional within one file. */
+  def byClass(frames: Map[CsvSource.FileClass, DataFrame],
+      international: DataFrame => (DataFrame, DataFrame) =
+        Cleaners.international): Cleaned = {
+    val empty = frames.valuesIterator.nextOption()
+      .fold(SparkSession.active)(_.sparkSession).emptyDataFrame
+    val (amC, amF) = frames.get(CsvSource.AmazonSale)
+      .map(amazon(_, cacheSplit = true)).getOrElse((empty, empty))
+    val sa = frames.get(CsvSource.PlainSale).map(sale).getOrElse(empty)
+    val (i1, i2) = frames.get(CsvSource.InternationalSale)
+      .map(international).getOrElse((empty, empty))
+    Cleaned(amC, amF, sa, i1, i2)
+  }
 
   /** `clean_amazon_sale` (ecommerce_s3_to_pg.py:216-296) →
     * (clean, flaggedDuplicates). Pass `cacheSplit = true` when BOTH

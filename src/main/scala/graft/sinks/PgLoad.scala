@@ -21,6 +21,9 @@ import graft.ops.{qcol, CacheScope, ScalarFns}
   *  5. international part2 → same with `data_source='part2'` (:603-619)
   *
   * Empty frames are skipped like the reference's `if not df.empty` guards.
+  * That list — target, conflict columns, typing — is written once
+  * (`frameLoads`), and both [[loadAll]] and [[loadAllStaged]] iterate it;
+  * they differ only in how a frame reaches its target.
   *
   * Transaction semantics (K6): [[loadAll]] writes each frame with
   * per-partition transactions — retry-safe through the idempotent upsert
@@ -212,11 +215,33 @@ object PgLoad {
 
   // ---- the load orchestration ------------------------------------------
 
-  /** One full load run (K3+K4+K5+F10): DDL, then the five frames in
-    * reference order. Returns the target tables actually written (empty
-    * frames skipped). Emptiness comes from [[CacheScope.isEmpty]]: a frame
-    * [[Sinks.writeCsvAll]] already decided is not probed again, and is
-    * read from the cache that decision filled. Per-partition transactions;
+  /** The five-frame load list both load paths iterate: `(target,
+    * conflictCols, prepared frame)` in reference order, for each cleaned
+    * frame that is not empty. Emptiness is decided on the CLEANED frame
+    * through [[CacheScope.isEmpty]]: a frame [[Sinks.writeCsvAll]]
+    * already decided is not probed again, each write reads the cleaned
+    * frame's scope cache, and no typed, stamped frame is persisted. */
+  private def frameLoads(amazonClean: DataFrame, amazonFlagged: DataFrame,
+      sale: DataFrame, international1: DataFrame, international2: DataFrame,
+      loadedAt: Timestamp): Seq[(String, Seq[String], DataFrame)] =
+    Seq[(String, Seq[String], DataFrame, DataFrame => DataFrame)](
+      ("amazon_sale", Seq("order_id", "date"), amazonClean,
+        prepareStamped(_, loadedAt)),
+      ("amazon_sale_version", Nil, amazonFlagged, prepareStamped(_, loadedAt)),
+      ("sale", Nil, sale, prepareStamped(_, loadedAt,
+        Map("stock" -> IntegerType, "loaded_at" -> TimestampType))),
+      ("international_sales", Nil, international1,
+        prepareInternational(_, "part1", loadedAt)),
+      ("international_sales", Nil, international2,
+        prepareInternational(_, "part2", loadedAt))
+    ).collect { case (target, cc, df, prepare) if !CacheScope.isEmpty(df) =>
+      (target, cc, prepare(df))
+    }
+
+  /** One full load run (K3+K4+K5+F10): DDL, then the `frameLoads` list,
+    * `amazon_sale` through `upsertSqlFor` (its conflict columns), every
+    * other target through `insertSqlFor`. Returns the target tables
+    * actually written (empty frames skipped). Per-partition transactions;
     * see [[loadAllStaged]] for single-commit semantics. */
   def loadAll(
       amazonClean: DataFrame,
@@ -231,36 +256,18 @@ object PgLoad {
       createTables: Boolean = true,
       batchSize: Int = 1000): Seq[String] = {
     if (createTables) runDdl(connect)
-    val written = Seq.newBuilder[String]
-
-    def insertInto(table: String, df: DataFrame): Unit = {
-      Sinks.writePartitions(df, insertSqlFor(table, df.columns.toSeq),
+    val written = frameLoads(amazonClean, amazonFlagged, sale,
+      international1, international2, loadedAt).map { case (target, cc, df) =>
+      val cols = df.columns.toSeq
+      Sinks.writePartitions(df,
+        if (cc.isEmpty) insertSqlFor(target, cols)
+        else upsertSqlFor(target, cols, cc),
         connect, batchSize)
-      written += table
+      target
     }
-
-    if (!CacheScope.isEmpty(amazonClean)) {
-      val df = prepareStamped(amazonClean, loadedAt)
-      Sinks.writePartitions(
-        df,
-        upsertSqlFor("amazon_sale", df.columns.toSeq, Seq("order_id", "date")),
-        connect, batchSize)
-      written += "amazon_sale"
-    }
-    if (!CacheScope.isEmpty(amazonFlagged))
-      insertInto("amazon_sale_version", prepareStamped(amazonFlagged, loadedAt))
-    if (!CacheScope.isEmpty(sale))
-      insertInto("sale", prepareStamped(sale, loadedAt,
-        Map("stock" -> IntegerType, "loaded_at" -> TimestampType)))
-    if (!CacheScope.isEmpty(international1))
-      insertInto("international_sales",
-        prepareInternational(international1, "part1", loadedAt))
-    if (!CacheScope.isEmpty(international2))
-      insertInto("international_sales",
-        prepareInternational(international2, "part2", loadedAt))
     // distinct: both international parts target one table, and
-    // loadAllStaged already reports it once — keep the contracts equal
-    written.result().distinct
+    // loadAllStaged reports it once too — keep the contracts equal
+    written.distinct
   }
 
   // ---- K6: single-transaction variant ----------------------------------
@@ -378,22 +385,8 @@ object PgLoad {
     if ((ledgerKey.toSeq ++ legacyLedgerKeys)
       .exists(ledgerHas(connect, _))) return Nil
 
-    // (target, conflictCols, prepared frame), reference order. The
-    // emptiness decision persists each frame (CacheScope — released by
-    // the caller's per-batch releaseAll), so the stage write reads the
-    // cache the deciding job filled instead of executing the full
-    // cleaning lineage a second time per micro-batch.
-    val loads: Seq[(String, Seq[String], DataFrame)] = Seq(
-      ("amazon_sale", Seq("order_id", "date"),
-        prepareStamped(amazonClean, loadedAt)),
-      ("amazon_sale_version", Nil, prepareStamped(amazonFlagged, loadedAt)),
-      ("sale", Nil, prepareStamped(sale, loadedAt,
-        Map("stock" -> IntegerType, "loaded_at" -> TimestampType))),
-      ("international_sales", Nil,
-        prepareInternational(international1, "part1", loadedAt)),
-      ("international_sales", Nil,
-        prepareInternational(international2, "part2", loadedAt))
-    ).filter { case (_, _, df) => !CacheScope.isEmpty(df) }
+    val loads = frameLoads(amazonClean, amazonFlagged, sale,
+      international1, international2, loadedAt)
     // a target missing from loadTargets would mint stage names the
     // sweep pattern never matches — orphans would accumulate silently
     require(loads.forall(l => loadTargets.contains(l._1)),

@@ -31,20 +31,32 @@ object Sinks {
     * (`load_to_s3`, ecommerce_s3_to_pg.py:637-685): a DataFrame OBJECT
     * already written under another name is skipped — reference `id(df)`
     * set semantics, i.e. reference identity, not value equality. Returns
-    * the names actually written. Emptiness is decided through
-    * [[graft.ops.CacheScope.isEmpty]], which persists each frame: a later
-    * sink of the same run ([[PgLoad.loadAll]]) reads the cache and the
-    * recorded answer, and the caller ends the run with `releaseAll`. */
+    * the names actually written. Emptiness is the row count of
+    * [[graft.ops.CacheScope.counts]], which persists and fills each
+    * frame: a later sink of the same run ([[PgLoad.loadAll]]) reads the
+    * cache and the recorded answer, and the caller ends the run with
+    * `releaseAll`. Each written frame gets one `[dq]` line on stderr from
+    * the same fill's counts — `n_rows` and each column's `nulls_<c>` — at
+    * no job: a non-zero null count in a column P5 made critical is a
+    * cleaner-regression alarm. */
   def writeCsvAll(tables: Seq[(String, DataFrame)], outDir: String): Seq[String] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
     tables.flatMap { case (name, df) =>
-      if (df == null || seen.contains(df)
-          || graft.ops.CacheScope.isEmpty(df)) None
+      if (df == null || seen.contains(df)) None
       else {
-        seen.add(df)
-        writeCsv(df, s"$outDir/$name")
-        Some(name)
+        val counts = graft.ops.CacheScope.counts(df)
+        if (counts.rows == 0) None
+        else {
+          seen.add(df)
+          val path = s"$outDir/$name"
+          writeCsv(df, path)
+          System.err.println(s"[dq] $path n_rows=${counts.rows} " +
+            df.columns.zip(counts.nonNull)
+              .map { case (c, nn) => s"nulls_$c=${counts.rows - nn}" }
+              .mkString(" "))
+          Some(name)
+        }
       }
     }
   }
@@ -197,29 +209,8 @@ object Sinks {
       df: DataFrame,
       sql: String,
       connect: () => Connection,
-      batchSize: Int = 1000): Unit = {
-    val columns = df.columns.toSeq
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn = connect()
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
-          var i = 0
-          rows.foreach { row =>
-            columns.indices.foreach(j => st.setObject(j + 1, row.get(j)))
-            st.addBatch()
-            i += 1
-            if (i % batchSize == 0) st.executeBatch()
-          }
-          st.executeBatch()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally conn.close()
-      }
-    }
-  }
+      batchSize: Int = 1000): Unit =
+    writeBatched(df, sql, None, connect, batchSize)
 
   /** Stage-table writer that stays correct under Spark TASK RETRY:
     * foreachPartition commits per partition, so a task that dies AFTER
@@ -245,20 +236,35 @@ object Sinks {
       s"INSERT INTO ${q(stageTable)} (${columns.map(q).mkString(", ")}, " +
         s"${q("__part")}) VALUES (${columns.map(_ => "?").mkString(", ")}, ?)"
     val delete = s"DELETE FROM ${q(stageTable)} WHERE ${q("__part")} = ?"
+    writeBatched(df, insert, Some(delete), connect, batchSize)
+  }
+
+  /** The one executor-side JDBC loop: each non-empty partition opens one
+    * connection and one transaction, binds every row's columns in order
+    * to `sql` in batches of `batchSize`, and commits; any failure rolls
+    * the partition back. With `deleteByPart`, the partition id is bound
+    * as one more trailing parameter of every row, and `deleteByPart`
+    * (one `?`, the partition id) runs first in the same transaction. */
+  private def writeBatched(df: DataFrame, sql: String,
+      deleteByPart: Option[String], connect: () => Connection,
+      batchSize: Int): Unit = {
+    val width = df.columns.length
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.nonEmpty) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val conn = connect()
         try {
           conn.setAutoCommit(false)
-          val del = conn.prepareStatement(delete)
-          try { del.setInt(1, pid); del.executeUpdate(); () }
-          finally del.close()
-          val st = conn.prepareStatement(insert)
+          deleteByPart.foreach { delete =>
+            val del = conn.prepareStatement(delete)
+            try { del.setInt(1, pid); del.executeUpdate(); () }
+            finally del.close()
+          }
+          val st = conn.prepareStatement(sql)
           var i = 0
           rows.foreach { row =>
-            columns.indices.foreach(j => st.setObject(j + 1, row.get(j)))
-            st.setInt(columns.size + 1, pid)
+            (0 until width).foreach(j => st.setObject(j + 1, row.get(j)))
+            if (deleteByPart.isDefined) st.setInt(width + 1, pid)
             st.addBatch()
             i += 1
             if (i % batchSize == 0) st.executeBatch()

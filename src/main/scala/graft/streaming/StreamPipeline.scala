@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.CacheScope
 import graft.pipeline.Cleaners
-import graft.sinks.Sinks
+import graft.sinks.{PgLoad, Sinks}
 import graft.sources.CsvSource
 
 /** Structured Streaming variant of the reference's event-driven micro-batch
@@ -23,6 +24,10 @@ import graft.sources.CsvSource
   * A file-source stream has ONE fixed schema, so each report class runs as
   * its own stream with a class glob (`Amazon*.csv`, …) — the production
   * shape for heterogeneous landing dirs; S5 routing becomes the glob.
+  * Each micro-batch then takes the batch handler's own path: the class
+  * dispatch [[Cleaners.byClass]], then [[Sinks.writeCsvAll]]
+  * ([[cleanClassStream]]) or [[PgLoad.loadAllStaged]]
+  * ([[loadClassStream]]).
   */
 object StreamPipeline {
 
@@ -61,7 +66,9 @@ object StreamPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cleanAndWrite(batch, cls, s"$outDir/run_$sid/batch_$batchId")
+        try Sinks.writeCsvAll(cleanBatch(batch, cls).csvZone,
+          s"$outDir/run_$sid/batch_$batchId"): Unit
+        finally CacheScope.releaseAll() // per-batch: no leak
       }
       .start()
   }
@@ -105,103 +112,38 @@ object StreamPipeline {
     * within one file, but a file-source micro-batch may concatenate
     * several files — the global first all-alphabetic row would then
     * re-header every file with file 1's embedded header. Split the batch
-    * per source file, clean each alone, and union the parts
+    * per source file, `clean` each alone, and union the parts
     * (allowMissingColumns: files of the same class share a layout, but a
     * drifted column falls back to O2-style null padding instead of an
     * error). Non-file inputs (tests, memory streams) have a single empty
     * file name and take the direct path. */
-  private def internationalParts(df: DataFrame): (DataFrame, DataFrame) = {
+  private def perSourceFile(clean: DataFrame => (DataFrame, DataFrame))(
+      df: DataFrame): (DataFrame, DataFrame) = {
     val files = df.select(input_file_name().as("__f")).distinct()
       .collect().map(_.getString(0)).sorted
-    if (files.length <= 1) Cleaners.international(df)
+    if (files.length <= 1) clean(df)
     else {
       val parts = files.toSeq.map(fn =>
-        Cleaners.international(df.filter(input_file_name() === fn)))
+        clean(df.filter(input_file_name() === fn)))
       (parts.map(_._1).reduce(_.unionByName(_, allowMissingColumns = true)),
         parts.map(_._2).reduce(_.unionByName(_, allowMissingColumns = true)))
     }
   }
 
-  /** Class dispatch → cleaner → cleaned-CSV sinks (K2). Shared by the
-    * streaming foreachBatch and the batch driver. Every sink carries the
-    * reference's if-not-empty guard (P7) — no phantom empty table dirs. */
-  def cleanAndWrite(df: DataFrame, cls: CsvSource.FileClass,
-      outDir: String): Unit = try {
-    // post-clean audit counters ride the CSV write itself
-    // (Profiling.withQualityCounters — observe metrics, zero extra scan);
-    // null counts in cleaned-critical columns should be 0 after P5, so a
-    // non-zero count in this log line is a cleaner-regression alarm
-    def writeNonEmpty(frame: DataFrame, path: String,
-        critical: Seq[String] = Nil): Unit = {
-      // the emptiness decision persists the frame, so the CSV write reads
-      // the cache the deciding job filled instead of executing the full
-      // cleaning lineage again; released by this method's own finally
-      // releaseAll
-      if (!graft.ops.CacheScope.isEmpty(frame)) {
-        val (observed, obs) = graft.ops.Profiling.withQualityCounters(
-          frame, critical.filter(frame.columns.contains))
-        Sinks.writeCsv(observed, path)
-        System.err.println(s"[dq] $path ${obs.get.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k=$v" }.mkString(" ")}")
-      }
-    }
-    cls match {
-      case CsvSource.AmazonSale =>
-        val (clean, flagged) = Cleaners.amazon(df, cacheSplit = true)
-        writeNonEmpty(clean, s"$outDir/amazon_sale",
-          critical = Seq("order_id", "amount", "date"))
-        writeNonEmpty(flagged, s"$outDir/amazon_sale_duplicates")
-      case CsvSource.PlainSale =>
-        writeNonEmpty(Cleaners.sale(df), s"$outDir/sale")
-      case CsvSource.InternationalSale =>
-        val (p1, p2) = internationalParts(df)
-        writeNonEmpty(p1, s"$outDir/international_1")
-        writeNonEmpty(p2, s"$outDir/international_2")
-      case CsvSource.Unrecognized => () // reference skips (:721-722)
-    }
-  } finally graft.ops.CacheScope.releaseAll() // per-batch: no leak
-
-  /** Class dispatch → cleaner → the STAGED Postgres load (K3-K6) for one
-    * micro-batch — the streaming twin of [[graft.app.BatchMain.runWithPg]]'s
-    * sink half. Frames for the other classes are empty; loadAllStaged
-    * skips them. `ledgerKey` makes the batch's visible effect
-    * exactly-once — see [[graft.sinks.PgLoad.loadAllStaged]]. */
-  def cleanAndLoad(
-      df: DataFrame, cls: CsvSource.FileClass,
-      connect: () => java.sql.Connection, loadedAt: java.sql.Timestamp,
-      promoteSqlFor: (String, String, Seq[String], Seq[String]) => String =
-        graft.sinks.PgLoad.promoteSql,
-      createTables: Boolean = false,
-      runTag: String = "",
-      ledgerKey: Option[String] = None,
-      legacyLedgerKeys: Seq[String] = Nil): Seq[String] = try {
-    val empty = df.sparkSession.emptyDataFrame
-    def load(amC: DataFrame, amF: DataFrame, sa: DataFrame,
-        i1: DataFrame, i2: DataFrame) =
-      graft.sinks.PgLoad.loadAllStaged(amC, amF, sa, i1, i2, loadedAt,
-        connect, promoteSqlFor, createTables, runTag = runTag,
-        ledgerKey = ledgerKey, legacyLedgerKeys = legacyLedgerKeys)
-    cls match {
-      case CsvSource.AmazonSale =>
-        val (clean, flagged) = Cleaners.amazon(df, cacheSplit = true)
-        load(clean, flagged, empty, empty, empty)
-      case CsvSource.PlainSale =>
-        load(empty, empty, Cleaners.sale(df), empty, empty)
-      case CsvSource.InternationalSale =>
-        val (p1, p2) = internationalParts(df)
-        load(empty, empty, empty, p1, p2)
-      case CsvSource.Unrecognized => Nil
-    }
-  } finally graft.ops.CacheScope.releaseAll()
+  /** One micro-batch of one class through the handler's class dispatch,
+    * the international cleaner split per source file. */
+  private def cleanBatch(batch: DataFrame,
+      cls: CsvSource.FileClass): Cleaners.Cleaned =
+    Cleaners.byClass(Map(cls -> batch), perSourceFile(Cleaners.international))
 
   /** Stream one report class into Postgres, exactly-once: foreachBatch
     * is at-least-once (a batch can replay after a mid-batch crash or on
-    * redelivery), so each batch promotes through [[cleanAndLoad]]'s
-    * staged single-transaction path claiming ledger key `<class>#<id>` —
-    * a replayed already-committed batch is a no-op even for the
-    * append-only tables, strictly stronger than the reference's
-    * ON CONFLICT-only mitigation (README.md:119-127). `loadedAtFor`
-    * keeps the F10 stamp deterministic per batch.
+    * redelivery), so each batch promotes through
+    * [[PgLoad.loadAllStaged]]'s staged single-transaction path claiming
+    * ledger key `<class>#<id>` — a replayed already-committed batch is a
+    * no-op even for the append-only tables, strictly stronger than the
+    * reference's ON CONFLICT-only mitigation (README.md:119-127).
+    * `loadedAtFor` keeps the F10 stamp deterministic per batch.
     *
     * Ledger keys and stage-table names are namespaced by a hash of the
     * CHECKPOINT directory: batch ids restart at 0 whenever the
@@ -217,7 +159,7 @@ object StreamPipeline {
       connect: () => java.sql.Connection, checkpointDir: String,
       loadedAtFor: Long => java.sql.Timestamp,
       promoteSqlFor: (String, String, Seq[String], Seq[String]) => String =
-        graft.sinks.PgLoad.promoteSql,
+        PgLoad.promoteSql,
       legacyCheckpointSpellings: Seq[String] = Nil): StreamingQuery = {
     // canonicalized ([[runNamespace]]): the ledger key must be STABLE
     // across restarts — a restart that spells the same checkpoint
@@ -251,10 +193,15 @@ object StreamPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cleanAndLoad(batch, cls, connect, loadedAtFor(batchId),
-          promoteSqlFor, runTag = s"${sid}_b$batchId",
-          ledgerKey = Some(s"$cls#$sid#$batchId"),
-          legacyLedgerKeys = legacyFor(batchId)): Unit
+        try {
+          val c = cleanBatch(batch, cls)
+          PgLoad.loadAllStaged(c.amazonClean, c.amazonDuplicates, c.sale,
+            c.international1, c.international2, loadedAtFor(batchId),
+            connect, promoteSqlFor, createTables = false,
+            runTag = s"${sid}_b$batchId",
+            ledgerKey = Some(s"$cls#$sid#$batchId"),
+            legacyLedgerKeys = legacyFor(batchId)): Unit
+        } finally CacheScope.releaseAll() // per-batch: no leak
       }
       .start()
   }

@@ -717,17 +717,6 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException](AsofJoin(l, r, Seq("k"), "ts", "ts"))
   }
 
-  test("withQualityCounters: metrics ride the write action, no extra scan") {
-    import graft.ops.Profiling
-    val df = Seq((1L, Some("a")), (2L, None), (3L, Some("c")), (4L, None))
-      .toDF("id", "v")
-    val (observed, obs) = Profiling.withQualityCounters(df, Seq("v"))
-    observed.write.mode("overwrite").format("noop").save()
-    val m = obs.get
-    assert(m("n_rows") == 4L)
-    assert(m("nulls_v") == 2L)
-  }
-
   test("variant extraction: typed get, missing key → NULL, = from_json") {
     import org.apache.spark.sql.types._
     val df = Seq((1L, """{"k": 42}"""), (2L, """{"k": 0}"""),

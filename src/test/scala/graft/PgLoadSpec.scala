@@ -2,6 +2,9 @@ package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
 
+import org.apache.spark.sql.types.{IntegerType, TimestampType}
+import org.apache.spark.storage.StorageLevel
+
 import graft.sinks.{PgLoad, Sinks}
 
 /** Integration spec for the assembled Postgres load path, run against
@@ -350,6 +353,98 @@ class PgLoadSpec extends SparkSpec {
     assert(queryLong(connect, s"SELECT count(*) FROM ${q("amazon_sale")}") == 8)
     assert(queryLong(connect,
       s"SELECT count(*) FROM ${q("amazon_sale_version")}") == 2)
+  }
+
+  test("loadAllStaged decides emptiness on the cleaned frames and " +
+      "persists no prepared frame") {
+    val connect = freshDb("graftpgprep")
+    PgLoad.runDdl(connect, ddls("prep"))
+    val (am, fl, _, _, _) = fixtures
+    val empty = spark.emptyDataFrame
+    try {
+      val jobs = jobsDuring {
+        PgLoad.loadAllStaged(am, fl, empty, empty, empty, loadedAt, connect,
+          promoteSqlFor = quotedPromote, createTables = false): Unit
+      }
+      // one cache fill each for am, fl and the one empty frame, then the
+      // two stage writes; deciding on the prepared frames instead filled
+      // five caches (7 jobs)
+      assert(jobs == 5, s"loadAllStaged started $jobs jobs")
+      val sale = Map("stock" -> IntegerType, "loaded_at" -> TimestampType)
+      Seq(PgLoad.prepareStamped(am, loadedAt),
+        PgLoad.prepareStamped(fl, loadedAt),
+        PgLoad.prepareStamped(empty, loadedAt, sale),
+        PgLoad.prepareInternational(empty, "part1", loadedAt),
+        PgLoad.prepareInternational(empty, "part2", loadedAt))
+        .foreach(p => assert(p.storageLevel == StorageLevel.NONE,
+          s"prepared frame persisted: ${p.queryExecution.logical}"))
+    } finally graft.ops.CacheScope.releaseAll()
+    assert(queryLong(connect, s"SELECT count(*) FROM ${q("amazon_sale")}") == 2)
+    assert(queryLong(connect,
+      s"SELECT count(*) FROM ${q("amazon_sale_version")}") == 2)
+  }
+
+  test("batch, batch+JDBC and per-class stream drivers land the same rows") {
+    import java.nio.file.Files
+    import graft.app.BatchMain
+    import graft.sources.CsvSource
+    import graft.streaming.StreamPipeline
+    val classes = Seq(
+      (CsvSource.AmazonSale, "Amazon*.csv",
+        "Amazon Sale Report_2022-04-30_10-00-00.csv"),
+      (CsvSource.PlainSale, "Sale*.csv",
+        "Sale Report_2022-04-30_10-00-00.csv"),
+      (CsvSource.InternationalSale, "International*.csv",
+        "International Sale Report_2022-04-30_10-00-00.csv"))
+    val landing = Files.createTempDirectory("drivers_landing").toFile
+    classes.foreach { case (_, _, n) =>
+      Files.copy(new java.io.File(TestSpark.fixture(n)).toPath,
+        new java.io.File(landing, n).toPath)
+    }
+    // routed by no driver: S2 drops it, no class glob matches it
+    Files.writeString(new java.io.File(landing, "inventory notes.csv").toPath,
+      "sku,qty\nA,1\n")
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+
+    val batchOut = tmp("drivers_batch")
+    BatchMain.run(spark, landing.toString, batchOut, None)
+    val pgOut = tmp("drivers_pg")
+    val connect = freshDb("graftdrivers")
+    PgLoad.runDdl(connect, ddls("drivers"))
+    BatchMain.runWithPg(spark, landing.toString, pgOut, connect, loadedAt,
+      upsertSqlFor = quotedUpsert, insertSqlFor = quotedInsert,
+      createTables = false)
+    val streamOut = tmp("drivers_stream")
+    classes.foreach { case (cls, glob, n) =>
+      val schema = CsvSource.read(spark, TestSpark.fixture(n)).schema
+      StreamPipeline.cleanClassStream(
+        StreamPipeline.fileStream(spark, landing.toString, schema, glob),
+        cls, streamOut, tmp("drivers_ckpt")).awaitTermination(120000)
+    }
+
+    def rows(path: String): (Seq[String], Seq[String]) = {
+      val df = spark.read.option("header", "true").csv(path)
+      (df.columns.toSeq, df.collect().map(_.mkString("|")).toSeq.sorted)
+    }
+    val csvCounts = Seq("amazon_sale", "amazon_sale_duplicates", "sale",
+      "international_1", "international_2").map { f =>
+      val batch = rows(s"$batchOut/$f")
+      assert(batch._2.nonEmpty, f)
+      assert(rows(s"$pgOut/$f") == batch, s"runWithPg differs in $f")
+      assert(rows(s"$streamOut/run_*/batch_*/$f") == batch,
+        s"cleanClassStream differs in $f")
+      f -> batch._2.size.toLong
+    }.toMap
+    def table(t: String, where: String = "") =
+      queryLong(connect, s"SELECT count(*) FROM ${q(t)} $where")
+    def part(p: String) = s"WHERE ${q("data_source")} = '$p'"
+    assert(table("amazon_sale") == csvCounts("amazon_sale"))
+    assert(table("amazon_sale_version") == csvCounts("amazon_sale_duplicates"))
+    assert(table("sale") == csvCounts("sale"))
+    assert(table("international_sales", part("part1")) ==
+      csvCounts("international_1"))
+    assert(table("international_sales", part("part2")) ==
+      csvCounts("international_2"))
   }
 
   test("loadAll skips empty frames like the reference's df.empty guards") {
