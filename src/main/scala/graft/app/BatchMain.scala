@@ -38,20 +38,23 @@ object BatchMain {
 
   /** S4 mtime window + S2 name filter + S5 routing; the reference keeps
     * one variable per class — last file of a class wins (SURVEY.md §3.2
-    * step 2), preserved via maxBy(mtime). */
+    * step 2), preserved via maxBy(mtime). The routed files are read
+    * concurrently, one branch per class ([[CacheScope.all]]). */
   def latestPerClass(spark: SparkSession, rawDir: String,
       modifiedAfterMs: Option[Long]): Map[CsvSource.FileClass, DataFrame] = {
     val path = new Path(rawDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(path).toSeq
+    val routed = fs.listStatus(path).toSeq
       .filter(_.isFile)
       .filter(f => modifiedAfterMs.forall(f.getModificationTime > _)) // S4
       .filter(f => CsvSource.rawNameFilter(f.getPath.getName.toLowerCase)) // S2
       .groupBy(f => CsvSource.classify(f.getPath.getName)) // S5
-      .map { case (cls, clsFiles) =>
-        val latest = clsFiles.maxBy(_.getModificationTime)
-        cls -> CsvSource.read(spark, latest.getPath.toString)
+      .toSeq.map { case (cls, clsFiles) =>
+        cls -> clsFiles.maxBy(_.getModificationTime).getPath.toString
       }
+    routed.map(_._1).zip(CacheScope.all(routed.map { case (_, file) =>
+      () => CsvSource.read(spark, file)
+    })).toMap
   }
 
   /** The COMPLETE reference handler shape (`lambda_handler`,
@@ -59,7 +62,12 @@ object BatchMain {
     * land cleaned CSVs (`load_to_s3`) AND run the five-frame Postgres
     * load (`load_to_pg`) over the same frames. Returns the JDBC tables
     * written. SQL-text hooks as in [[PgLoad.loadAll]] (the spec drives
-    * this against embedded Derby). */
+    * this against embedded Derby).
+    *
+    * Each step fans out over its independent classes, frames or tables
+    * ([[CacheScope.all]]). Two barriers stay: every CSV lands before any
+    * JDBC load starts (the reference runs `load_to_s3` first), and the
+    * caches are released after everything has joined. */
   def runWithPg(
       spark: SparkSession, rawDir: String, outDir: String,
       connect: () => Connection, loadedAt: Timestamp,

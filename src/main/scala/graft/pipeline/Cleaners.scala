@@ -26,8 +26,10 @@ object Cleaners {
   }
 
   /** The class dispatch (`lambda_handler`, ecommerce_s3_to_pg.py:688-741):
-    * each routed class through its cleaner, amazon then sale then
-    * international, as the reference runs them. The batch, batch+JDBC
+    * each routed class through its cleaner. The reference runs amazon,
+    * then sale, then international; the three chains share nothing, so
+    * the classes present are cleaned concurrently ([[CacheScope.all]]; a
+    * single-class micro-batch runs inline). The batch, batch+JDBC
     * and streaming drivers all clean through here. `international` is
     * the international cleaner: the streaming driver passes a per-file
     * split of it, since a micro-batch may hold several files and the
@@ -37,11 +39,19 @@ object Cleaners {
         Cleaners.international): Cleaned = {
     val empty = frames.valuesIterator.nextOption()
       .fold(SparkSession.active)(_.sparkSession).emptyDataFrame
-    val (amC, amF) = frames.get(CsvSource.AmazonSale)
-      .map(amazon(_, cacheSplit = true)).getOrElse((empty, empty))
-    val sa = frames.get(CsvSource.PlainSale).map(sale).getOrElse(empty)
-    val (i1, i2) = frames.get(CsvSource.InternationalSale)
-      .map(international).getOrElse((empty, empty))
+    val cleaners: Seq[(CsvSource.FileClass, DataFrame => Seq[DataFrame])] = Seq(
+      CsvSource.AmazonSale -> { df =>
+        val (c, f) = amazon(df, cacheSplit = true); Seq(c, f) },
+      CsvSource.PlainSale -> (df => Seq(sale(df))),
+      CsvSource.InternationalSale -> { df =>
+        val (p1, p2) = international(df); Seq(p1, p2) })
+    val present = cleaners.flatMap { case (cls, clean) =>
+      frames.get(cls).map(df => cls -> (() => clean(df)))
+    }
+    val cleaned = present.map(_._1).zip(CacheScope.all(present.map(_._2))).toMap
+    val Seq(amC, amF) = cleaned.getOrElse(CsvSource.AmazonSale, Seq(empty, empty))
+    val Seq(sa) = cleaned.getOrElse(CsvSource.PlainSale, Seq(empty))
+    val Seq(i1, i2) = cleaned.getOrElse(CsvSource.InternationalSale, Seq(empty, empty))
     Cleaned(amC, amF, sa, i1, i2)
   }
 

@@ -220,11 +220,12 @@ object PgLoad {
     * frame that is not empty. Emptiness is decided on the CLEANED frame
     * through [[CacheScope.isEmpty]]: a frame [[Sinks.writeCsvAll]]
     * already decided is not probed again, each write reads the cleaned
-    * frame's scope cache, and no typed, stamped frame is persisted. */
+    * frame's scope cache, and no typed, stamped frame is persisted. The
+    * five decisions run concurrently ([[CacheScope.eachFrame]]). */
   private def frameLoads(amazonClean: DataFrame, amazonFlagged: DataFrame,
       sale: DataFrame, international1: DataFrame, international2: DataFrame,
-      loadedAt: Timestamp): Seq[(String, Seq[String], DataFrame)] =
-    Seq[(String, Seq[String], DataFrame, DataFrame => DataFrame)](
+      loadedAt: Timestamp): Seq[(String, Seq[String], DataFrame)] = {
+    val loads = Seq[(String, Seq[String], DataFrame, DataFrame => DataFrame)](
       ("amazon_sale", Seq("order_id", "date"), amazonClean,
         prepareStamped(_, loadedAt)),
       ("amazon_sale_version", Nil, amazonFlagged, prepareStamped(_, loadedAt)),
@@ -234,15 +235,24 @@ object PgLoad {
         prepareInternational(_, "part1", loadedAt)),
       ("international_sales", Nil, international2,
         prepareInternational(_, "part2", loadedAt))
-    ).collect { case (target, cc, df, prepare) if !CacheScope.isEmpty(df) =>
-      (target, cc, prepare(df))
-    }
+    )
+    loads.zip(CacheScope.eachFrame(loads)(_._3)(l => CacheScope.isEmpty(l._3)))
+      .collect { case ((target, cc, df, prepare), false) =>
+        (target, cc, prepare(df))
+      }
+  }
 
   /** One full load run (K3+K4+K5+F10): DDL, then the `frameLoads` list,
     * `amazon_sale` through `upsertSqlFor` (its conflict columns), every
     * other target through `insertSqlFor`. Returns the target tables
     * actually written (empty frames skipped). Per-partition transactions;
-    * see [[loadAllStaged]] for single-commit semantics. */
+    * see [[loadAllStaged]] for single-commit semantics.
+    *
+    * The DDL runs first; then each target table loads on its own branch
+    * ([[CacheScope.all]]). The two international parts share a branch,
+    * part 1 then part 2: that keeps the reference's id order in
+    * `international_sales`, and no IDENTITY table ever takes two first
+    * inserts at once (Derby fails such a race with 40XL1). */
   def loadAll(
       amazonClean: DataFrame,
       amazonFlagged: DataFrame,
@@ -256,18 +266,21 @@ object PgLoad {
       createTables: Boolean = true,
       batchSize: Int = 1000): Seq[String] = {
     if (createTables) runDdl(connect)
-    val written = frameLoads(amazonClean, amazonFlagged, sale,
-      international1, international2, loadedAt).map { case (target, cc, df) =>
-      val cols = df.columns.toSeq
-      Sinks.writePartitions(df,
-        if (cc.isEmpty) insertSqlFor(target, cols)
-        else upsertSqlFor(target, cols, cc),
-        connect, batchSize)
-      target
-    }
+    val loads = frameLoads(amazonClean, amazonFlagged, sale,
+      international1, international2, loadedAt)
     // distinct: both international parts target one table, and
     // loadAllStaged reports it once too — keep the contracts equal
-    written.distinct
+    val targets = loads.map(_._1).distinct
+    CacheScope.all(targets.map { t => () =>
+      loads.filter(_._1 == t).foreach { case (target, cc, df) =>
+        val cols = df.columns.toSeq
+        Sinks.writePartitions(df,
+          if (cc.isEmpty) insertSqlFor(target, cols)
+          else upsertSqlFor(target, cols, cc),
+          connect, batchSize)
+      }
+    })
+    targets
   }
 
   // ---- K6: single-transaction variant ----------------------------------

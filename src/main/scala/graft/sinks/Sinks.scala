@@ -38,26 +38,28 @@ object Sinks {
     * `releaseAll`. Each written frame gets one `[dq]` line on stderr from
     * the same fill's counts — `n_rows` and each column's `nulls_<c>` — at
     * no job: a non-zero null count in a column P5 made critical is a
-    * cleaner-regression alarm. */
+    * cleaner-regression alarm.
+    *
+    * P8 is decided first, in list order; the remaining frames are then
+    * counted and written concurrently ([[graft.ops.CacheScope.eachFrame]]:
+    * frames that share a cache not yet filled stay on one branch), and
+    * the `[dq]` lines are printed after they join, in list order. */
   def writeCsvAll(tables: Seq[(String, DataFrame)], outDir: String): Seq[String] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
-    tables.flatMap { case (name, df) =>
-      if (df == null || seen.contains(df)) None
-      else {
+    val distinct = tables.filter { case (_, df) => df != null && seen.add(df) }
+    val written = graft.ops.CacheScope.eachFrame(distinct)(_._2) {
+      case (name, df) =>
         val counts = graft.ops.CacheScope.counts(df)
-        if (counts.rows == 0) None
-        else {
-          seen.add(df)
-          val path = s"$outDir/$name"
-          writeCsv(df, path)
-          System.err.println(s"[dq] $path n_rows=${counts.rows} " +
-            df.columns.zip(counts.nonNull)
-              .map { case (c, nn) => s"nulls_$c=${counts.rows - nn}" }
-              .mkString(" "))
-          Some(name)
-        }
-      }
+        if (counts.rows > 0) writeCsv(df, s"$outDir/$name")
+        counts
+    }
+    distinct.zip(written).collect { case ((name, df), counts) if counts.rows > 0 =>
+      System.err.println(s"[dq] $outDir/$name n_rows=${counts.rows} " +
+        df.columns.zip(counts.nonNull)
+          .map { case (c, nn) => s"nulls_$c=${counts.rows - nn}" }
+          .mkString(" "))
+      name
     }
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.columnar.{CachedBatch, SimpleMetricsCachedBatch}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 import org.apache.spark.sql.execution.datasources.csv.TextInputCSVDataSource
 import org.apache.spark.sql.types.StructType
 
@@ -90,6 +91,35 @@ object Bridge {
   def invalidateFileStatusCache(spark: SparkSession): Unit =
     org.apache.spark.sql.execution.datasources.FileStatusCache
       .getOrCreate(spark.asInstanceOf[CSparkSession]).invalidateAll()
+
+  /** A daemon pool that starts a thread for every task it cannot hand to
+    * an idle one: it never queues, so a task never waits on another. */
+  def daemonCachedPool(prefix: String): java.util.concurrent.ExecutorService =
+    org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool(prefix)
+
+  /** Run `body` on `pool` under the calling thread's Spark thread state:
+    * its active session, local properties and job-artifact state, as
+    * Spark's own broadcast-exchange futures do. Without a session it
+    * just runs `body` there. */
+  def forkWithThreadState[T](pool: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+      case Some(s) =>
+        SQLExecution.withThreadLocalCaptured(s.asInstanceOf[CSparkSession], pool)(body)
+      case None =>
+        java.util.concurrent.CompletableFuture.supplyAsync(() => body, pool)
+    }
+
+  /** The caches `df`'s plan reads that are not filled yet, by identity:
+    * two frames that share one are filled by the same job if they are
+    * filled one after the other, and both fill it if filled at once. */
+  def unfilledCaches(df: DataFrame): Seq[CachedRDDBuilder] =
+    df.sparkSession.asInstanceOf[CSparkSession].sharedState.cacheManager
+      .useCachedData(df.asInstanceOf[CDataset[_]].logicalPlan)
+      .collectWithSubqueries {
+        case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+          r.cacheBuilder
+      }
 
   /** Row count of a filled cache, and each column's non-NULL count by
     * its position in the frame's columns. */

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops._
 import graft.pipeline.Transform
@@ -813,5 +814,109 @@ class OpsSpec extends SparkSpec {
       "GreaterThan(l_quantity,30.0)]") ||
       plan.contains("GreaterThan(l_quantity,30.0)"),
       s"filter not pushed to the ORC scan:\n${plan.take(800)}")
+  }
+
+  // ---- CacheScope.all: the fan-out contract ------------------------------
+
+  test("CacheScope.all: what branches persist and count, the caller's " +
+      "releaseAll frees") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.clearCache(spark)
+    val frames = (1 to 4).map(i => spark.range(i * 10L).toDF("id"))
+    val rows = try {
+      val r = CacheScope.all(frames.map(df => () => CacheScope.counts(df).rows))
+      assert(frames.forall(_.storageLevel != StorageLevel.NONE))
+      // the branches' counts are recorded in the caller's scope
+      assert(jobsDuring(frames.foreach(CacheScope.counts(_): Unit)) == 0)
+      r
+    } finally CacheScope.releaseAll()
+    assert(rows == Seq(10L, 20L, 30L, 40L))
+    assert(frames.forall(_.storageLevel == StorageLevel.NONE))
+    assert(Bridge.cacheIsEmpty(spark))
+  }
+
+  test("CacheScope.all: when a branch fails, the others finish first, " +
+      "then the first failure is rethrown") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.clearCache(spark)
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    val slow = spark.range(100L).toDF("id")
+    val e = intercept[IllegalStateException] {
+      try CacheScope.all(Seq[() => Any](
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(500); CacheScope.counts(slow); finished.incrementAndGet() },
+        () => throw new IllegalArgumentException("second")))
+      finally CacheScope.releaseAll()
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(finished.get == 1)
+    assert(Bridge.cacheIsEmpty(spark))
+  }
+
+  test("CacheScope.all: nested calls run every branch at once, no branch " +
+      "outlives the call, and a call forks at most four threads") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    // nine leaves that can only pass the barrier together: a pool that
+    // queued, or a nested call that waited on its parent's thread, would
+    // time the barrier out
+    val barrier = new CyclicBarrier(9)
+    val sums = CacheScope.all((0 until 3).map(i => () =>
+      CacheScope.all((0 until 3).map(j => () => {
+        barrier.await(60, TimeUnit.SECONDS); i * 3 + j
+      })).sum))
+    assert(sums == Seq(3, 12, 21))
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    CacheScope.all((1 to 5).map(i => () => {
+      running.incrementAndGet(); Thread.sleep(40L * i); running.decrementAndGet()
+    }))
+    assert(running.get == 0)
+    intercept[IllegalArgumentException](CacheScope.all(Seq.fill(6)(() => 1)))
+  }
+
+  test("CacheScope: an unrelated thread's scope is its own — this " +
+      "thread's releaseAll leaves its frames cached") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val other = spark.range(5L).toDF("id")
+    val mine = spark.range(6L).toDF("id")
+    val filled = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val t = new Thread(() => {
+      try {
+        CacheScope.counts(other)
+        filled.countDown()
+        done.await(60, TimeUnit.SECONDS)
+      } finally CacheScope.releaseAll()
+      ()
+    })
+    t.start()
+    assert(filled.await(60, TimeUnit.SECONDS))
+    try CacheScope.counts(mine) finally CacheScope.releaseAll()
+    assert(mine.storageLevel == StorageLevel.NONE)
+    assert(other.storageLevel != StorageLevel.NONE)
+    done.countDown()
+    t.join(60000)
+    assert(other.storageLevel == StorageLevel.NONE)
+  }
+
+  test("CacheScope.eachFrame: frames that read one unfilled cache fill it " +
+      "once, as one after the other would") {
+    def frames() = {
+      val parent = CacheScope.persist(spark.range(1000L).toDF("id")
+        .withColumn("k", col("id") % 7))
+      Seq(parent.filter(col("k") === 1), spark.range(3L).toDF("id"),
+        parent.filter(col("k") > 1))
+    }
+    val serial = jobsDuring {
+      try frames().foreach(CacheScope.counts(_): Unit)
+      finally CacheScope.releaseAll()
+    }
+    var rows = Seq.empty[Long]
+    val fanned = jobsDuring {
+      try rows = CacheScope.eachFrame(frames())(identity)(CacheScope.counts(_).rows)
+      finally CacheScope.releaseAll()
+    }
+    assert(fanned == serial)
+    assert(rows == Seq(143L, 3L, 714L))
   }
 }

@@ -106,6 +106,10 @@ class PgLoadSpec extends SparkSpec {
 
   private val loadedAt = Timestamp.valueOf("2024-01-02 03:04:05")
 
+  /** Jobs one `runWithPg` starts on the three landing fixtures, as the
+    * handler ran them one after another. */
+  private val HandlerJobs = 30
+
   private def fixtures = (
     // amazon clean: date/amount arrive as cleaned STRINGS (pipeline shape)
     Seq(("O1", "2022-04-30", "shipped", "merchant", 2, "449.5", "mumbai"),
@@ -445,6 +449,39 @@ class PgLoadSpec extends SparkSpec {
       csvCounts("international_1"))
     assert(table("international_sales", part("part2")) ==
       csvCounts("international_2"))
+  }
+
+  test("runWithPg: the handler's job count, and [dq] lines in csvZone order") {
+    val landing = java.nio.file.Files.createTempDirectory("jobs_landing").toFile
+    val out = java.nio.file.Files.createTempDirectory("jobs_out").toString
+    Seq("Amazon Sale Report_2022-04-30_10-00-00.csv",
+      "Sale Report_2022-04-30_10-00-00.csv",
+      "International Sale Report_2022-04-30_10-00-00.csv").foreach { n =>
+      java.nio.file.Files.copy(
+        new java.io.File(TestSpark.fixture(n)).toPath,
+        new java.io.File(landing, n).toPath)
+    }
+    val connect = freshDb("graftpgjobs")
+    PgLoad.runDdl(connect, ddls("jobs"))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val jobs = try jobsDuring {
+      graft.app.BatchMain.runWithPg(spark, landing.toString, out, connect,
+        loadedAt, upsertSqlFor = quotedUpsert, insertSqlFor = quotedInsert,
+        createTables = false): Unit
+    } finally {
+      System.setErr(stderr)
+      stderr.print(err.toString)
+    }
+    // the serial handler's count: a fan-out that fills a shared cache
+    // twice (the two amazon frames read D2's one cache) starts more
+    assert(jobs == HandlerJobs, s"runWithPg started $jobs jobs")
+    val dq = err.toString.linesIterator.collect {
+      case l if l.startsWith("[dq] ") => l.split(' ')(1).stripPrefix(s"$out/")
+    }.toSeq
+    assert(dq == Seq("amazon_sale", "amazon_sale_duplicates", "sale",
+      "international_1", "international_2"))
   }
 
   test("loadAll skips empty frames like the reference's df.empty guards") {

@@ -16,11 +16,13 @@
 # the first pair also pays two builds; the timed metrics are measured
 # inside the benchmark JVM and do not include them.
 #
-# Prints every raw result line as it arrives, then for op_cpu_s and
-# setup_s each side's median and quartiles and the number of pairs the
+# Prints every raw result line as it arrives, then for op_cpu_s, setup_s
+# and op_s each side's median and quartiles and the number of pairs the
 # change won (lower wins; a tie counts for neither side), and the number
-# of runs that were not correct or had failed ops. perfbench/ and
-# BENCHMARK.json are only read.
+# of runs that were not correct or had failed ops. op_s is the median wall
+# time of a run's untraced ops, read from the `untraced op_s` line of
+# the run's stderr (kept next to the results as <side>.pair<n>.err).
+# perfbench/ and BENCHMARK.json are only read.
 set -euo pipefail
 
 if [ $# -ne 4 ]; then
@@ -51,13 +53,20 @@ for ((i = 1; i <= pairs; i++)); do
   else run change "$i"; run parent "$i"; fi
 done
 
-python3 - "$results" <<'EOF'
-import json, statistics, sys
+python3 - "$results" "$base" <<'EOF'
+import json, os, re, statistics, sys
 
 runs = {}
 for line in open(sys.argv[1]):
     pair, side, raw = line.rstrip("\n").split("\t", 2)
     runs[(int(pair), side)] = json.loads(raw)
+    # the untraced ops' median wall time, from the run's own report
+    err = os.path.join(sys.argv[2], f"{side}.pair{pair}.err")
+    m = re.search(r"untraced op_s: .*median=([0-9.]+)",
+                  open(err).read() if os.path.exists(err) else "")
+    if m:
+        runs[(int(pair), side)].setdefault("metrics", {})["op_s"] = {
+            "value": float(m.group(1)), "unit": "s"}
 pairs = sorted({p for p, _ in runs})
 bad = [f"pair {p} {s}" for (p, s), r in sorted(runs.items())
        if not r.get("correct") or r.get("failed", 0)]
@@ -67,7 +76,7 @@ print(f"[ab] {len(pairs)} pairs; runs not correct or with failed ops: "
 def metric(r, name):
     return r.get("metrics", {}).get(name, {}).get("value")
 
-for name in ("op_cpu_s", "setup_s"):
+for name in ("op_cpu_s", "setup_s", "op_s"):
     line = [name]
     for side in ("parent", "change"):
         xs = sorted(v for p in pairs
