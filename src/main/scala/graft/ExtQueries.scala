@@ -921,7 +921,7 @@ object ExtQueries {
     dedupLshGrow.oracle)
 
   /** The capstone's MAINTENANCE path registered
-    * ([[graft.streaming.StreamPipeline.compactBucketedIndex]] carries
+    * ([[graft.ext.ArchiveIndex.compactBucketedDir]] carries
     * the executed-compaction-plan design): the same grow+prune loop
     * with both index dirs compacted after every micro-batch, so each
     * later wave probes an index the earlier wave's compaction fully

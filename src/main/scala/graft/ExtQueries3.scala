@@ -742,8 +742,8 @@ object ExtQueries3 {
     * the measured linear-scan indictment of the plain stream-static
     * join and the partition-pruned per-batch design) — output-identical
     * to `q_stream_dedup_lsh` (pruning is lossless), so the oracle is
-    * shared verbatim; the sf0.1 ScaleProbe carries the archive-scaling
-    * evidence. */
+    * shared verbatim; `SCALEPROBE_r11.json` and `SCALEPROBE_r12.json`
+    * hold the archive-scaling evidence. */
   val lshDedupPrunedQ = Q(
     "q_stream_dedup_lsh_pruned",
     (s, d) => graft.streaming.StreamPipeline

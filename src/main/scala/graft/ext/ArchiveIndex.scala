@@ -493,16 +493,24 @@ object ArchiveIndex {
   def readHashes(spark: SparkSession, dir: String): DataFrame =
     readBucketedTable(spark, ihDir(dir)).select("id", "hs")
 
+  /** Size each compaction packs a bucket's files up to. */
+  private val CompactTargetBytes: Long = 128L << 20
+
   /** COMPACT one bucket-partitioned table dir by EXECUTING
     * [[Curation.compactionPlan]] against its REAL file manifest (one
     * row per data file — bounded by file COUNT, the very quantity
-    * compaction exists to bound, never by data): the plan assigns each
-    * input file an `out_file` group per bucket by cumulative-offset
-    * packing at `targetBytes`, then ONE distributed job reads the
-    * current snapshot, tags rows with their source file
-    * (`input_file_name`), broadcast-joins the plan, repartitions on
-    * (bkt, out_file) — each plan group lands in one task, each task
-    * writes one file per bucket dir it holds. The packed files are
+    * compaction exists to bound, never by data). Without it a grow
+    * loop appends O(batch) files into every touched bucket dir per
+    * micro-batch forever, and listing/footer costs erode the
+    * constant-read-volume property of bucket pruning
+    * (`SCALEPROBE_r12.json`: 552 → 1,397 index files over 4 → 32
+    * batches append-only, 128 with compaction, identical pairs). The
+    * plan assigns each input file an `out_file` group per bucket by
+    * cumulative-offset packing at [[CompactTargetBytes]], then ONE
+    * distributed job reads the current snapshot, tags rows with their
+    * source file (`input_file_name`), broadcast-joins the plan,
+    * repartitions on (bkt, out_file) — each plan group lands in one
+    * task, each task writes one file per bucket dir it holds. The packed files are
     * staged under a hidden subdir, MOVED into the live bucket dirs
     * under generation-prefixed names (old and new coexist), and made
     * live by ONE manifest commit — readers resolving before the commit
@@ -510,12 +518,13 @@ object ArchiveIndex {
     * packed set; there is never a moment without a consistent live
     * file set. Old files and superseded manifests are GC'd once older
     * than `gcGraceMs` (0 = immediately — the single-process default;
-    * deployments with concurrent readers pass a grace ≥ their max scan
-    * duration). Row content is untouched — compaction is lossless by
-    * construction, and `q_stream_dedup_lsh_grow_compact` pins that
-    * end-to-end by sharing the uncompacted grow oracle. */
+    * deployments with concurrent readers or appenders pass a grace ≥
+    * their max scan / stage-to-commit duration). Row content is
+    * untouched — compaction is lossless by construction, and
+    * `q_stream_dedup_lsh_grow_compact` pins that end-to-end by sharing
+    * the uncompacted grow oracle. */
   def compactBucketedDir(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20, gcGraceMs: Long = 0L): Unit = {
+      gcGraceMs: Long = 0L): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(dir)
     val f = fs(spark, dir)
@@ -542,7 +551,7 @@ object ArchiveIndex {
     val manifest = spark.createDataFrame(files)
       .toDF("bkt", "fname", "bytes")
     val plan = Curation.compactionPlan(
-        manifest, "fname", "bytes", targetBytes, Seq("bkt"))
+        manifest, "fname", "bytes", CompactTargetBytes, Seq("bkt"))
       .select(col("bkt").as("__pbkt"), col("fname").as("__pf"),
         col("out_file").as("__of"))
     val staged = new Path(dir, "_compact_tmp")
@@ -598,10 +607,10 @@ object ArchiveIndex {
   /** One maintenance pass over the whole artifact: compact all three
     * tables (a subdir a consumer never appended to is a no-op). */
   def compact(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20, gcGraceMs: Long = 0L): Unit = {
-    compactBucketedDir(spark, fpDir(dir), targetBytes, gcGraceMs)
-    compactBucketedDir(spark, ibDir(dir), targetBytes, gcGraceMs)
-    compactBucketedDir(spark, ihDir(dir), targetBytes, gcGraceMs)
+      gcGraceMs: Long = 0L): Unit = {
+    compactBucketedDir(spark, fpDir(dir), gcGraceMs)
+    compactBucketedDir(spark, ibDir(dir), gcGraceMs)
+    compactBucketedDir(spark, ihDir(dir), gcGraceMs)
   }
 
   /** Copy a (bounded) result into a SELF-CONTAINED local DataFrame so a

@@ -563,7 +563,6 @@ object Curation {
   def corpusBuildIncrementalCommit(incoming: DataFrame, textCol: String,
       idCol: String, archiveDir: String, minQuality: Double, n: Int = 3,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
-      compactTargetBytes: Long = 128L << 20,
       gcGraceMs: Long = 0L): (DataFrame, DataFrame) = {
     val spark = incoming.sparkSession
     val nB = ArchiveIndex.nBuckets(spark, archiveDir)
@@ -592,7 +591,7 @@ object Curation {
       ArchiveIndex.ibDir(archiveDir), nB)
     ArchiveIndex.appendBucketedTable(ih, "id",
       ArchiveIndex.ihDir(archiveDir), nB)
-    ArchiveIndex.compact(spark, archiveDir, compactTargetBytes, gcGraceMs)
+    ArchiveIndex.compact(spark, archiveDir, gcGraceMs)
     (pinned, receipt)
   }
 

@@ -247,11 +247,9 @@ object IvfIndex {
 
   /** Maintenance pass over both tables (file-count-bounded). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytes: Long = 128L << 20, gcGraceMs: Long = 0L): Unit = {
-    ArchiveIndex.compactBucketedDir(spark, cenDir(dir), targetBytes,
-      gcGraceMs)
-    ArchiveIndex.compactBucketedDir(spark, vecDir(dir), targetBytes,
-      gcGraceMs)
+      gcGraceMs: Long = 0L): Unit = {
+    ArchiveIndex.compactBucketedDir(spark, cenDir(dir), gcGraceMs)
+    ArchiveIndex.compactBucketedDir(spark, vecDir(dir), gcGraceMs)
   }
 
   /** [[searchDeterministic]] against the ON-DISK index: queries resolve

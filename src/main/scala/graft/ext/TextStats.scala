@@ -48,7 +48,6 @@ object TextStats {
 
   def punctRatio(text: Column): Column = ratioOf(text, "[^A-Za-z0-9\\s]")
   def digitRatio(text: Column): Column = ratioOf(text, "[0-9]")
-  def upperRatio(text: Column): Column = ratioOf(text, "[A-Z]")
 
   /** Common English function words (public knowledge). */
   val enStopwords: Seq[String] = Seq("the", "a", "an", "and", "or", "of",

@@ -206,19 +206,6 @@ object StreamPipeline {
       .start()
   }
 
-  /** The full streaming hourly-rollup pipeline executed end to end with
-    * `Trigger.AvailableNow` over the events parquet — the drain-then-stop
-    * micro-batch shape of a Lambda invocation, benchmarked and
-    * oracle-checked against the BATCH hourly rollup: exactly-once file
-    * tracking means the streamed result must equal the batch result
-    * row-for-row, and the DuckDB gate enforces it.
-    *
-    * Sink is memory/complete for the self-contained round trip (the
-    * production shape is append + file/JDBC sink, spec'd in
-    * [[loadClassStream]]); the watermark rides along to keep the plan
-    * the production plan. Checkpoint and sink name are fresh per call so
-    * bench reps re-execute the whole stream. */
-
   /** Run a (bounded) streaming frame to completion under AvailableNow
     * through a memory sink and return the result as a SELF-CONTAINED
     * local DataFrame. The four registered AvailableNow adapters are
@@ -242,9 +229,6 @@ object StreamPipeline {
     // retain all rows for the session lifetime, so the dropTempView
     // must run even when start/awaitTermination/localize throws (the
     // view may not exist if start() itself failed — drop is guarded).
-    // withStatePartitions: the drain pins a state-volume-sized
-    // partition count into its fresh checkpoint (SCALEPROBE_r14 — the
-    // per-partition state-commit term dominates these twins' wall).
     try withStatePartitions(spark) {
       val q = out.writeStream
         .trigger(Trigger.AvailableNow())
@@ -260,69 +244,6 @@ object StreamPipeline {
       catch { case scala.util.control.NonFatal(_) => }
       rmRf(ckpt.toFile)
     }
-  }
-
-  /** INSTRUMENTED AvailableNow drain for ScaleProbe's `avnow-cost`
-    * mode (r13 VERDICT #2): identical scaffold to [[runAvailableNow]]
-    * — fresh checkpoint, memory sink, full drain — but returns the
-    * timing decomposition instead of rows: seconds until `start()`
-    * returns (driver-side stream construction), total wall to
-    * termination, and the per-micro-batch
-    * [[org.apache.spark.sql.streaming.StreamingQueryProgress]] array,
-    * whose `durationMs` splits each trigger into source listing
-    * (`latestOffset`/`getBatch`), `queryPlanning`, execution
-    * (`addBatch`), and exactly-once bookkeeping
-    * (`walCommit`/`commitOffsets`), with state-store commit time under
-    * `stateOperators`. The probe reads these to book where the fixed
-    * price of exactly-once drains actually goes. */
-  private[graft] def probeAvailableNow(out: DataFrame, mode: String)
-      : (Double, Double,
-         Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val spark = out.sparkSession
-    applyConfiguredStateStore(spark)
-    val qn = "avnow_probe_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-avnow-probe")
-    try withStatePartitions(spark) {
-      val t0 = System.nanoTime()
-      val q = out.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode)
-        .format("memory")
-        .queryName(qn)
-        .start()
-      val startSec = (System.nanoTime() - t0) / 1e9
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
-      (startSec, wall, q.recentProgress)
-    } finally {
-      try spark.catalog.dropTempView(qn)
-      catch { case scala.util.control.NonFatal(_) => }
-      rmRf(ckpt.toFile)
-    }
-  }
-
-  /** ScaleProbe hooks for `avnow-cost`: the three representative twin
-    * shapes as UNSTARTED streaming frames — a stateless projection
-    * (the pure scaffold floor), the watermarked hourly window agg, and
-    * the stream-stream interval join (`q_stream_attribution`'s plan,
-    * the most expensive twin on the driver bench). */
-  private[graft] def avnowProbeFrames(spark: SparkSession, dir: String)
-      : Seq[(String, DataFrame, String)] = {
-    def ev = streamTable(spark, dir, "events.parquet",
-      normalizeEvents = true)
-    Seq(
-      ("stateless_projection",
-        ev.select(col("event_id"), col("user_id"), col("event_type")),
-        "append"),
-      ("windowed_agg_hourly", hourlyRollup(ev), "complete"),
-      ("stream_stream_interval_join",
-        clickAttributionStream(
-          ev.filter(col("event_type") === "click"),
-          ev.filter(col("event_type") === "purchase")),
-        "append"))
   }
 
   /** Recursive temp-tree delete shared by every AvailableNow adapter. */
@@ -358,9 +279,9 @@ object StreamPipeline {
     if (normalizeEvents) graft.Tables.normalizeEventsTs(raw) else raw
   }
 
-  /** The hourly rollup plan shared by the registered query and the
-    * ScaleProbe streaming curve — one definition so the probe measures
-    * exactly the shape the query ships. */
+  /** The hourly rollup plan of the registered query; its scaling
+    * curve at 1–32× sf0.1 is `stream_hourly` in `SCALEPROBE_r10.json`
+    * and `SCALEPROBE_r11.json`. */
   private def hourlyRollup(ev: DataFrame): DataFrame = {
     import graft.Det.dsum
     ev.withWatermark("ts", "2 hours")
@@ -371,27 +292,24 @@ object StreamPipeline {
         col("event_type"), col("n"), col("total_value"))
   }
 
+  /** The full streaming hourly-rollup pipeline executed end to end with
+    * `Trigger.AvailableNow` over the events parquet — the drain-then-stop
+    * micro-batch shape of a Lambda invocation, benchmarked and
+    * oracle-checked against the BATCH hourly rollup: exactly-once file
+    * tracking means the streamed result must equal the batch result
+    * row-for-row, and the DuckDB gate enforces it.
+    *
+    * Sink is memory/complete for the self-contained round trip (the
+    * production shape is append + file/JDBC sink, spec'd in
+    * [[loadClassStream]]); the watermark rides along to keep the plan
+    * the production plan. Checkpoint and sink name are fresh per call so
+    * bench reps re-execute the whole stream. */
   def eventsHourlyAvailableNow(
       spark: SparkSession, dir: String): DataFrame =
     runAvailableNow(
       hourlyRollup(streamTable(spark, dir, "events.parquet",
         normalizeEvents = true)),
       "stream_ev_", "complete")
-
-  /** ScaleProbe hook: the SAME hourly rollup stream over a directory of
-    * Spark-written part files (the probe writes N×-scaled events there;
-    * the registered query's single-file glob cannot list those). Schema
-    * is probed from the directory; `*.parquet` skips _SUCCESS. */
-  def eventsHourlyAvailableNowParts(
-      spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(dir)
-    runAvailableNow(hourlyRollup(graft.Tables.normalizeEventsTs(raw)),
-      "stream_probe_", "complete")
-  }
 
   /** Per-hour DISTINCT USERS as a structured stream via the mergeable
     * HLL sketch — exact `countDistinct` is unsupported in streaming
@@ -1015,32 +933,8 @@ object StreamPipeline {
       "stream_lshdedup_", "append")
   }
 
-  /** ScaleProbe hook: the SAME stream-static LSH dedup plan as
-    * [[dedupLshAvailableNow]], but over a prepared incoming parquet
-    * directory and a DISK-BACKED archive index (the two
-    * [[graft.ext.TextDedup.lshIndex]] frames written as parquet dirs —
-    * the production posture, where the index lives bucketed on disk and
-    * each micro-batch reads it, not a cached session frame). The probe
-    * scales the ARCHIVE N× with a fixed arrival stream and times this
-    * call: sub-linear growth is the "probe touches colliding buckets,
-    * not the archive" claim, measured. */
-  def dedupLshAvailableNowParts(spark: SparkSession, incomingDir: String,
-      ibDir: String, ihDir: String, threshold: Double = 0.5,
-      watermark: String = "10 minutes"): DataFrame = {
-    val raw = spark.readStream
-      .schema(spark.read.parquet(incomingDir).schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(incomingDir)
-    val ib = spark.read.parquet(ibDir)
-      .select(col("band"), col("id").as("archive_id"))
-    val ih = spark.read.parquet(ihDir)
-      .select(col("id").as("archive_id"), col("hs").as("hs_a"))
-    runAvailableNow(lshDedupStream(raw, ib, ih, threshold, watermark),
-      "stream_lshdedup_probe_", "append")
-  }
-
   /** BUCKET-PRUNED stream-static LSH probe — the 10⁹-archive plan the
-    * plain [[lshDedupStream]] only gestures at. The r11 ScaleProbe
+    * plain [[lshDedupStream]] only gestures at. `SCALEPROBE_r11.json`
     * measured the plain stream-static join honestly: the static side
     * is re-scanned per run, so probe cost grows LINEARLY with the
     * archive (2.9 s → 6.0 s at 2×) — a full-index scan per micro-batch
@@ -1147,9 +1041,10 @@ object StreamPipeline {
     * batch's key footprint. The complete 100 TB ingest shape: bucket
     * count sized to the archive, and the MAINTENANCE path wired in —
     * every `compactEvery` batches the loop executes
-    * [[compactBucketedIndex]] on both index dirs, so per-bucket file
-    * counts stay bounded (≤ compactEvery append waves above the packed
-    * floor) however many micro-batches run, and per-batch cost stays
+    * [[graft.ext.ArchiveIndex.compactBucketedDir]] on both index dirs
+    * (`gcGraceMs` goes to its GC), so per-bucket file counts stay
+    * bounded (≤ compactEvery append waves above the packed floor)
+    * however many micro-batches run, and per-batch cost stays
     * O(batch + collisions) rows read instead of eroding under
     * unbounded small-file listings. The default cadence 16 is the
     * SCALEPROBE_r13 `compact_cost` recommendation — at 32 batches it
@@ -1166,7 +1061,6 @@ object StreamPipeline {
   def lshDedupGrowPrunedStart(incoming: DataFrame, threshold: Double,
       nBuckets: Int, pairsDir: String, ibDir: String, ihDir: String,
       ckptDir: String, availableNow: Boolean, compactEvery: Int = 16,
-      compactTargetBytes: Long = 128L << 20,
       gcGraceMs: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
     applyConfiguredStateStore(spark)
@@ -1191,50 +1085,14 @@ object StreamPipeline {
         graft.ops.CacheScope.release(bBands)
         graft.ops.CacheScope.release(bHs)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          compactBucketedIndex(spark, ibDir, compactTargetBytes, gcGraceMs)
-          compactBucketedIndex(spark, ihDir, compactTargetBytes, gcGraceMs)
+          graft.ext.ArchiveIndex.compactBucketedDir(spark, ibDir, gcGraceMs)
+          graft.ext.ArchiveIndex.compactBucketedDir(spark, ihDir, gcGraceMs)
         }
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
   }
-
-  /** COMPACT a bucket-partitioned index dir IN PLACE — the maintenance
-    * pass the capstone ingest loop ([[lshDedupGrowPrunedStart]]) runs
-    * every `compactEvery` batches, closing r11's one open scale risk:
-    * the grow loop appends O(batch) files into the bucket partition
-    * dirs forever, so over thousands of micro-batches per-bucket file
-    * counts grow unboundedly and listing/footer costs erode exactly
-    * the constant-read-volume property SCALEPROBE_r11 measured.
-    *
-    * This EXECUTES [[graft.ext.Curation.compactionPlan]] against the
-    * dir's REAL file manifest (one row per data file — bounded by file
-    * COUNT, the very quantity compaction exists to bound, never by
-    * data): the plan assigns each input file an `out_file` group per
-    * bucket by cumulative-offset packing at `targetBytes`, then ONE
-    * distributed job reads the current snapshot, tags rows with their
-    * source file (`input_file_name`), broadcast-joins the plan,
-    * repartitions on (bkt, out_file) — so each plan group lands in one
-    * task and each task writes one file per bucket dir it holds. The
-    * packed files land ALONGSIDE the old generation and become live by
-    * ONE manifest commit (r12 VERDICT #1): concurrent readers resolve
-    * a consistent snapshot on either side of the commit, and old files
-    * are GC'd only once their SUPERSESSION is past the grace window —
-    * commits are multi-writer safe by optimistic CAS (r13 VERDICT #1,
-    * [[graft.ext.ArchiveIndex]]), reads need no coordination;
-    * `gcGraceMs = 0` (default) is the single-process loop, and a
-    * deployment with external concurrent readers or appenders passes a
-    * grace ≥ its max scan / stage-to-commit duration. Row content is
-    * untouched — compaction is lossless by construction, and
-    * `q_stream_dedup_lsh_grow_compact` pins that end-to-end by sharing
-    * the uncompacted grow oracle verbatim. Implementation lives with
-    * the unified format ([[graft.ext.ArchiveIndex.compactBucketedDir]])
-    * — one maintenance pass for every consumer of the layout. */
-  def compactBucketedIndex(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20, gcGraceMs: Long = 0L): Unit =
-    graft.ext.ArchiveIndex.compactBucketedDir(spark, dir, targetBytes,
-      gcGraceMs)
 
   /** Write the [[graft.ext.TextDedup.lshIndex]] frames of `archive` as
     * the bucket-partitioned on-disk index [[lshDedupPrunedStart]]
@@ -1251,8 +1109,8 @@ object StreamPipeline {
     * archive of [[dedupLshAvailableNow]] (so the batch oracle is shared
     * verbatim), the index on disk in bucket-partitioned form. At test
     * SFs the single micro-batch touches most buckets (pruning is a
-    * no-op); the sf0.1 ScaleProbe carries the perf evidence where the
-    * archive dwarfs the batch. */
+    * no-op); `SCALEPROBE_r11.json` and `SCALEPROBE_r12.json` hold the
+    * sf0.1 evidence where the archive dwarfs the batch. */
   def dedupLshPrunedAvailableNow(spark: SparkSession, dir: String,
       threshold: Double = 0.5, nBuckets: Int = 32): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
@@ -1301,7 +1159,6 @@ object StreamPipeline {
   def corpusCommitStart(incoming: DataFrame, textCol: String,
       idCol: String, archiveDir: String, outDir: String,
       minQuality: Double, ckptDir: String, availableNow: Boolean,
-      compactTargetBytes: Long = 128L << 20,
       gcGraceMs: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
     applyConfiguredStateStore(spark)
@@ -1311,7 +1168,6 @@ object StreamPipeline {
         val (cleaned, _) =
           graft.ext.Curation.corpusBuildIncrementalCommit(
             batch, textCol, idCol, archiveDir, minQuality,
-            compactTargetBytes = compactTargetBytes,
             gcGraceMs = gcGraceMs)
         cleaned.select(col(idCol), col("source"),
             lit(batchId).as("wave"))
@@ -1444,24 +1300,6 @@ object StreamPipeline {
     }
   }
 
-  /** ScaleProbe hook for [[lshDedupPrunedStart]]: probe a prepared
-    * bucket-partitioned index with a prepared incoming directory. */
-  def dedupLshPrunedAvailableNowParts(spark: SparkSession,
-      incomingDir: String, ibDir: String, ihDir: String, nBuckets: Int,
-      threshold: Double = 0.5): DataFrame = {
-    val raw = spark.readStream
-      .schema(spark.read.parquet(incomingDir).schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(incomingDir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshprune-p")
-    try {
-      val (pairsDir, ckpt) = (s"$base/pairs", s"$base/ckpt")
-      lshDedupPrunedStart(raw, threshold, nBuckets, pairsDir,
-        ibDir, ihDir, ckpt, availableNow = true).awaitTermination()
-      localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
-  }
-
   /** GROWING-archive streaming near-dedup — [[dedupLshAvailableNow]]'s
     * residual closed (its archive index is FROZEN at stream start, so a
     * novel doc accepted in micro-batch 1 is invisible to batch 3): the
@@ -1543,13 +1381,14 @@ object StreamPipeline {
       .filter(col("d").isNotNull)
       .select(col("d.id").as("id"), col("d.text").as("text"))
 
-  /** Write `incoming` as one parquet file per wave with strictly
-    * increasing mtimes and return the wave-ordered file stream: the
-    * file source (latestFirst=false) drains oldest-first with
-    * `maxFilesPerTrigger = 1`, so wave k IS micro-batch k. */
+  /** Write `incoming` as one parquet file per wave (wave = id mod 3)
+    * with strictly increasing mtimes and return the wave-ordered file
+    * stream: the file source (latestFirst=false) drains oldest-first
+    * with `maxFilesPerTrigger = 1`, so wave k IS micro-batch k. */
   private def waveStream(incoming: DataFrame, base: java.nio.file.Path,
-      inDir: String, waves: Int = 3): DataFrame = {
+      inDir: String): DataFrame = {
     val spark = incoming.sparkSession
+    val waves = 3
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val t0 = System.currentTimeMillis()
     (0 until waves).foreach { k =>
@@ -1623,8 +1462,9 @@ object StreamPipeline {
   }
 
   /** Registered adapter for the capstone WITH the maintenance path
-    * exercised ([[compactBucketedIndex]]): identical feed, archive,
-    * and wave boundaries to [[dedupLshGrowPrunedAvailableNow]], but
+    * exercised ([[graft.ext.ArchiveIndex.compactBucketedDir]]):
+    * identical feed, archive, and wave boundaries to
+    * [[dedupLshGrowPrunedAvailableNow]], but
     * the loop compacts BOTH index dirs after EVERY micro-batch
     * (`compactEvery = 1` — each later wave probes an index the earlier
     * wave's compaction fully rewrote). The grow oracle is shared
@@ -1646,42 +1486,6 @@ object StreamPipeline {
         ibDir, ihDir, ckpt, availableNow = true, compactEvery = 1)
         .awaitTermination()
       localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
-  }
-
-  /** ScaleProbe hook for the maintenance path, the SCALEPROBE_r11
-    * `sdedup_rows` methodology extended along the BATCH axis: run the
-    * capstone loop over `waves` micro-batches (same grow feed, wave =
-    * id mod waves) with the given compaction cadence and return the
-    * deterministic quantities the file-hygiene claim rests on —
-    * (emitted pairs, total index data files at end of run). Without
-    * compaction the file count grows linearly in the batch count
-    * (every batch appends O(shuffle-partitions) files per index);
-    * with a fixed `compactEvery` it stays bounded by the packed floor
-    * plus at most `compactEvery` un-compacted waves — while the pair
-    * count stays IDENTICAL, the invariance half of the evidence. */
-  def growPrunedCompactProbe(spark: SparkSession, dir: String,
-      waves: Int, nBuckets: Int, compactEvery: Int,
-      compactTargetBytes: Long = 128L << 20): (Long, Long) = {
-    val docs = graft.Tables.documents(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshgpc")
-    try {
-      val (inDir, pairsDir, ibDir, ihDir, ckpt) =
-        (s"$base/in", s"$base/pairs", s"$base/ib", s"$base/ih",
-          s"$base/ckpt")
-      writeBucketedLshIndex(docs.filter(col("doc_id") % 2 === 0),
-        "text", "doc_id", nBuckets, ibDir, ihDir)
-      val raw = waveStream(growIncoming(docs), base, inDir, waves)
-      lshDedupGrowPrunedStart(raw, threshold = 0.5, nBuckets, pairsDir,
-        ibDir, ihDir, ckpt, availableNow = true, compactEvery,
-        compactTargetBytes).awaitTermination()
-      val pairs = spark.read.parquet(pairsDir).count()
-      def dataFiles(d: String): Long =
-        Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("bkt="))
-          .map(b => Option(b.listFiles()).getOrElse(Array.empty)
-            .count(_.getName.endsWith(".parquet")).toLong).sum
-      (pairs, dataFiles(ibDir) + dataFiles(ihDir))
     } finally rmRf(base.toFile)
   }
 
@@ -1919,35 +1723,22 @@ object StreamPipeline {
     * first start exactly as Spark documents. */
   val StateStoreConfKey = "graft.streaming.stateStoreProvider"
 
-  /** Session conf key sizing the STATE partition count the
-    * AvailableNow drain adapters pin into each fresh checkpoint
-    * (default 8). SCALEPROBE_r14's decomposition showed the drains'
-    * dominant cost is per-partition state-store commit inside
-    * `addBatch` — it scales with partitions × stateful operators ×
-    * micro-batches, NOT data volume, so running a bounded replay
-    * feed's tiny state at the session's CPU-sized
-    * `spark.sql.shuffle.partitions` (32) pays 32 file commits per
-    * stateful operator per batch for state that fits in one. State
-    * partitions are a STATE-VOLUME knob, not a CPU knob: size them
-    * ~state_bytes / 64 MB with a floor of the parallelism the
-    * stateful shuffle needs for the feed's throughput. Production
-    * continuous streams pick their own shuffle-partition count at
-    * first start exactly as Spark documents (it pins into the
-    * checkpoint); this key only governs the self-contained drain
-    * adapters, whose feeds are bounded by construction. */
-  val StatePartitionsConfKey = "graft.streaming.statePartitions"
+  /** State partitions each AvailableNow drain pins into its fresh
+    * checkpoint: the drains' cost is per-partition state-store commits
+    * (`SCALEPROBE_r14.json`), so state partitions are sized to state
+    * volume, not to the CPU count. */
+  private val DrainStatePartitions = 8
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to
-    * [[StatePartitionsConfKey]] (default 8), restoring the previous
-    * value after. The pin needs to span the stream's micro-batch
-    * planning, and every adapter drain is synchronous and
-    * single-threaded on its session, so the restore lands before any
-    * other work reads the conf. */
+    * [[DrainStatePartitions]], restoring the previous value after.
+    * The pin needs to span the stream's micro-batch planning, and
+    * every adapter drain is synchronous and single-threaded on its
+    * session, so the restore lands before any other work reads the
+    * conf. */
   private def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      spark.conf.getOption(StatePartitionsConfKey).getOrElse("8"))
+    spark.conf.set(key, DrainStatePartitions.toString)
     try body finally spark.conf.set(key, prev)
   }
 

@@ -122,6 +122,45 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("AvailableNow drain: stateful operators run on 8 state " +
+      "partitions whatever the session's shuffle partitions, which the " +
+      "drain leaves as it found them") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        progress.add(e.progress); ()
+      }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.conf.set(key, "5")
+    spark.streams.addListener(listener)
+    try {
+      val rows = StreamPipeline
+        .eventsHourlyAvailableNow(spark, "/root/testdata/sf0.001").count()
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark)
+      assert(rows > 0)
+      assert(spark.conf.get(key) == "5")
+      val ops = progress.toArray(Array.empty[StreamingQueryProgress])
+        .filter(_.name.startsWith("stream_ev_"))
+        .flatMap(_.stateOperators)
+      assert(ops.nonEmpty, "the drain reported no stateful operator")
+      assert(ops.forall(_.numShufflePartitions == 8),
+        ops.map(_.numShufflePartitions).mkString(", "))
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(key, prev)
+    }
+  }
+
   test("growing-archive LSH dedup: a later batch catches a near-dup of " +
       "an earlier batch's NOVEL doc; output pins to the foldwise batch " +
       "replay (incrementalLshPairs applied wave by wave)") {
