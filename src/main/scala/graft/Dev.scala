@@ -57,6 +57,8 @@ object Dev {
           println(f"[dev] $name rep $i: $wall%.2f s" +
             s" jobs=${jobs.get} stages=${stages.get} classes=" +
             (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0))
+          // the next rep refills what this one cached, as a fresh run does
+          graft.ops.CacheScope.releaseAll()
         }
       } catch { case e: Throwable =>
         println(s"[dev] $name FAILED: ${e.getMessage}")

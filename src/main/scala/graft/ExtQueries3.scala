@@ -526,7 +526,7 @@ object ExtQueries3 {
   /** Tokenizer/vocab COVERAGE — the OOV-rate eval every tokenizer
     * rollout runs before shipping: a vocabulary induced on the
     * "training" sources (src0–src9, top-200 tokens by frequency via
-    * the bounded-heap TopKStrAgg — never a vocabulary sort) scored on
+    * the bounded-heap `top_k_str` — never a vocabulary sort) scored on
     * EVERY source: token-level and type-level OOV rates. A source the
     * vocab serves badly shows a high token_oov_rate long before
     * downstream perplexity does.
@@ -548,7 +548,7 @@ object ExtQueries3 {
         .filter(col("source").isin((0 to 9).map(i => s"src$i"): _*))
         .groupBy(col("term")).agg(sum(col("tf")).as("f"))
         .groupBy()
-        .agg(graft.functions.TopKStrAgg.top_k_str(
+        .agg(graft.functions.TopKAgg.top_k_str(
           col("f").cast("double"), col("term"), 200).as("tk"))
         .select(explode(col("tk")).as("t"))
         .select(col("t.key").as("term"))

@@ -58,7 +58,7 @@ object GraftExtensions {
         "float_dot(a, b) - codegen'd double dot product of two ARRAY<FLOAT>"),
       (args: Seq[Expression]) => {
         arity("float_dot", args, 2)
-        functions.FloatVecDot(args(0), args(1))
+        functions.VecDot(args(0), args(1), integral = false)
       }),
     (FunctionIdentifier("shingle_hashes"),
       info("shingle_hashes",
@@ -95,7 +95,7 @@ object GraftExtensions {
           "(the int8-code ADC kernel)"),
       (args: Seq[Expression]) => {
         arity("int_dot", args, 2)
-        functions.IntVecDot(args(0), args(1))
+        functions.VecDot(args(0), args(1), integral = true)
       }),
     (FunctionIdentifier("hll_sketch"),
       info("hll_sketch",

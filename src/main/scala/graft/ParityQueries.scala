@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, OrderedSplit, Profiling, Projections, ScalarFns}
+import graft.ops.{CacheScope, Dedup, OrderedSplit, Profiling, Projections, ScalarFns, qcol}
 import graft.pipeline.Transform
 
 /** Reference-parity operator queries (SURVEY.md §2): each §2 operator row
@@ -253,7 +253,12 @@ object ParityQueries {
       .select(col("doc_id"), col("lang"),
         lit(null).cast("string").as("dead_col"),
         when(col("doc_id") % 2 === 0, col("source")).as("half_null"))
-      .transform(Profiling.dropAllNullColumns),
+      .transform { df =>
+        // A5 from the fill counts the handler's Transform decides it on
+        val nonNull = CacheScope.counts(df).nonNull
+        df.select(df.columns.zip(nonNull).collect {
+          case (c, n) if n > 0 => qcol(c) }.toSeq: _*)
+      },
     Some("""SELECT doc_id, lang,
       CASE WHEN doc_id % 2 = 0 THEN source ELSE NULL END AS half_null
       FROM documents"""))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.FloatVecDot.float_dot
+import graft.functions.VecDot.float_dot
 
 /** Distributed Lloyd k-means over the embeddings table — the clustering
   * stage itself, as a first-class oracle-checkable operator (the IVF
@@ -27,7 +27,7 @@ import graft.functions.FloatVecDot.float_dot
   *    id), taken via sort-limit (TakeOrderedAndProject, k rows);
   *  - distance = round(⟨v,v⟩ − 2⟨v,c⟩ + ⟨c,c⟩, 6) where every inner
   *    product is the SEQUENTIAL double fold over float elements
-  *    ([[graft.functions.FloatVecDot]] ≡ DuckDB list_dot_product over
+  *    ([[graft.functions.VecDot]] ≡ DuckDB list_dot_product over
   *    double-cast lists — the proven ANN-oracle machinery); argmin
   *    tie-breaks by cid;
   *  - centroid components = DECIMAL(38,12)-summed member coordinates

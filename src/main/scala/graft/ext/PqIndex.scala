@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.FloatVecDot.float_dot
+import graft.functions.VecDot.float_dot
 import graft.functions.PqOps
 
 /** Product-quantization (PQ) approximate-nearest-neighbor index — the

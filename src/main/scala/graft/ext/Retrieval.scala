@@ -82,7 +82,7 @@ object Retrieval {
     * because the expansion terms are data-dependent: the feedback loop
     * stays entirely on the executors (no driver collect; the expansion
     * terms flow as a bounded broadcast frame, selected by the
-    * bounded-heap [[graft.functions.TopKStrAgg]]). Per-(doc, term)
+    * bounded-heap [[graft.functions.TopKAgg]]). Per-(doc, term)
     * scores are 6-dp-rounded then summed through exact DECIMAL(38,12)
     * (the sparse-cosine rule) so term-arrival order cannot move the
     * hash.
@@ -137,7 +137,7 @@ object Retrieval {
       .join(broadcast(q0), Seq("term"), "left_anti")
       .select(col("term"), round(col("stf") * idf6, 6).as("w"))
       .groupBy()
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("w"), col("term"), fbTerms).as("tk"))
       .select(explode(col("tk")).as("t"))
       .select(col("t.key").as("term"))
@@ -447,7 +447,7 @@ object Retrieval {
     * corpus to group-vocabulary grain; df is a term-keyed aggregate
     * OVER that frame (never the corpus); the group count rides a 1-row
     * broadcast. Ranking is the grouped bounded-heap
-    * [[graft.functions.TopKStrAgg]] — NOT a `row_number` window: a
+    * [[graft.functions.TopKAgg]] — NOT a `row_number` window: a
     * window partitioned by group would funnel a dominant source's
     * entire distinct-term vocabulary (10⁸+ rows on web-scale text)
     * through one task's sort, while the heap partial keeps ≤k
@@ -475,7 +475,7 @@ object Retrieval {
             round(log(col("n_groups").cast("double")
               / col("df").cast("double")), 6), 6).as("score")))
     val top = scored.groupBy(col(groupCol))
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("score"), col("term"), k).as("tk"))
       .select(col(groupCol), explode(col("tk")).as("t"))
       .select(col(groupCol), col("t.key").as("term"),
@@ -795,12 +795,12 @@ object Retrieval {
     * partitions by doc (frame = one doc's tokens, the q_sessions_gap
     * shape), freq/deg/phrase scores are (doc, ·)-keyed hash aggs, and
     * the per-doc top-k rides the bounded-heap
-    * [[graft.functions.TopKStrAgg]] (≤k per (doc, partition)
+    * [[graft.functions.TopKAgg]] (≤k per (doc, partition)
     * map-side) — nothing corpus-grained anywhere.
     *
     * Determinism: word scores round(deg/freq, 6) from exact integer
     * counts; phrase scores DECIMAL(38,12)-summed then 6-dp; ties break
-    * on the phrase string (the TopKStrAgg total order ≡ the oracle's
+    * on the phrase string (the `top_k_str` total order ≡ the oracle's
     * ORDER BY score DESC, phrase). Duplicate phrase occurrences within
     * a doc score identically by construction and collapse to one row.
     *
@@ -839,7 +839,7 @@ object Retrieval {
       .select(col("doc_id"), col("phrase"), col("score"))
       .distinct()
     phraseScores.groupBy(col("doc_id"))
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("score"), col("phrase"), k).as("tk"))
       .select(col("doc_id"), explode(col("tk")).as("t"))
       .select(col("doc_id"), col("t.rank").as("rank"),

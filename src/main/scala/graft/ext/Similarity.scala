@@ -23,7 +23,7 @@ object Similarity {
     * allocation). Bit-identical to [[dotHof]]: same left-to-right double
     * summation. */
   def dot(a: Column, b: Column): Column =
-    graft.functions.FloatVecDot.float_dot(a, b)
+    graft.functions.VecDot.float_dot(a, b)
 
   /** Built-in-composed dot product (interpreted HOF path) — kept as the
     * reference implementation for arbitrary numeric arrays and for
@@ -563,7 +563,7 @@ object Similarity {
           / (sqrt(dotH(col("e"), col("e")))
             * sqrt(dotH(col("c"), col("c")))), 6).as("cos"))
     scored.groupBy(col("source"))
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         -col("cos"), col("vec_id").cast("string"), k).as("tk"))
       .select(col("source"), explode(col("tk")).as("t"))
       .select(col("source"), col("t.rank").as("rank"),
@@ -671,13 +671,13 @@ object Similarity {
 
   /** Exact integer dot product of two int8 code arrays (≤ 127² per term,
     * sums exact in long for any realistic dimensionality) — the native
-    * codegen'd [[graft.functions.IntVecDot]]; integer addition is
+    * codegen'd [[graft.functions.VecDot]]; integer addition is
     * associative-exact so it is identical to the HOF
     * `aggregate(zip_with(...))` form it replaced (differential-tested in
     * ExtSpec), just without the per-pair array allocation and
     * interpreted lambda dispatch in the corpus-scan scoring loop. */
   def intDot(a: Column, b: Column): Column =
-    graft.functions.IntVecDot.int_dot(a, b)
+    graft.functions.VecDot.int_dot(a, b)
 
   /** The interpreted HOF reference form of [[intDot]] (spec baseline). */
   def intDotHof(a: Column, b: Column): Column =

@@ -382,7 +382,7 @@ object TextStats {
     * Scale: token and bigram hash aggs (map-side partials), two
     * unigram equi-joins onto the SUPPORT-FILTERED bigram frame (never
     * the raw corpus), 1-row total broadcasts, and the bounded-heap
-    * [[graft.functions.TopKStrAgg]] for ranking — no window over the
+    * [[graft.functions.TopKAgg]] for ranking — no window over the
     * vocabulary. Determinism: PMI's operands promote to double BEFORE
     * any multiply (the mutualInformation overflow rule — c(ab)·N² can
     * pass 2^63 at corpus scale) with the identical left-associated
@@ -414,7 +414,7 @@ object TextStats {
             / (col("n_bi").cast("double") * col("ca").cast("double")
               * col("cb").cast("double"))), 6).as("pmi")))
     scored
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("pmi"), col("bg"), k).as("tk"))
       .select(explode(col("tk")).as("t"))
       .select(col("t.rank").as("rank"), col("t.key").as("bigram"),

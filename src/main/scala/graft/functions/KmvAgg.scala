@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 /** KMV (k-minimum-values) distinct-count sketch buffer: the k smallest
   * DISTINCT hash values seen so far. A TreeSet gives dedup + ordering in
   * one structure; admission against a full buffer is one `last()`
-  * comparison. Unlike [[TopKBuffer]], set semantics are load-bearing:
+  * comparison. Unlike [[TopKHeap]], set semantics are load-bearing:
   * re-observing the same value must NOT occupy a second slot, or the
   * k-th minimum shrinks and the estimate biases high.
   */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * (BigDecimal HALF_UP) — so for NON-NULL float elements the result is
   * bit-identical to the HOF+round form and to the DuckDB oracle's
   * in-order list_dot_product (differential-tested in ExtSpec). Null
-  * elements contribute 0, matching [[FloatVecDot]]'s totality contract.
+  * elements contribute 0, matching [[VecDot]]'s totality contract.
   *
   * Scale: at 100 TB this is the map-stage inner loop of reducing every
   * embedding; dOut×dim multiply-adds per row with zero per-row overhead

@@ -24,12 +24,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * ExtSpec equivalences (full-probe IVFPQ ≡ PQ-only, shortlist recall
   * floors) are unchanged:
   *  - dots accumulate `(double) a[t] * (double) b[t]` in ascending t
-  *    ([[FloatVecDot]]'s order);
+  *    ([[VecDot]]'s order);
   *  - distances are `|c|² − 2·dot` with `|c|²` summed left-to-right at
   *    model build time;
   *  - argmin keeps the FIRST minimum (`array_position(arr, array_min)`
   *    semantics);
-  *  - null / short embeddings degrade like [[FloatVecDot]]: null elements
+  *  - null / short embeddings degrade like [[VecDot]]: null elements
   *    contribute 0, loops run to the shorter length.
   */
 object PqOps {
@@ -61,7 +61,7 @@ object PqOps {
   }
 
   /** dot(emb[base ..< base+subDim], books[off ..< off+subDim]) with
-    * FloatVecDot's exact semantics (ascending, null→skip, min length). */
+    * VecDot's float_dot semantics (ascending, null→skip, min length). */
   private def subDot(emb: ArrayData, base: Int, fb: FlatBooks,
       off: Int): Double = {
     val n = math.min(fb.subDim, math.max(0, emb.numElements() - base))

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, NumericType}
 
-/** Profiling / stats aggregations (SURVEY.md §2.4, A1-A5).
+/** Profiling / stats aggregations (SURVEY.md §2.4, A1-A2).
   *
   * Every stat here is a single distributed aggregate over the data — one
   * pass, map-side partial aggregation, a scalar per column back to the
@@ -19,23 +19,6 @@ object Profiling {
   def nullCounts(df: DataFrame): DataFrame =
     df.select(df.columns.map(c =>
       sum(qcol(c).isNull.cast("long")).as(c)).toSeq: _*)
-
-  /** A5 companion — per-column NON-null counts, used to drop all-null
-    * columns (`dropna(axis=1, how='all')`, ecommerce_s3_to_pg.py:202-203). */
-  def nonNullCounts(df: DataFrame): Map[String, Long] = {
-    if (df.columns.isEmpty) return Map.empty
-    val row: Row = df.select(df.columns.map(c =>
-      count(qcol(c)).as(c)).toSeq: _*).head()
-    df.columns.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
-  /** A5 — drop columns whose non-null count is zero. One stats action, then
-    * a plain projection. */
-  def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val counts = nonNullCounts(df)
-    val keep = df.columns.filter(c => counts.getOrElse(c, 0L) > 0L)
-    df.select(keep.map(qcol).toSeq: _*)
-  }
 
   /** A1 — profiling summary with `df.describe(include='all')` parity
     * (`inspect_df`, ecommerce_s3_to_pg.py:31-43): per column, count /
@@ -127,7 +110,7 @@ object Profiling {
     *
     * Shape: ONE key-grain hash agg (map-side partials), a 1-row totals
     * broadcast, and the bounded-heap
-    * [[graft.functions.TopKStrAgg]] for the ranking — no window, no
+    * [[graft.functions.TopKAgg]] for the ranking — no window, no
     * sort, ≤ topN·partitions heap rows cross the shuffle. Total order
     * (count desc, key asc) matches a row_number window bit-exactly. */
   def keySkew(df: DataFrame, keyCol: String, topN: Int): DataFrame = {
@@ -137,7 +120,7 @@ object Profiling {
     val tot = counts.agg(sum(col("n")).as("total"),
       count(lit(1)).as("n_keys"))
     counts
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("n").cast("double"), col("key"), topN).as("tk"))
       .select(explode(col("tk")).as("t"))
       .select(col("t.rank").as("rank"), col("t.key").as("key"),

@@ -1652,7 +1652,7 @@ object StreamPipeline {
   /** Per-hour TOP-K high-value events as a structured stream — the
     * trending/alerting shape ("this hour's biggest transactions") next
     * to the tumbling rollup: one stateful window aggregate whose state
-    * per hour is the K-BOUNDED heap of [[graft.functions.TopKStrAgg]]
+    * per hour is the K-BOUNDED heap of [[graft.functions.TopKAgg]]
     * (k·(8 B + key) bytes whatever the event volume — an exact top-k
     * would buffer every event of the hour in the state store). The
     * heap is a TypedImperativeAggregate, so map-side partials push k
@@ -1670,7 +1670,7 @@ object StreamPipeline {
       normalizeEvents = true)
     val agg = ev.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(graft.functions.TopKStrAgg.top_k_str(
+      .agg(graft.functions.TopKAgg.top_k_str(
         col("value"), col("event_id").cast("string"), k).as("tk"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")

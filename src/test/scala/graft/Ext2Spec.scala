@@ -174,7 +174,7 @@ class Ext2Spec extends SparkSpec {
     val b = coded.select((col("vec_id") - 1).as("vec_id"), col("q").as("qb"))
     val diff = a.join(b, "vec_id")
       .select(
-        graft.functions.IntVecDot.int_dot(col("qa"), col("qb")).as("native"),
+        graft.functions.VecDot.int_dot(col("qa"), col("qb")).as("native"),
         Similarity.intDotHof(col("qa"), col("qb")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(diff == 0, "native and HOF integer dots must agree everywhere")
@@ -187,9 +187,61 @@ class Ext2Spec extends SparkSpec {
       (Array.empty[Int], Array.empty[Int], 0L))
       .toDF("a", "b", "expect")
     val bad = df.filter(
-      graft.functions.IntVecDot.int_dot(col("a"), col("b"))
+      graft.functions.VecDot.int_dot(col("a"), col("b"))
         =!= col("expect")).count()
     assert(bad == 0)
+
+    // both dot kinds, interpreted and generated: a min-length partial
+    // sum, null elements as 0, empty arrays, exact binary fractions
+    val edges = Seq(
+      (Seq(Some(1), Some(2), Some(3)), Seq(Some(4), Some(5), Some(6)),
+        Seq(Some(1.5f), Some(2f), Some(-1f)), Seq(Some(2f), Some(0.25f), Some(4f))),
+      (Seq(Some(1), None, Some(3)), Seq(Some(4), Some(5)),
+        Seq(Some(0.5f), None, Some(2f)), Seq(Some(2f), Some(8f), Some(1f), Some(9f))),
+      (Seq.empty[Option[Int]], Seq(Some(7)), Seq.empty[Option[Float]], Seq(Some(1f))))
+      .toDF("ia", "ib", "fa", "fb")
+      .repartition(1) // not a local relation: no optimizer-time folding
+    def dots(): (Seq[String], Set[(Long, Double)], String) = {
+      val q = edges.select(
+        graft.functions.VecDot.int_dot(col("ia"), col("ib")),
+        graft.functions.VecDot.float_dot(col("fa"), col("fb")))
+      val rows = q.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+      (q.columns.toSeq, rows, q.queryExecution.executedPlan.toString)
+    }
+    val interpretedConfs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpretedConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val interpreted =
+      try { interpretedConfs.foreach { case (k, v) => spark.conf.set(k, v) }; dots() }
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val generated = dots()
+    val expect = Set((32L, -0.5), (4L, 3.0), (0L, 0.0))
+    assert(interpreted._2 == expect, "interpreted eval")
+    assert(generated._2 == expect, "generated code")
+    assert(!interpreted._3.contains("*("), interpreted._3)
+    assert(generated._3.contains("*("), generated._3)
+    assert(generated._1 == Seq("intvecdot(ia, ib)", "floatvecdot(fa, fb)"))
+
+    // each function keeps its own type-check message
+    graft.GraftExtensions.register(spark)
+    Seq((1.0, "x", 1L, Seq(1f), Seq(1))).toDF("s", "key", "n", "f", "i")
+      .createOrReplaceTempView("dot_edges")
+    def failure(q: => org.apache.spark.sql.DataFrame): String =
+      intercept[org.apache.spark.sql.AnalysisException](q).getMessage
+    val checks = Seq(
+      failure(spark.sql("SELECT top_k(s, key, 3) FROM dot_edges")) ->
+        "TopKAgg requires (DOUBLE score, BIGINT id), got double, string",
+      failure(spark.table("dot_edges").agg(graft.functions.TopKAgg.top_k_str(
+        col("s"), col("n"), 3))) ->
+        "TopKStrAgg requires (DOUBLE score, STRING key), got double, bigint",
+      failure(spark.sql("SELECT int_dot(f, f) FROM dot_edges")) ->
+        "IntVecDot requires two ARRAY<INT> inputs, got array<float> and array<float>",
+      failure(spark.sql("SELECT float_dot(i, f) FROM dot_edges")) ->
+        "FloatVecDot requires two ARRAY<FLOAT> inputs, got array<int> and array<float>")
+    checks.foreach { case (msg, want) => assert(msg.contains(want), msg) }
   }
 
   test("contentType: code, math, and prose fixtures route correctly") {

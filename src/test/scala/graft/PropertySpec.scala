@@ -1,47 +1,125 @@
 package graft
 
-import graft.functions.TopKBuffer
+import java.nio.ByteBuffer
+
+import scala.util.Random
+
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{TopKAgg, TopKBuffer, TopKStrBuffer}
 
 /** Randomized (seeded, deterministic) checks for the custom algorithmic
-  * kernels: the bounded-heap top-k buffer against a sort-take reference
-  * model, and the distributed prefix sum against the sequential fold
+  * kernels: the bounded-heap top-k buffer, over long ids and over string
+  * keys, against a sort-take reference model and through its serialized
+  * form, and the distributed prefix sum against the sequential fold
   * across random lengths and layouts.
   */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
-  private def randomScored(rnd: scala.util.Random, n: Int) =
-    List.fill(n)((math.rint(rnd.between(-100.0, 100.0) * 1e6) / 1e6,
-      rnd.nextLong(50)))
-
-  test("TopKBuffer == sort-take reference across 200 random cases") {
-    val rnd = new scala.util.Random(42)
-    (1 to 200).foreach { trial =>
-      val xs = randomScored(rnd, rnd.nextInt(60))
-      val k = 1 + rnd.nextInt(12)
-      val buf = new TopKBuffer(k)
-      xs.foreach { case (s, i) => buf.add(s, i) }
-      val ref = xs.sortBy { case (s, i) => (-s, i) }.take(k)
-      assert(buf.sortedPairs.toSeq == ref, s"trial=$trial k=$k")
+  /** One heap key kind under the shared properties: how to draw a
+    * (score, key), the reference best-first order, and the heap calls. */
+  private final class Kind[K, H](
+      val name: String,
+      val draw: Random => (Double, K),
+      val reference: Seq[(Double, K)] => Seq[(Double, K)],
+      make: Int => H,
+      val add: (H, (Double, K)) => Unit,
+      val merge: (H, H) => Unit,
+      val pairs: H => Seq[(Double, K)]) {
+    def filled(k: Int, xs: Seq[(Double, K)]): H = {
+      val h = make(k)
+      xs.foreach(add(h, _))
+      h
     }
   }
 
-  test("TopKBuffer merge == single buffer over the concatenation") {
-    val rnd = new scala.util.Random(7)
+  private val longIds = new Kind[Long, TopKBuffer]("long",
+    rnd => (math.rint(rnd.between(-100.0, 100.0) * 1e6) / 1e6, rnd.nextLong(50)),
+    _.sortBy { case (s, i) => (-s, i) },
+    new TopKBuffer(_), (h, p) => h.add(p._1, p._2), _.merge(_),
+    _.sortedPairs.toSeq)
+
+  /** Pieces with shared prefixes and 2-, 3- and 4-byte UTF-8 code points
+    * (U+FF21 sorts below U+1F600 in UTF-8 but above it in UTF-16). */
+  private val keyPieces =
+    Seq("a", "ab", "abc", "b", "\u00e9", "\u65e5\u672c", "\uff21", "\ud83d\ude00")
+
+  /** Six score values, so equal scores are common and the key decides. */
+  private val stringKeys = new Kind[UTF8String, TopKStrBuffer]("string",
+    rnd => (rnd.nextInt(6) / 2.0, UTF8String.fromString(
+      Seq.fill(1 + rnd.nextInt(3))(keyPieces(rnd.nextInt(keyPieces.size))).mkString)),
+    _.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2.compareTo(b._2) < 0)),
+    new TopKStrBuffer(_), (h, p) => h.add(p._1, p._2), _.merge(_),
+    _.sortedPairs.toSeq)
+
+  private def sortTake[K, H](kind: Kind[K, H], seed: Int): Unit = {
+    val rnd = new Random(seed)
     (1 to 200).foreach { trial =>
-      val a = randomScored(rnd, rnd.nextInt(40))
-      val b = randomScored(rnd, rnd.nextInt(40))
-      val k = 1 + rnd.nextInt(8)
-      val merged = new TopKBuffer(k)
-      a.foreach { case (s, i) => merged.add(s, i) }
-      val other = new TopKBuffer(k)
-      b.foreach { case (s, i) => other.add(s, i) }
-      merged.merge(other)
-      val whole = new TopKBuffer(k)
-      (a ++ b).foreach { case (s, i) => whole.add(s, i) }
-      assert(merged.sortedPairs.toSeq == whole.sortedPairs.toSeq,
-        s"trial=$trial k=$k")
+      val xs = List.fill(rnd.nextInt(60))(kind.draw(rnd))
+      val k = 1 + rnd.nextInt(12)
+      assert(kind.pairs(kind.filled(k, xs)) == kind.reference(xs).take(k),
+        s"${kind.name} trial=$trial k=$k")
     }
+  }
+
+  private def mergeConcat[K, H](kind: Kind[K, H], seed: Int): Unit = {
+    val rnd = new Random(seed)
+    (1 to 200).foreach { trial =>
+      val a = List.fill(rnd.nextInt(40))(kind.draw(rnd))
+      val b = List.fill(rnd.nextInt(40))(kind.draw(rnd))
+      val k = 1 + rnd.nextInt(8)
+      val merged = kind.filled(k, a)
+      kind.merge(merged, kind.filled(k, b))
+      assert(kind.pairs(merged) == kind.pairs(kind.filled(k, a ++ b)),
+        s"${kind.name} trial=$trial k=$k")
+    }
+  }
+
+  /** Serialize → deserialize, asserting the byte layout:
+    * `int n`, then n × (`double score`, key as `readKey` reads it). */
+  private def roundTrip[K, H](kind: Kind[K, H], seed: Int,
+      serialize: H => Array[Byte], deserialize: Array[Byte] => H,
+      readKey: ByteBuffer => K): Unit = {
+    val rnd = new Random(seed)
+    (1 to 100).foreach { trial =>
+      val h = kind.filled(1 + rnd.nextInt(8),
+        List.fill(rnd.nextInt(20))(kind.draw(rnd)))
+      val bytes = serialize(h)
+      val bb = ByteBuffer.wrap(bytes)
+      val parsed = Seq.fill(bb.getInt)((bb.getDouble, readKey(bb)))
+      assert(!bb.hasRemaining, s"${kind.name} trial=$trial: trailing bytes")
+      assert(kind.reference(parsed) == kind.pairs(h), s"${kind.name} trial=$trial")
+      val back = deserialize(bytes)
+      assert(kind.pairs(back) == kind.pairs(h), s"${kind.name} trial=$trial")
+      assert(serialize(back).sameElements(bytes), s"${kind.name} trial=$trial")
+    }
+  }
+
+  test("TopKBuffer == sort-take reference across 200 random cases") {
+    sortTake(longIds, 42)
+    sortTake(stringKeys, 43)
+  }
+
+  test("TopKBuffer merge == single buffer over the concatenation") {
+    mergeConcat(longIds, 7)
+    mergeConcat(stringKeys, 8)
+  }
+
+  test("top-k buffers survive serialize -> deserialize in their fixed " +
+      "byte layouts: 4 + 16n bytes for long ids, (double, int len, UTF-8 " +
+      "bytes) per string key") {
+    val ids = TopKAgg(Literal(0.0), Literal(0L), 8)
+    roundTrip[Long, TopKBuffer](longIds, 3, ids.serialize,
+      ids.deserialize(_).asInstanceOf[TopKBuffer], _.getLong)
+    val strs = TopKAgg(Literal(0.0), Literal(""), 8, stringKey = true)
+    roundTrip[UTF8String, TopKStrBuffer](stringKeys, 4, strs.serialize,
+      strs.deserialize(_).asInstanceOf[TopKStrBuffer], { bb =>
+        val b = new Array[Byte](bb.getInt)
+        bb.get(b)
+        UTF8String.fromBytes(b)
+      })
   }
 
   test("BMP codec roundtrip == identity on random dims (all pad cases) " +
