@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Curation, Multimodal, PqIndex, Retrieval, Similarity, Sketches, TextDedup, TextStats}
+import graft.ops.Scratch
 
 /** LLM-data-pipeline extension queries (SURVEY.md §2.10): dedup family,
   * similarity search, text analysis, multimodal plumbing — each with a
@@ -1671,32 +1672,21 @@ object ExtQueries {
     * streaming capstone grows and the corpus-DQ monitor reads), so the
     * registered queries exercise the format batch↔stream
     * interchangeability rests on, not session-frame conventions. The
-    * result is localized (bounded by the batch-sized output) so the
-    * temp index tree deletes before returning — the AvailableNow
-    * adapter convention. */
+    * artifact lives in a [[Scratch]] tree, deleted before returning. */
   private def corpusIncrOnDisk(s: org.apache.spark.sql.SparkSession,
       d: String, pick: ((DataFrame, DataFrame)) => DataFrame)
       : DataFrame = {
     import graft.ext.ArchiveIndex
     val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-    val base = java.nio.file.Files.createTempDirectory("graft-corpusincr")
-    try {
+    Scratch("graft-corpusincr") { base =>
       ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
-        "text", "doc_id", nBuckets = 32, base.toString)
-      val out = pick(Curation.corpusBuildIncremental(
+        "text", "doc_id", nBuckets = 32, base)
+      pick(Curation.corpusBuildIncremental(
         corpusIncrementalIncoming(docs), "text", "doc_id",
-        ArchiveIndex.readFp(s, base.toString)
-          .select("fp", "representative_id"),
-        ArchiveIndex.readBands(s, base.toString),
-        ArchiveIndex.readHashes(s, base.toString),
+        ArchiveIndex.readFp(s, base).select("fp", "representative_id"),
+        ArchiveIndex.readBands(s, base),
+        ArchiveIndex.readHashes(s, base),
         minQuality = 0.72))
-      ArchiveIndex.localFrame(out)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(base.toFile)
     }
   }
 
@@ -1768,27 +1758,18 @@ object ExtQueries {
       pick: ((DataFrame, DataFrame)) => DataFrame): DataFrame = {
     import graft.ext.{ArchiveIndex, Curation}
     val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-    val base = java.nio.file.Files.createTempDirectory("graft-day3")
-    try {
+    Scratch("graft-day3") { base =>
       ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
-        "text", "doc_id", nBuckets = 32, base.toString)
+        "text", "doc_id", nBuckets = 32, base)
       val (cleaned2, _) = Curation.corpusBuildIncrementalCommit(
         corpusIncrementalIncoming(docs), "text", "doc_id",
-        base.toString, minQuality = 0.72)
-      val out = pick(Curation.corpusBuildIncremental(
+        base, minQuality = 0.72)
+      pick(Curation.corpusBuildIncremental(
         day3Feed(cleaned2, docs), "text", "doc_id",
-        ArchiveIndex.readFp(s, base.toString)
-          .select("fp", "representative_id"),
-        ArchiveIndex.readBands(s, base.toString),
-        ArchiveIndex.readHashes(s, base.toString),
+        ArchiveIndex.readFp(s, base).select("fp", "representative_id"),
+        ArchiveIndex.readBands(s, base),
+        ArchiveIndex.readHashes(s, base),
         minQuality = 0.72))
-      ArchiveIndex.localFrame(out)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(base.toFile)
     }
   }
 
@@ -3242,24 +3223,15 @@ object ExtQueries {
   val simIvfDisk = Q(
     "ext_sim_ivf_disk_topk",
     (s, d) => {
-      import graft.ext.{ArchiveIndex, IvfIndex}
+      import graft.ext.IvfIndex
       val emb = Tables.embeddings(s, d)
       val model = IvfIndex.seedModel(emb, nlist = 8)
-      val base = java.nio.file.Files.createTempDirectory("graft-ivfdisk")
-      try {
+      Scratch("graft-ivfdisk") { base =>
         IvfIndex.writeIndex(emb.filter(col("vec_id") % 2 === 0), model,
-          base.toString, nBuckets = 8)
-        IvfIndex.appendVectors(emb.filter(col("vec_id") % 2 === 1),
-          base.toString)
-        IvfIndex.compactIndex(s, base.toString)
-        ArchiveIndex.localFrame(IvfIndex.searchOnDisk(s, base.toString,
-          col("vec_id") < 8, k = 5, nprobe = 2))
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(base.toFile)
+          base, nBuckets = 8)
+        IvfIndex.appendVectors(emb.filter(col("vec_id") % 2 === 1), base)
+        IvfIndex.compactIndex(s, base)
+        IvfIndex.searchOnDisk(s, base, col("vec_id") < 8, k = 5, nprobe = 2)
       }
     },
     simIvf.oracle)

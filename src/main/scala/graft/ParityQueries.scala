@@ -240,7 +240,14 @@ object ParityQueries {
 
   val a2 = Q(
     "a2_null_counts",
-    (s, d) => Profiling.nullCounts(nullDerived(s, d)),
+    (s, d) => {
+      // A2 (`df.isnull().sum()`, ecommerce_s3_to_pg.py:42-43) from the
+      // fill counts, as a5: one row, one null count per column
+      val df = nullDerived(s, d)
+      val c = CacheScope.counts(df)
+      s.range(1).select(df.columns.toSeq.zip(c.nonNull).map {
+        case (name, nn) => lit(c.rows - nn).as(name) }: _*)
+    },
     Some(s"""SELECT CAST(0 AS BIGINT) AS o_orderkey,
       CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS status_n,
       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS prio_n,

@@ -33,11 +33,7 @@ object Verify {
         // parquet dump would mask this failure as a green row, and an
         // aborted write can leave a _temporary/ SUBDIRECTORY with part
         // files, so the delete must be recursive, not top-level-only
-        def rmRf(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRf)
-          f.delete(); ()
-        }
-        rmRf(dir)
+        graft.ops.Scratch.rmRf(dir)
         dir.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_VERIFY_ERROR.txt"),
           msg.take(4000))

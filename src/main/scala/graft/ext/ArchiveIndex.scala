@@ -612,16 +612,4 @@ object ArchiveIndex {
     compactBucketedDir(spark, ibDir(dir), gcGraceMs)
     compactBucketedDir(spark, ihDir(dir), gcGraceMs)
   }
-
-  /** Copy a (bounded) result into a SELF-CONTAINED local DataFrame so a
-    * registered adapter can delete its temp index tree before
-    * returning — the runAvailableNow convention, shared here by the
-    * batch adapters that round-trip through the on-disk format. Test
-    * adapter plumbing, bounded by the batch-sized result; the operator
-    * itself never collects. */
-  private[graft] def localFrame(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, NumericType}
 
-/** Profiling / stats aggregations (SURVEY.md §2.4, A1-A2).
+/** Profiling / stats aggregations (SURVEY.md §2.4, A1).
   *
   * Every stat here is a single distributed aggregate over the data — one
   * pass, map-side partial aggregation, a scalar per column back to the
@@ -13,12 +13,6 @@ import org.apache.spark.sql.types.{DecimalType, NumericType}
   * 100 TB.
   */
 object Profiling {
-
-  /** A2 — per-column null counts (`df.isnull().sum()`,
-    * ecommerce_s3_to_pg.py:42-43): one row, one column per input column. */
-  def nullCounts(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c =>
-      sum(qcol(c).isNull.cast("long")).as(c)).toSeq: _*)
 
   /** A1 — profiling summary with `df.describe(include='all')` parity
     * (`inspect_df`, ecommerce_s3_to_pg.py:31-43): per column, count /

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.CacheScope
+import graft.ops.{CacheScope, Scratch}
 import graft.pipeline.Cleaners
 import graft.sinks.{PgLoad, Sinks}
 import graft.sources.CsvSource
@@ -60,17 +60,13 @@ object StreamPipeline {
   def cleanClassStream(
       raw: DataFrame, cls: CsvSource.FileClass, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    applyConfiguredStateStore(raw.sparkSession)
     val sid = runNamespace(checkpointDir)
-    raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    startForeachBatch(raw, checkpointDir, availableNow = true) {
+      (batch, batchId) =>
         try Sinks.writeCsvAll(cleanBatch(batch, cls).csvZone,
           s"$outDir/run_$sid/batch_$batchId"): Unit
         finally CacheScope.releaseAll() // per-batch: no leak
-      }
-      .start()
+    }
   }
 
   /** The run-dir namespace for a checkpoint: an 8-hex md5 of the
@@ -188,11 +184,8 @@ object StreamPipeline {
     val legacyFor: Long => Seq[String] =
       if (legacySids.isEmpty) _ => Nil
       else id => legacySids.map(l => s"$cls#$l#$id")
-    applyConfiguredStateStore(raw.sparkSession)
-    raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    startForeachBatch(raw, checkpointDir, availableNow = true) {
+      (batch, batchId) =>
         try {
           val c = cleanBatch(batch, cls)
           PgLoad.loadAllStaged(c.amazonClean, c.amazonDuplicates, c.sale,
@@ -202,7 +195,20 @@ object StreamPipeline {
             ledgerKey = Some(s"$cls#$sid#$batchId"),
             legacyLedgerKeys = legacyFor(batchId)): Unit
         } finally CacheScope.releaseAll() // per-batch: no leak
-      }
+    }
+  }
+
+  /** Start `in` under `f` per micro-batch: the one foreachBatch start of
+    * this module. Applies [[StateStoreConfKey]], checkpoints to
+    * `ckptDir` and, when `availableNow`, drains then stops. */
+  private def startForeachBatch(in: DataFrame, ckptDir: String,
+      availableNow: Boolean)(f: (DataFrame, Long) => Unit)
+      : StreamingQuery = {
+    applyConfiguredStateStore(in.sparkSession)
+    val writer = in.writeStream
+      .option("checkpointLocation", ckptDir)
+      .foreachBatch(f)
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
   }
 
@@ -221,44 +227,26 @@ object StreamPipeline {
     applyConfiguredStateStore(spark)
     val qn = prefix +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-stream-ckpt")
-    // finally-guarded so a failed start/drain never leaks the temp
-    // checkpoint tree (r11 ADVICE — same discipline as the temp-dir
-    // adapters below) NOR the named memory-sink view: memory sinks
-    // retain all rows for the session lifetime, so the dropTempView
-    // must run even when start/awaitTermination/localize throws (the
-    // view may not exist if start() itself failed — drop is guarded).
-    try withStatePartitions(spark) {
-      val q = out.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode)
-        .format("memory")
-        .queryName(qn)
-        .start()
-      q.awaitTermination()
-      localize(spark.table(qn))
+    // the checkpoint is a [[Scratch]] tree; the named memory-sink view
+    // is dropped after the copy even when start/drain throws: memory
+    // sinks retain all rows for the session lifetime (the view may not
+    // exist if start() itself failed — drop is guarded)
+    try Scratch("graft-stream-ckpt") { ckpt =>
+      withStatePartitions(spark) {
+        out.writeStream
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .format("memory")
+          .queryName(qn)
+          .start()
+          .awaitTermination()
+        spark.table(qn)
+      }
     } finally {
       try spark.catalog.dropTempView(qn)
       catch { case scala.util.control.NonFatal(_) => }
-      rmRf(ckpt.toFile)
     }
-  }
-
-  /** Recursive temp-tree delete shared by every AvailableNow adapter. */
-  private def rmRf(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRf)
-    f.delete(); ()
-  }
-
-  /** Copy a (bounded) result into a SELF-CONTAINED local DataFrame so
-    * the adapter can delete its temp tree before returning — the
-    * runAvailableNow convention shared by the LSH probe adapters. */
-  private def localize(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** File-source stream over one parquet table in the sf dir — the
@@ -912,17 +900,8 @@ object StreamPipeline {
       idxBands.select(col("band"), col("id").as("archive_id")))
     val ih = graft.ops.CacheScope.persist(
       idxHashes.select(col("id").as("archive_id"), col("hs").as("hs_a")))
-    val raw = streamTable(spark, dir, "documents.parquet",
-      normalizeEvents = false)
-    val incoming = raw.select(explode(array(
-        when(col("doc_id") % 2 === 1,
-          struct(col("doc_id").as("doc_id"), col("text").as("text"))),
-        when(col("doc_id") % 10 === 0,
-          struct((col("doc_id") + 600000L).as("doc_id"),
-            concat(col("text"), lit(" zz extra")).as("text")))))
-        .as("d"))
-      .filter(col("d").isNotNull)
-      .select(col("d.doc_id").as("id"), col("d.text").as("text"))
+    val incoming = twinFeed(streamTable(spark, dir, "documents.parquet",
+        normalizeEvents = false), twinLegs)
       // deterministic ingest time (one doc per second from a fixed
       // epoch) — the drain replays exactly; in production this is the
       // source's arrival timestamp
@@ -963,21 +942,13 @@ object StreamPipeline {
     * probes in exactly one batch. */
   def lshDedupPrunedStart(incoming: DataFrame, threshold: Double,
       nBuckets: Int, pairsDir: String, ibDir: String, ihDir: String,
-      ckptDir: String, availableNow: Boolean): StreamingQuery = {
-    val spark = incoming.sparkSession
-    applyConfiguredStateStore(spark)
-    val writer = incoming.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (bBands, bHs) = prunedProbeBatch(batch, threshold, nBuckets,
-          pairsDir, ibDir, ihDir)
-        graft.ops.CacheScope.release(bBands)
-        graft.ops.CacheScope.release(bHs)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
+      ckptDir: String, availableNow: Boolean): StreamingQuery =
+    startForeachBatch(incoming, ckptDir, availableNow) { (batch, _) =>
+      val (bBands, bHs) = prunedProbeBatch(batch, threshold, nBuckets,
+        pairsDir, ibDir, ihDir)
+      CacheScope.release(bBands)
+      CacheScope.release(bHs)
+    }
 
   /** One micro-batch of the bucket-pruned probe: shingle once, prune
     * both index reads to the batch's touched buckets, verify
@@ -1060,10 +1031,10 @@ object StreamPipeline {
     * oracle verbatim. */
   def lshDedupGrowPrunedStart(incoming: DataFrame, threshold: Double,
       nBuckets: Int, pairsDir: String, ibDir: String, ihDir: String,
-      ckptDir: String, availableNow: Boolean, compactEvery: Int = 16,
+      ckptDir: String, availableNow: Boolean,
+      compactEvery: Int = DefaultCompactEvery,
       gcGraceMs: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
-    applyConfiguredStateStore(spark)
     if (compactEvery <= 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "lshDedupGrowPrunedStart: compactEvery is disabled — index " +
@@ -1073,26 +1044,24 @@ object StreamPipeline {
           "default cadence 16 (166 s vs 93 s over 32 batches, " +
           "SCALEPROBE_r13 compact_cost); disable only for " +
           "short-lived drains")
-    val writer = incoming.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (bBands, bHs) = prunedProbeBatch(batch, threshold, nBuckets,
-          pairsDir, ibDir, ihDir)
-        graft.ext.ArchiveIndex.appendBucketedTable(
-          bBands, "band", ibDir, nBuckets)
-        graft.ext.ArchiveIndex.appendBucketedTable(
-          bHs, "id", ihDir, nBuckets)
-        graft.ops.CacheScope.release(bBands)
-        graft.ops.CacheScope.release(bHs)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          graft.ext.ArchiveIndex.compactBucketedDir(spark, ibDir, gcGraceMs)
-          graft.ext.ArchiveIndex.compactBucketedDir(spark, ihDir, gcGraceMs)
-        }
-        ()
+    startForeachBatch(incoming, ckptDir, availableNow) { (batch, batchId) =>
+      val (bBands, bHs) = prunedProbeBatch(batch, threshold, nBuckets,
+        pairsDir, ibDir, ihDir)
+      graft.ext.ArchiveIndex.appendBucketedTable(
+        bBands, "band", ibDir, nBuckets)
+      graft.ext.ArchiveIndex.appendBucketedTable(
+        bHs, "id", ihDir, nBuckets)
+      CacheScope.release(bBands)
+      CacheScope.release(bHs)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        graft.ext.ArchiveIndex.compactBucketedDir(spark, ibDir, gcGraceMs)
+        graft.ext.ArchiveIndex.compactBucketedDir(spark, ihDir, gcGraceMs)
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+    }
   }
+
+  /** [[lshDedupGrowPrunedStart]]'s default compaction cadence. */
+  private val DefaultCompactEvery = 16
 
   /** Write the [[graft.ext.TextDedup.lshIndex]] frames of `archive` as
     * the bucket-partitioned on-disk index [[lshDedupPrunedStart]]
@@ -1114,29 +1083,19 @@ object StreamPipeline {
   def dedupLshPrunedAvailableNow(spark: SparkSession, dir: String,
       threshold: Double = 0.5, nBuckets: Int = 32): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshprune")
-    try {
+    Scratch("graft-lshprune") { base =>
       import graft.ext.ArchiveIndex
       val (pairsDir, idx, ckpt) =
         (s"$base/pairs", s"$base/idx", s"$base/ckpt")
       ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
         "text", "doc_id", nBuckets, idx)
       val (ibDir, ihDir) = (ArchiveIndex.ibDir(idx), ArchiveIndex.ihDir(idx))
-      val raw = streamTable(spark, dir, "documents.parquet",
-        normalizeEvents = false)
-      val incoming = raw.select(explode(array(
-          when(col("doc_id") % 2 === 1,
-            struct(col("doc_id").as("id"), col("text").as("text"))),
-          when(col("doc_id") % 10 === 0,
-            struct((col("doc_id") + 600000L).as("id"),
-              concat(col("text"), lit(" zz extra")).as("text")))))
-          .as("d"))
-        .filter(col("d").isNotNull)
-        .select(col("d.id").as("id"), col("d.text").as("text"))
+      val incoming = twinFeed(streamTable(spark, dir, "documents.parquet",
+        normalizeEvents = false), twinLegs)
       lshDedupPrunedStart(incoming, threshold, nBuckets, pairsDir,
         ibDir, ihDir, ckpt, availableNow = true).awaitTermination()
-      localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
+      spark.read.parquet(pairsDir)
+    }
   }
 
   /** Streaming twin of the day-N COMMIT loop (r12 VERDICT #5): each
@@ -1159,24 +1118,16 @@ object StreamPipeline {
   def corpusCommitStart(incoming: DataFrame, textCol: String,
       idCol: String, archiveDir: String, outDir: String,
       minQuality: Double, ckptDir: String, availableNow: Boolean,
-      gcGraceMs: Long = 0L): StreamingQuery = {
-    val spark = incoming.sparkSession
-    applyConfiguredStateStore(spark)
-    val writer = incoming.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (cleaned, _) =
-          graft.ext.Curation.corpusBuildIncrementalCommit(
-            batch, textCol, idCol, archiveDir, minQuality,
-            gcGraceMs = gcGraceMs)
-        cleaned.select(col(idCol), col("source"),
-            lit(batchId).as("wave"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
+      gcGraceMs: Long = 0L): StreamingQuery =
+    startForeachBatch(incoming, ckptDir, availableNow) { (batch, batchId) =>
+      val (cleaned, _) =
+        graft.ext.Curation.corpusBuildIncrementalCommit(
+          batch, textCol, idCol, archiveDir, minQuality,
+          gcGraceMs = gcGraceMs)
+      cleaned.select(col(idCol), col("source"),
+          lit(batchId).as("wave"))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Registered adapter for the streaming day-N commit
     * (`q_stream_corpus_commit`): the EXACT archive seed, day-2 feed,
@@ -1193,11 +1144,10 @@ object StreamPipeline {
       : DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
       .select("doc_id", "text", "source")
-    val base = java.nio.file.Files.createTempDirectory("graft-scommit")
-    try {
+    Scratch("graft-scommit") { base =>
       import graft.ext.{ArchiveIndex, Curation}
-      val (idx, inDir, outDir, ckpt) =
-        (s"$base/idx", s"$base/in", s"$base/out", s"$base/ckpt")
+      val mark = CacheScope.mark()
+      val (idx, outDir, ckpt) = (s"$base/idx", s"$base/out", s"$base/ckpt")
       ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
         "text", "doc_id", nBuckets = 32, idx)
       val feedDay2 = graft.ExtQueries.corpusIncrementalIncoming(docs)
@@ -1207,34 +1157,19 @@ object StreamPipeline {
           .select("fp", "representative_id"),
         ArchiveIndex.readBands(spark, idx),
         ArchiveIndex.readHashes(spark, idx), minQuality = 0.72)
-      val feedDay3 = graft.ExtQueries.day3Feed(cleaned2, docs)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(inDir))
-      val t0 = System.currentTimeMillis()
-      Seq(feedDay2, feedDay3).zipWithIndex.foreach { case (f, k) =>
-        val staging = s"$base/stage_$k"
-        f.coalesce(1).write.parquet(staging)
-        val part = new java.io.File(staging).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dest = java.nio.file.Paths.get(s"$inDir/wave_$k.parquet")
-        java.nio.file.Files.move(part.toPath, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000))
-      }
+      val raw = waveStream(
+        Seq(feedDay2, graft.ExtQueries.day3Feed(cleaned2, docs)), base)
       // the derivation's stage caches are fully materialized into the
       // wave files; release them BEFORE the stream rewrites the seed
       // artifact they were read from (dead-file-index hygiene — the
-      // commit loop's releaseSince, at adapter scope)
-      graft.ops.CacheScope.releaseAll()
-      val raw = spark.readStream.schema(feedDay2.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
+      // commit loop's releaseSince, at adapter scope; the caller's
+      // caches keep their lifetime)
+      CacheScope.releaseSince(mark)
       corpusCommitStart(raw, "text", "doc_id", idx, outDir,
         minQuality = 0.72, ckpt, availableNow = true).awaitTermination()
-      localize(spark.read.parquet(outDir)
-        .filter(col("wave") === 1).select("doc_id", "source"))
-    } finally rmRf(base.toFile)
+      spark.read.parquet(outDir)
+        .filter(col("wave") === 1).select("doc_id", "source")
+    }
   }
 
   /** STREAMING grow twin of the PERSISTED IVF index — the retrieval
@@ -1257,46 +1192,18 @@ object StreamPipeline {
     import graft.ext.IvfIndex
     val emb = graft.Tables.embeddings(spark, dir)
     val model = IvfIndex.seedModel(emb, nlist = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft-sivf")
-    val markPos = graft.ops.CacheScope.mark()
-    try {
-      val (idx, inDir, ckpt) = (s"$base/ivf", s"$base/in", s"$base/ckpt")
+    Scratch("graft-sivf") { base =>
+      val (idx, ckpt) = (s"$base/ivf", s"$base/ckpt")
       IvfIndex.writeIndex(emb.filter(col("vec_id") % 4 === 0), model,
         idx, nBuckets = 8)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(inDir))
-      val t0 = System.currentTimeMillis()
-      (1 to 3).foreach { k =>
-        val staging = s"$base/stage_$k"
-        emb.filter(col("vec_id") % 4 === k).coalesce(1)
-          .write.parquet(staging)
-        val part = new java.io.File(staging).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dest = java.nio.file.Paths.get(s"$inDir/wave_$k.parquet")
-        java.nio.file.Files.move(part.toPath, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000))
-      }
-      val raw = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-      raw.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfIndex.appendVectors(batch, idx)
-          IvfIndex.compactIndex(spark, idx)
-        }
-        .start()
-        .awaitTermination()
-      localize(IvfIndex.searchOnDisk(spark, idx,
-        col("vec_id") < 8, k = 5, nprobe = 2))
-    } finally {
-      // release the probe's internal cache BEFORE deleting the dirs
-      // its plan reads (dead-file-index hygiene), then the temp tree
-      graft.ops.CacheScope.releaseSince(markPos)
-      rmRf(base.toFile)
+      val raw = waveStream(
+        (1 to 3).map(k => emb.filter(col("vec_id") % 4 === k)), base)
+      startForeachBatch(raw, ckpt, availableNow = true) { (batch, _) =>
+        IvfIndex.appendVectors(batch, idx)
+        IvfIndex.compactIndex(spark, idx)
+      }.awaitTermination()
+      IvfIndex.searchOnDisk(spark, idx,
+        col("vec_id") < 8, k = 5, nprobe = 2)
     }
   }
 
@@ -1332,69 +1239,70 @@ object StreamPipeline {
       availableNow: Boolean): StreamingQuery = {
     import graft.ext.TextDedup
     val spark = incoming.sparkSession
-    applyConfiguredStateStore(spark)
-    val writer = incoming.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (bBands0, bHs0) = TextDedup.lshIndex(
-          batch.select(col("id"), col("text")), "text", "id")
-        // one shingle pass per batch: both consumers (probe, append)
-        // read the checkpointed result
-        val bBands = bBands0.localCheckpoint()
-        val bHs = bHs0.localCheckpoint()
-        // index AS OF batch start — the read snapshots the file listing
-        // before this batch's append below
-        val ib = spark.read.parquet(ibDir)
-        val ih = spark.read.parquet(ihDir)
-        TextDedup.lshProbePairs(bBands, bHs, ib, ih, threshold)
-          .write.mode("append").parquet(pairsDir)
-        bBands.write.mode("append").parquet(ibDir)
-        bHs.write.mode("append").parquet(ihDir)
-        graft.ops.CacheScope.release(bBands)
-        graft.ops.CacheScope.release(bHs)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+    startForeachBatch(incoming, ckptDir, availableNow) { (batch, _) =>
+      val (bBands0, bHs0) = TextDedup.lshIndex(
+        batch.select(col("id"), col("text")), "text", "id")
+      // one shingle pass per batch: both consumers (probe, append)
+      // read the checkpointed result
+      val bBands = bBands0.localCheckpoint()
+      val bHs = bHs0.localCheckpoint()
+      // index AS OF batch start — the read snapshots the file listing
+      // before this batch's append below
+      val ib = spark.read.parquet(ibDir)
+      val ih = spark.read.parquet(ihDir)
+      TextDedup.lshProbePairs(bBands, bHs, ib, ih, threshold)
+        .write.mode("append").parquet(pairsDir)
+      bBands.write.mode("append").parquet(ibDir)
+      bHs.write.mode("append").parquet(ihDir)
+      CacheScope.release(bBands)
+      CacheScope.release(bHs)
+    }
   }
 
-  /** The three-wave incoming feed both growing-archive adapters share
-    * (wave = id mod 3): the odd-id half (novel docs); near-dup twins
-    * of every 10th ARCHIVE doc (id + 600000, " zz extra") — these
-    * match through the SEED index, the static query's behavior
-    * preserved; and near-dup twins of every doc_id % 10 == 5 doc
+  /** The three-wave incoming feed the growing-archive adapters share
+    * (wave = id mod 3): the [[twinLegs]] — the static query's behavior
+    * preserved — and near-dup twins of every doc_id % 10 == 5 doc
     * (id + 1200001, " qq extra") — twins of NOVEL wave-(id%3) docs
     * arriving in wave (id+1)%3, the pairs ONLY a growing index can
     * catch (when the twin's wave trails its source the twin matches
     * the source; when it leads, the source later matches the twin). */
-  private def growIncoming(docs: DataFrame): DataFrame =
-    docs.select(explode(array(
-        when(col("doc_id") % 2 === 1,
-          struct(col("doc_id").as("id"), col("text").as("text"))),
-        when(col("doc_id") % 10 === 0,
-          struct((col("doc_id") + 600000L).as("id"),
-            concat(col("text"), lit(" zz extra")).as("text"))),
-        when(col("doc_id") % 10 === 5,
-          struct((col("doc_id") + 1200001L).as("id"),
-            concat(col("text"), lit(" qq extra")).as("text")))))
-        .as("d"))
+  private def growWaves(docs: DataFrame): Seq[DataFrame] = {
+    val incoming = twinFeed(docs, twinLegs :+
+      when(col("doc_id") % 10 === 5,
+        struct((col("doc_id") + 1200001L).as("id"),
+          concat(col("text"), lit(" qq extra")).as("text"))))
+    (0 until 3).map(k => incoming.filter(pmod(col("id"), lit(3)) === k))
+  }
+
+  /** The near-dup twin feed's legs, `(id, text)` structs over a
+    * documents frame: the odd-id half (novel docs) and near-dup twins
+    * of every 10th archive doc (id + 600000, " zz extra"), which match
+    * through the even-id seed index. */
+  private val twinLegs: Seq[Column] = Seq(
+    when(col("doc_id") % 2 === 1,
+      struct(col("doc_id").as("id"), col("text").as("text"))),
+    when(col("doc_id") % 10 === 0,
+      struct((col("doc_id") + 600000L).as("id"),
+        concat(col("text"), lit(" zz extra")).as("text"))))
+
+  /** `docs` through `legs` in ONE pass: each row explodes into the legs
+    * it matches, as `(id, text)`. */
+  private def twinFeed(docs: DataFrame, legs: Seq[Column]): DataFrame =
+    docs.select(explode(array(legs: _*)).as("d"))
       .filter(col("d").isNotNull)
       .select(col("d.id").as("id"), col("d.text").as("text"))
 
-  /** Write `incoming` as one parquet file per wave (wave = id mod 3)
-    * with strictly increasing mtimes and return the wave-ordered file
+  /** Write `waves` under `$base/in` as one parquet file each, with
+    * strictly increasing mtimes, and return the wave-ordered file
     * stream: the file source (latestFirst=false) drains oldest-first
     * with `maxFilesPerTrigger = 1`, so wave k IS micro-batch k. */
-  private def waveStream(incoming: DataFrame, base: java.nio.file.Path,
-      inDir: String): DataFrame = {
-    val spark = incoming.sparkSession
-    val waves = 3
+  private def waveStream(waves: Seq[DataFrame], base: String): DataFrame = {
+    val inDir = s"$base/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val t0 = System.currentTimeMillis()
-    (0 until waves).foreach { k =>
+    waves.zipWithIndex.foreach { case (wave, k) =>
       val staging = s"$base/stage_$k"
-      incoming.filter(pmod(col("id"), lit(waves)) === k)
-        .coalesce(1).write.parquet(staging)
+      wave.coalesce(1).write.parquet(staging)
       val part = new java.io.File(staging).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       val dest = java.nio.file.Paths.get(s"$inDir/wave_$k.parquet")
@@ -1402,15 +1310,15 @@ object StreamPipeline {
       java.nio.file.Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000))
     }
-    spark.readStream
-      .schema(incoming.schema)
+    waves.head.sparkSession.readStream
+      .schema(waves.head.schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet")
       .parquet(inDir)
   }
 
   /** The registered growing-archive adapter: even docs seed the plain
-    * parquet index, the [[growIncoming]] feed arrives via
+    * parquet index, the [[growWaves]] feed arrives via
     * [[waveStream]] (one mtime-ordered file per wave,
     * maxFilesPerTrigger = 1 → one micro-batch per wave), and
     * [[lshDedupGrowStart]] drains it. Output (doc_id, archive_id,
@@ -1420,22 +1328,18 @@ object StreamPipeline {
   def dedupLshGrowAvailableNow(spark: SparkSession, dir: String,
       threshold: Double = 0.5): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshgrow")
-    try {
-      val (inDir, pairsDir, ibDir, ihDir, ckpt) =
-        (s"$base/in", s"$base/pairs", s"$base/ib", s"$base/ih",
-          s"$base/ckpt")
+    Scratch("graft-lshgrow") { base =>
+      val (pairsDir, ibDir, ihDir, ckpt) =
+        (s"$base/pairs", s"$base/ib", s"$base/ih", s"$base/ckpt")
       val (ab, ah) = graft.ext.TextDedup.lshIndex(
         docs.filter(col("doc_id") % 2 === 0), "text", "doc_id")
       ab.write.parquet(ibDir)
       ah.write.parquet(ihDir)
-      val raw = waveStream(growIncoming(docs), base, inDir)
+      val raw = waveStream(growWaves(docs), base)
       lshDedupGrowStart(raw, threshold, pairsDir, ibDir, ihDir, ckpt,
         availableNow = true).awaitTermination()
-      // self-contained local result (the runAvailableNow convention),
-      // so the temp tree can be deleted before returning
-      localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
+      spark.read.parquet(pairsDir)
+    }
   }
 
   /** Registered adapter for the capstone grow+prune loop
@@ -1444,21 +1348,29 @@ object StreamPipeline {
     * shared verbatim — with the index seeded AND grown in the
     * bucket-partitioned layout every probe prunes against. */
   def dedupLshGrowPrunedAvailableNow(spark: SparkSession, dir: String,
-      threshold: Double = 0.5, nBuckets: Int = 32): DataFrame = {
+      threshold: Double = 0.5, nBuckets: Int = 32): DataFrame =
+    growPrunedDrain(spark, dir, threshold, nBuckets, "graft-lshgrowpr",
+      DefaultCompactEvery)
+
+  /** [[growWaves]] drained through [[lshDedupGrowPrunedStart]] over a
+    * bucket-partitioned seed index of the even docs, in a
+    * [[Scratch]] tree named `prefix…`. */
+  private def growPrunedDrain(spark: SparkSession, dir: String,
+      threshold: Double, nBuckets: Int, prefix: String,
+      compactEvery: Int): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshgrowpr")
-    try {
+    Scratch(prefix) { base =>
       import graft.ext.ArchiveIndex
-      val (inDir, pairsDir, idx, ckpt) =
-        (s"$base/in", s"$base/pairs", s"$base/idx", s"$base/ckpt")
+      val (pairsDir, idx, ckpt) =
+        (s"$base/pairs", s"$base/idx", s"$base/ckpt")
       ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
         "text", "doc_id", nBuckets, idx)
       val (ibDir, ihDir) = (ArchiveIndex.ibDir(idx), ArchiveIndex.ihDir(idx))
-      val raw = waveStream(growIncoming(docs), base, inDir)
-      lshDedupGrowPrunedStart(raw, threshold, nBuckets, pairsDir,
-        ibDir, ihDir, ckpt, availableNow = true).awaitTermination()
-      localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
+      lshDedupGrowPrunedStart(waveStream(growWaves(docs), base), threshold,
+        nBuckets, pairsDir, ibDir, ihDir, ckpt, availableNow = true,
+        compactEvery = compactEvery).awaitTermination()
+      spark.read.parquet(pairsDir)
+    }
   }
 
   /** Registered adapter for the capstone WITH the maintenance path
@@ -1471,23 +1383,9 @@ object StreamPipeline {
     * verbatim a third time, so the registry hash-pins compaction's
     * losslessness end-to-end, not just file-count hygiene. */
   def dedupLshGrowCompactAvailableNow(spark: SparkSession, dir: String,
-      threshold: Double = 0.5, nBuckets: Int = 32): DataFrame = {
-    val docs = graft.Tables.documents(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-lshgrowc")
-    try {
-      import graft.ext.ArchiveIndex
-      val (inDir, pairsDir, idx, ckpt) =
-        (s"$base/in", s"$base/pairs", s"$base/idx", s"$base/ckpt")
-      ArchiveIndex.write(docs.filter(col("doc_id") % 2 === 0),
-        "text", "doc_id", nBuckets, idx)
-      val (ibDir, ihDir) = (ArchiveIndex.ibDir(idx), ArchiveIndex.ihDir(idx))
-      val raw = waveStream(growIncoming(docs), base, inDir)
-      lshDedupGrowPrunedStart(raw, threshold, nBuckets, pairsDir,
-        ibDir, ihDir, ckpt, availableNow = true, compactEvery = 1)
-        .awaitTermination()
-      localize(spark.read.parquet(pairsDir))
-    } finally rmRf(base.toFile)
-  }
+      threshold: Double = 0.5, nBuckets: Int = 32): DataFrame =
+    growPrunedDrain(spark, dir, threshold, nBuckets, "graft-lshgrowc",
+      compactEvery = 1)
 
   /** Streaming QUARANTINE ROUTING — the landing-zone twin of the batch
     * `q_dq_quarantine` pair ([[graft.ops.DqConstraints.quarantine]]):
@@ -1603,8 +1501,7 @@ object StreamPipeline {
       : DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
-    val base = java.nio.file.Files.createTempDirectory("graft-corpusdq")
-    try {
+    Scratch("graft-corpusdq") { base =>
       val inDir = s"$base/in"
       val feed = graft.ExtQueries.corpusIncrementalIncoming(docs)
       feed.write.parquet(inDir)
@@ -1629,7 +1526,7 @@ object StreamPipeline {
         "doc_too_short" ->
           (graft.ext.TextStats.tokenCount(col("text")) < 17)))
       runAvailableNow(report, "stream_corpus_dq_", "complete")
-    } finally rmRf(base.toFile)
+    }
   }
 
   /** Streaming SCD2 ([[Scd2Stream]]): watermark-final CLOSED dimension
@@ -1743,9 +1640,9 @@ object StreamPipeline {
   }
 
   /** Apply [[StateStoreConfKey]] to the session — called by every
-    * stream start in this module ([[runAvailableNow]],
-    * [[cleanClassStream]], [[loadClassStream]]) so the provider choice
-    * is one conf away for ANY pipeline, bench, or production caller. */
+    * stream start in this module ([[runAvailableNow]] and
+    * [[startForeachBatch]]) so the provider choice is one conf away for
+    * ANY pipeline, bench, or production caller. */
   def applyConfiguredStateStore(spark: SparkSession): Unit =
     spark.conf.getOption(StateStoreConfKey).map(_.toLowerCase) match {
       case Some("rocksdb") => useRocksDbStateStore(spark)

@@ -816,6 +816,41 @@ class OpsSpec extends SparkSpec {
       s"filter not pushed to the ORC scan:\n${plan.take(800)}")
   }
 
+  // ---- Scratch: the on-disk adapters' temp-tree lifecycle ----------------
+
+  test("Scratch: the caller's caches survive, the body's are released, " +
+      "the tree goes on return and on throw") {
+    val callers = CacheScope.persist(spark.range(7L).toDF("id"))
+    try {
+      callers.count()
+      var tree, failedTree = ""
+      var bodys: org.apache.spark.sql.DataFrame = null
+      val got = Scratch("graft-scratch-spec") { dir =>
+        tree = dir
+        spark.range(5L).toDF("id").write.parquet(s"$dir/t")
+        bodys = CacheScope.persist(spark.read.parquet(s"$dir/t"))
+        bodys.count()
+        assert(bodys.storageLevel != StorageLevel.NONE)
+        bodys.filter(col("id") > 2)
+      }
+      assert(!new java.io.File(tree).exists(), s"$tree left behind")
+      // the result is a local copy: it reads after its tree is gone
+      assert(got.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+      assert(bodys.storageLevel == StorageLevel.NONE)
+      assert(callers.storageLevel != StorageLevel.NONE)
+      val e = intercept[IllegalStateException] {
+        Scratch("graft-scratch-spec") { dir =>
+          failedTree = dir
+          assert(new java.io.File(s"$dir/sub").mkdirs())
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(!new java.io.File(failedTree).exists(), s"$failedTree left behind")
+      assert(callers.storageLevel != StorageLevel.NONE)
+    } finally CacheScope.releaseAll()
+  }
+
   // ---- CacheScope.all: the fan-out contract ------------------------------
 
   test("CacheScope.all: what branches persist and count, the caller's " +

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.app.BatchMain
+import graft.ops.Scratch
 import graft.sources.CsvSource
 import graft.streaming.{Scd2Stream, StreamPipeline}
 
@@ -244,12 +245,8 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(gotPruned == got,
       s"grow+prune must equal plain grow: $gotPruned vs $got")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(base.toFile)
-    rm(base2.toFile)
+    Scratch.rmRf(base.toFile)
+    Scratch.rmRf(base2.toFile)
   }
 
   test("capstone compaction: executed plan bounds per-bucket files to " +
@@ -296,11 +293,7 @@ class StreamingSpec extends SparkSpec {
               .count(_.getName.endsWith(".parquet")))
       }.toMap
       val out = (pairs, ib, ih, filesPerBucket)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(base.toFile)
+      Scratch.rmRf(base.toFile)
       out
     }
     val (pPlain, ibPlain, ihPlain, fPlain) = run(compactEvery = 0)
